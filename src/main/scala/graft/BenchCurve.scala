@@ -835,7 +835,7 @@ object BenchCurve {
       }
       def measure(root: String): (Double, Double, Double, Double) = {
         val cold = (1 to 3).map { _ =>
-          TimeTravel.invalidateLineageCache()
+          graft.sources.ListingSnapshot.invalidateAll()
           t1(TimeTravel.latestVersion(spark, root): Unit)
         }.min
         val warm = (1 to 3).map(_ =>
@@ -952,7 +952,7 @@ object BenchCurve {
           TimeTravel.vacuumLineage(spark, root, graceMillis = 0): Unit
           if (targets.exists(t => commits >= t && commits - 64 < t)) {
             val cold = (1 to 3).map { _ =>
-              TimeTravel.invalidateLineageCache()
+              graft.sources.ListingSnapshot.invalidateAll()
               t1(TimeTravel.latestVersion(spark, root): Unit)
             }.min
             val warm = (1 to 3).map(_ =>

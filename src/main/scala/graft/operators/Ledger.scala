@@ -11,9 +11,9 @@ import org.apache.spark.sql.SparkSession
   * foreachBatch's at-least-once replays into effective exactly-once
   * index growth.
   *
-  * The membership read is a listing-fingerprinted driver snapshot for
-  * ledgers up to [[cacheMaxIds]] ids (zero jobs warm — the same
-  * snapshot discipline as the lineage/manifest caches) and degrades to
+  * The membership read is a [[graft.sources.ListingSnapshot]] for
+  * ledgers up to [[graft.sources.ListingSnapshot.MaxKeys]] ids (zero
+  * jobs warm, one listing) and degrades to
   * the original pushed-down point filter past that bound, so driver
   * memory stays FLAT no matter how many appends the index has seen (a
   * per-minute streaming sink writes ~525 k ledger rows/year; past the
@@ -61,38 +61,26 @@ private[graft] object Ledger {
     name
   }
 
-  /** Driver-held membership snapshot per ledger directory, fingerprinted
-    * by its listing like every snapshot cache here ([[graft.sources]]):
-    * a warm [[contains]] costs one listing and zero jobs. BOUNDED: a
-    * ledger past [[cacheMaxIds]] ids is never cached (`uncacheable`) —
-    * the flat-driver-memory contract of the scaladoc above holds at
-    * streaming scale; bench/test-sized ledgers get the fast path. */
-  private final case class LedgerSnap(fingerprint: String,
-                                      ids: java.util.HashSet[String])
-  private val cacheMaxIds = 100000
-  private val snapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private val Uncacheable: AnyRef = "uncacheable"
-
-  private[graft] def invalidateCache(): Unit = snapCache.clear()
-
-  private def listingFp(fs: org.apache.hadoop.fs.FileSystem,
-                        path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    try {
-      val files = fs.listStatus(p).filter(_.isFile)
-        .sortBy(_.getPath.getName)
-      // dir mtime joins the fingerprint (ADVICE r17): a delete-and-
-      // recreate at the same path can reproduce names/len/mtime on a
-      // coarse-mtime store, but the directory's own mtime moves on
-      // every create/delete inside it — the same staleness contract
-      // as the lineage/manifest snapshot caches.
-      val dirM = fs.getFileStatus(p).getModificationTime
-      Some((s"n=${files.length}:dir=$dirM" +: files.toSeq.map(f =>
-        s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"))
-        .mkString("|"))
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
+  /** Driver-held membership set per ledger directory, a
+    * [[graft.sources.ListingSnapshot]] over every file: a warm
+    * [[contains]] costs one listing and zero jobs. A ledger past
+    * [[graft.sources.ListingSnapshot.MaxKeys]] ids is marked over-bound
+    * until the next [[init]] — the flat-driver-memory contract of the
+    * scaladoc above holds at streaming scale. */
+  private val snapshots =
+    new graft.sources.ListingSnapshot[Unit, java.util.HashSet[String]](
+        identity)({ (spark, path, _) =>
+      val max = graft.sources.ListingSnapshot.MaxKeys
+      val rows = spark.read.parquet(path)
+        .select(org.apache.spark.sql.functions.col("batch_id"))
+        .limit(max + 1).collect()
+      if (rows.length > max) Left(())
+      else {
+        val set = new java.util.HashSet[String](rows.length * 2)
+        rows.foreach(r => if (!r.isNullAt(0)) set.add(r.getString(0)))
+        Right(set)
+      }
+    })
 
   /** Create/reset the ledger with the base marker recorded. Racing
     * creates converge to a ledger holding at least one marker row
@@ -101,7 +89,7 @@ private[graft] object Ledger {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    snapCache.remove(path)
+    snapshots.reset(path)
     appendIdsLocal(spark, path, Seq("__base__"))
   }
 
@@ -110,85 +98,42 @@ private[graft] object Ledger {
     * payload write leaves the id unrecorded and the retry re-runs (the
     * retry converges when the payload write is crash-idempotent, as
     * `appendLmStats`'s staged promotion is). Warm = one listing + a
-    * driver-set lookup (bounded; see the object doc); cold or oversized
-    * = the pushed-down equality filter + limit 1. A ledger directory
+    * driver-set lookup (bounded; see the object doc); over the bound
+    * = the pushed-down equality filter + limit 1, flat driver memory
+    * regardless of ledger size. A ledger directory
     * that exists but holds no readable rows yet (a concurrent init
     * mid-flight) truthfully contains nothing.
     */
   def contains(spark: SparkSession, path: String, batchId: String)
-      : Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    listingFp(fs, path) match {
-      case Some(fp) =>
-        snapCache.get(path) match {
-          case s: LedgerSnap if s.fingerprint == fp =>
-            return s.ids.contains(batchId)
-          case x if x eq Uncacheable => return containsScan(spark, path,
-            batchId)
-          case _ =>
-            // cold load, bounded: past cacheMaxIds the ledger keeps the
-            // flat-driver-memory contract and every check scans
-            val rows =
-              try spark.read.parquet(path)
-                .select(org.apache.spark.sql.functions.col("batch_id"))
-                .limit(cacheMaxIds + 1).collect()
-              catch {
-                case e: org.apache.spark.sql.AnalysisException
-                  if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-                  return false
-              }
-            if (rows.length > cacheMaxIds) {
-              snapCache.put(path, Uncacheable)
-              return containsScan(spark, path, batchId)
-            }
-            val set = new java.util.HashSet[String](rows.length * 2)
-            rows.foreach(r => if (!r.isNullAt(0)) set.add(r.getString(0)))
-            if (snapCache.size > 256) snapCache.clear()
-            snapCache.put(path, LedgerSnap(fp, set))
-            return set.contains(batchId)
-        }
-      case None => containsScan(spark, path, batchId)
-    }
-  }
-
-  /** The pre-cache membership read: a pushed-down equality filter +
-    * limit 1 — flat driver memory regardless of ledger size. */
-  private def containsScan(spark: SparkSession, path: String,
-                           batchId: String): Boolean = {
-    import org.apache.spark.sql.functions.col
-    try spark.read.parquet(path)
-      .filter(col("batch_id") === batchId)
-      .limit(1).head(1).nonEmpty
-    catch {
+      : Boolean =
+    try snapshots.get(spark, path) match {
+      case Some(Right(ids)) => ids.contains(batchId)
+      case _ => spark.read.parquet(path)
+        .filter(org.apache.spark.sql.functions.col("batch_id") === batchId)
+        .limit(1).head(1).nonEmpty
+    } catch {
       case e: org.apache.spark.sql.AnalysisException
         if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => false
     }
-  }
 
   /** Record `batchId` after its payload write succeeded. Safe under
     * concurrent recorders ([[appendIdsLocal]]). */
-  def record(spark: SparkSession, path: String, batchId: String): Unit = {
+  def record(spark: SparkSession, path: String, batchId: String): Unit =
+    appendAndFold(spark, path, Seq(batchId))
+
+  /** Land `ids` as one file and fold them into the cached membership
+    * set in place (the snapshot's guarded install — a concurrent
+    * recorder in the window drops the entry instead). */
+  private def appendAndFold(spark: SparkSession, path: String,
+                            ids: Seq[String]): Unit = {
+    val landed = appendIdsLocal(spark, path, ids)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cached = snapCache.get(path)
-    val landed = appendIdsLocal(spark, path, Seq(batchId))
-    // fold the id into the cached membership set in place when the
-    // fresh listing is exactly the cached file set plus our own record
-    // (a concurrent recorder in the window makes the sets differ — drop
-    // the entry and let the next contains reload; never load-bearing)
-    cached match {
-      case s: LedgerSnap =>
-        def names(fp: String): Set[String] =
-          fp.split('|').iterator.drop(1).map(_.takeWhile(_ != ':')).toSet
-        listingFp(fs, path) match {
-          case Some(fp2) if names(fp2) == names(s.fingerprint) + landed =>
-            val ids = new java.util.HashSet[String](s.ids)
-            ids.add(batchId)
-            snapCache.put(path, LedgerSnap(fp2, ids))
-          case _ => snapCache.remove(path)
-        }
-      case _ => ()
+    snapshots.afterAppend(path, Set(landed), snapshots.list(fs, path)) {
+      cached =>
+        val next = new java.util.HashSet[String](cached)
+        ids.foreach(next.add)
+        next
     }
   }
 
@@ -206,10 +151,7 @@ private[graft] object Ledger {
     val missing = batchIds.distinct.toDF("batch_id")
       .join(spark.read.parquet(path), Seq("batch_id"), "left_anti")
       .collect().map(_.getString(0))
-    if (missing.nonEmpty) {
-      appendIdsLocal(spark, path, missing.toSeq): Unit
-      snapCache.remove(path): Unit
-    }
+    if (missing.nonEmpty) appendAndFold(spark, path, missing.toSeq)
   }
 
   /** Fold the one-file-per-append ledger down to one file, rows exactly

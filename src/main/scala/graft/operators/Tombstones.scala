@@ -30,10 +30,12 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * the families.
   *
   * DRIVER SNAPSHOT (r18, guide §1.2): the sidecar is deletion-count-
-  * sized by contract, so its membership set lives as a listing-
-  * fingerprinted driver snapshot (the [[Ledger]] discipline — bounded
-  * at [[cacheMaxKeys]] keys, past which every operation keeps the
-  * original distributed formulation and driver memory stays flat).
+  * sized by contract, so its membership set lives in a
+  * [[graft.sources.ListingSnapshot]] (bounded at
+  * [[graft.sources.ListingSnapshot.MaxKeys]] keys; a sidecar past it is
+  * marked over-bound until [[clear]] rewrites or [[drop]] removes it,
+  * and every operation keeps the original distributed formulation, so
+  * driver memory stays flat).
   * Warm, `add` is one bounded collect of the incoming keys plus a
   * jobless single-file parquet append ([[graft.sources.LocalParquet]]),
   * a replayed delete writes nothing at all, `clear` rewrites the
@@ -50,7 +52,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * is constructed, not per action — a held frame does not see later
   * deletes; re-construct probes after mutating, exactly as after an
   * append or compaction. The existence check is the one structural
-  * eager read (a path probe, no cluster job).
+  * eager read (the snapshot's listing, no cluster job).
   *
   * NOT offered for the count-based families (LM stats, heavy-hitter
   * sketches): their segments are additive AGGREGATES — a doc's
@@ -69,92 +71,46 @@ private[graft] object Tombstones {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(spark: SparkSession, tombPath: String): Boolean =
-    fs(spark, tombPath).exists(new org.apache.hadoop.fs.Path(tombPath))
+  // --- driver snapshot (r18) ----------------------------------------
 
-  // --- driver snapshot machinery (r18) -----------------------------
+  /** The sidecar's schema and key set. */
+  private type Keys = (StructType, java.util.HashSet[Any])
 
-  private final case class TombSnap(fingerprint: String, schema: StructType,
-                                    keys: java.util.HashSet[Any])
-  private val cacheMaxKeys = 100000
-  private val snapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private val Uncacheable: AnyRef = "uncacheable"
-
-  private[graft] def invalidateCache(): Unit = snapCache.clear()
-
-  private def listingFp(fsys: org.apache.hadoop.fs.FileSystem,
-                        path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    try {
-      val files = fsys.listStatus(p).filter(_.isFile)
-        .sortBy(_.getPath.getName)
-      // dir mtime joins the fingerprint: a delete-and-recreate at the
-      // same path can reproduce names/len/mtime on a coarse-mtime
-      // store, but the directory's own mtime moves on every
-      // create/delete inside it — the same staleness contract as the
-      // ledger/lineage/manifest snapshot caches.
-      val dirM = fsys.getFileStatus(p).getModificationTime
-      Some((s"n=${files.length}:dir=$dirM" +: files.toSeq.map(f =>
-        s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"))
-        .mkString("|"))
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  /** The sidecar's membership snapshot, loaded (bounded) or served warm.
-    * None = not snapshot-able right now (absent, oversized, unreadable,
-    * or a LocalParquet-unsupported key type) — callers use the original
-    * distributed formulation. */
-  private def snapFor(spark: SparkSession, path: String): Option[TombSnap] = {
-    val fsys = fs(spark, path)
-    listingFp(fsys, path) match {
-      case None => None
-      case Some(fp) =>
-        snapCache.get(path) match {
-          case s: TombSnap if s.fingerprint == fp => Some(s)
-          case x if x != null && (x eq Uncacheable) => None
-          case _ =>
-            val rows =
-              try {
-                val df = spark.read.parquet(path)
-                // one-column contract; a multi-column sidecar (never
-                // written by this object) stays on the scan path. The
-                // write-side staged-swap may not fail halfway, so the
-                // type map is checked here, before any fast path runs.
-                if (df.schema.fields.length != 1 ||
-                    !graft.sources.LocalParquet.supports(df.schema)) {
-                  snapCache.put(path, Uncacheable)
-                  return None
-                }
-                (df.schema, df.limit(cacheMaxKeys + 1).collect())
-              } catch {
-                case e: org.apache.spark.sql.AnalysisException
-                  if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-                  snapCache.put(path, Uncacheable)
-                  return None
-              }
-            val (schema, collected) = rows
-            if (collected.length > cacheMaxKeys) {
-              snapCache.put(path, Uncacheable)
-              None
-            } else {
-              val set = new java.util.HashSet[Any](collected.length * 2 + 4)
-              collected.foreach(r => set.add(r.get(0)))
-              if (snapCache.size > 256) snapCache.clear()
-              val s = TombSnap(fp, schema, set)
-              snapCache.put(path, s)
-              Some(s)
-            }
+  /** Over-bound or unsupported sidecars (not one column, or a type
+    * outside LocalParquet's map) are marked with their schema, so the
+    * distributed formulation reads them without a schema-inference job. */
+  private val snapshots =
+    new graft.sources.ListingSnapshot[StructType, Keys](identity)({
+      (spark, path, _) =>
+        val df = spark.read.parquet(path)
+        // one-column contract; a multi-column sidecar (never written by
+        // this object) stays on the scan path. The write-side staged
+        // swap may not fail halfway, so the type map is checked here,
+        // before any fast path runs.
+        if (df.schema.fields.length != 1 ||
+            !graft.sources.LocalParquet.supports(df.schema)) Left(df.schema)
+        else {
+          val rows = df.limit(maxKeys + 1).collect()
+          if (rows.length > maxKeys) Left(df.schema)
+          else {
+            val set = new java.util.HashSet[Any](rows.length * 2 + 4)
+            rows.foreach(r => set.add(r.get(0)))
+            Right((df.schema, set))
+          }
         }
-    }
-  }
+    })
+
+  private def maxKeys = graft.sources.ListingSnapshot.MaxKeys
+
+  private def schemaOf(side: Either[StructType, Keys]): StructType =
+    side.fold(identity, _._1)
 
   /** Distinct key values of `keys`' single column, driver-side, bounded:
-    * None past [[cacheMaxKeys]] (caller falls back — flat driver
-    * memory). One Spark action, like the join-based formulations. */
+    * None past the bound (caller falls back — flat driver memory). One
+    * Spark action, like the join-based formulations. */
   private def collectDistinct(keys: DataFrame): Option[Array[Any]] = {
-    val rows = keys.distinct().limit(cacheMaxKeys + 1).collect()
-    if (rows.length > cacheMaxKeys) None else Some(rows.map(_.get(0)))
+    val rows = keys.distinct().limit(maxKeys + 1).collect()
+    if (rows.length > maxKeys) None else Some(rows.map(_.get(0)))
   }
 
   /** Land `values` as ONE locally-written parquet file inside the
@@ -190,8 +146,9 @@ private[graft] object Tombstones {
     val spark = keys.sparkSession
     val incoming = keys.select(col(keyCol))
     val dt = incoming.schema.fields(0).dataType
-    val fastDone: Boolean =
-      if (!exists(spark, tombPath)) {
+    val side = snapshots.get(spark, tombPath)
+    val fastDone: Boolean = side match {
+      case None =>
         val schema = StructType(Seq(StructField(keyCol, dt, nullable = true)))
         graft.sources.LocalParquet.supports(schema) &&
           collectDistinct(incoming).exists { vals =>
@@ -199,101 +156,77 @@ private[graft] object Tombstones {
             // an absent sidecar and an empty one are the same identity
             // to every probe, so no empty file is landed
             vals.isEmpty ||
-              appendKeysLocal(spark, tombPath, schema, vals.toSeq).exists {
-                _ => snapCache.remove(tombPath); true
-              }
+              appendKeysLocal(spark, tombPath, schema, vals.toSeq).isDefined
           }
-      } else snapFor(spark, tombPath) match {
-        case Some(s) if s.schema.fields(0).dataType == dt &&
-            s.schema.fields(0).name == keyCol =>
-          collectDistinct(incoming).exists { vals =>
-            val fresh = vals.filterNot(s.keys.contains)
-            fresh.isEmpty || // replayed delete: no write, no new file
-              appendKeysLocal(spark, tombPath, s.schema, fresh.toSeq)
-                .exists { landed =>
-                  // fold into the warm snapshot only when the fresh
-                  // listing is exactly the cached file set plus our own
-                  // file (the Ledger.record rule — a concurrent writer
-                  // in the window drops the entry, never load-bearing)
-                  val fsys = fs(spark, tombPath)
-                  def names(fp: String): Set[String] =
-                    fp.split('|').iterator.drop(1)
-                      .map(_.takeWhile(_ != ':')).toSet
-                  listingFp(fsys, tombPath) match {
-                    case Some(fp2)
-                      if names(fp2) == names(s.fingerprint) + landed =>
-                      val merged = new java.util.HashSet[Any](s.keys)
-                      fresh.foreach(merged.add)
-                      snapCache.put(tombPath,
-                        TombSnap(fp2, s.schema, merged)): Unit
-                    case _ => snapCache.remove(tombPath): Unit
-                  }
-                  true
+      case Some(Right((schema, cached))) if schema.fields(0).dataType == dt &&
+          schema.fields(0).name == keyCol =>
+        collectDistinct(incoming).exists { vals =>
+          val fresh = vals.filterNot(cached.contains)
+          fresh.isEmpty || // replayed delete: no write, no new file
+            appendKeysLocal(spark, tombPath, schema, fresh.toSeq)
+              .exists { landed =>
+                snapshots.afterAppend(tombPath, Set(landed),
+                    snapshots.list(fs(spark, tombPath), tombPath)) {
+                  case (sc, ks) =>
+                    val merged = new java.util.HashSet[Any](ks)
+                    fresh.foreach(merged.add)
+                    (sc, merged)
                 }
-          }
-        case _ => false
-      }
+                true
+              }
+        }
+      case _ => false
+    }
     if (fastDone) return
     // the pre-r18 distributed formulation — the semantics pin
     val distinctIncoming = incoming.distinct()
-    val fresh =
-      if (!exists(spark, tombPath)) distinctIncoming
-      else distinctIncoming.join(
-        spark.read.parquet(tombPath).select(col(keyCol).as("__tomb")),
+    val fresh = side.fold(distinctIncoming) { s =>
+      distinctIncoming.join(scan(spark, tombPath, schemaOf(s))
+          .select(col(keyCol).as("__tomb")),
         col(keyCol) <=> col("__tomb"), "left_anti")
+    }
     fresh.write.mode("append").parquet(tombPath)
-    snapCache.remove(tombPath): Unit
   }
 
   /** Remove `keys` from the sidecar (append-path revival). Reads the
     * sidecar only when it exists, rewrites it only when a key actually
-    * matches — the common no-deletes append pays one path probe plus
+    * matches — the common no-deletes append pays one listing plus
     * one bounded key collect. Staged-swap rewrite, same promotion rule
     * as the index compactions.
     */
   def clear(keys: DataFrame, keyCol: String, tombPath: String): Unit = {
     val spark = keys.sparkSession
-    if (!exists(spark, tombPath)) return
+    val side = snapshots.get(spark, tombPath).getOrElse(return)
     val incoming = keys.select(col(keyCol))
     val dt = incoming.schema.fields(0).dataType
-    val fastDone: Boolean = snapFor(spark, tombPath) match {
-      case Some(s) if s.schema.fields(0).dataType == dt =>
+    val fastDone: Boolean = side match {
+      case Right((schema, cached)) if schema.fields(0).dataType == dt =>
         collectDistinct(incoming).exists { vals =>
           val inc = new java.util.HashSet[Any](vals.length * 2 + 4)
           vals.foreach(inc.add)
           val hit = {
-            val it = s.keys.iterator()
+            val it = cached.iterator()
             var h = false
             while (!h && it.hasNext) h = inc.contains(it.next())
             h
           }
           if (!hit) true
           else {
-            val survivors = {
-              val b = Array.newBuilder[Any]
-              val it = s.keys.iterator()
-              while (it.hasNext) {
-                val v = it.next(); if (!inc.contains(v)) b += v
-              }
-              b.result()
-            }
+            val survivors = new java.util.HashSet[Any](cached)
+            survivors.removeAll(inc)
+            val file = "part-00000-survivors.parquet"
             Lifecycle.stagedSwap(spark, tombPath) { staged =>
               fs(spark, tombPath)
                 .mkdirs(new org.apache.hadoop.fs.Path(staged))
               require(graft.sources.LocalParquet.write(
-                  survivors.map(Row(_)), s.schema,
-                  staged + "/part-00000-survivors.parquet",
+                  survivors.toArray.map(Row(_)), schema, s"$staged/$file",
                   spark.sparkContext.hadoopConfiguration),
-                "unreachable: snapFor admitted a LocalParquet-supported schema")
+                "unreachable: the snapshot admitted a LocalParquet-" +
+                  "supported schema")
             }
-            val fsys = fs(spark, tombPath)
-            listingFp(fsys, tombPath) match {
-              case Some(fp2) =>
-                val set = new java.util.HashSet[Any](survivors.length * 2 + 4)
-                survivors.foreach(set.add)
-                snapCache.put(tombPath, TombSnap(fp2, s.schema, set)): Unit
-              case None => snapCache.remove(tombPath): Unit
-            }
+            snapshots.afterSwap(tombPath, Set(file),
+              snapshots.list(fs(spark, tombPath), tombPath),
+              (schema, survivors))
             true
           }
         }
@@ -301,7 +234,7 @@ private[graft] object Tombstones {
     }
     if (fastDone) return
     // the pre-r18 distributed formulation — the semantics pin
-    val tomb = spark.read.parquet(tombPath)
+    val tomb = scan(spark, tombPath, schemaOf(side))
     val ks = incoming.select(col(keyCol).as("__clr")).distinct()
     val hit = tomb.join(ks, col(keyCol) <=> col("__clr"), "left_semi")
       .limit(1).head(1).nonEmpty
@@ -310,46 +243,49 @@ private[graft] object Tombstones {
       tomb.join(ks, col(keyCol) <=> col("__clr"), "left_anti")
         .write.mode("overwrite").parquet(staged)
     }
-    snapCache.remove(tombPath): Unit
+    snapshots.reset(tombPath)
   }
+
+  /** The sidecar files read under the schema the snapshot recorded —
+    * the distributed formulation's side, with no inference job. */
+  private def scan(spark: SparkSession, tombPath: String,
+                   schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(tombPath)
 
   /** Anti-join `df` against the sidecar on `joinCol` <=> sidecar key
     * (null-safe: the digest family tombstones a null digest for deleted
     * null-text docs). Identity when no sidecar exists — the structural
     * existence probe documented above. Warm, the sidecar side is a
     * broadcast local relation (content pinned at frame construction,
-    * exactly the snapshot semantics above); cold or oversized it is the
+    * exactly the snapshot semantics above); over the bound it is the
     * original file scan.
     */
-  def applyTo(df: DataFrame, joinCol: String, tombPath: String): DataFrame = {
-    val spark = df.sparkSession
-    if (!exists(spark, tombPath)) df
-    else {
-      val tomb = snapFor(spark, tombPath) match {
-        case Some(s) =>
-          val rows = new java.util.ArrayList[Row](s.keys.size())
-          s.keys.forEach(v => rows.add(Row(v)): Unit)
-          broadcast(spark.createDataFrame(rows, s.schema))
-        case None => spark.read.parquet(tombPath)
-      }
-      df.join(tomb.select(col(tomb.columns(0)).as("__tomb")),
-        col(joinCol) <=> col("__tomb"), "left_anti")
-    }
-  }
+  def applyTo(df: DataFrame, joinCol: String, tombPath: String): DataFrame =
+    snapshots.get(df.sparkSession, tombPath)
+      .fold(df)(antiJoin(df, joinCol, tombPath, _))
 
   /** [[applyTo]] joining on the column the sidecar itself names — for
     * readers that do not carry the index's id column name (IVF load).
     * The sidecar is single-column by construction, written by the
     * family's delete function under the index's own id column name.
     */
-  def applySelfTo(df: DataFrame, tombPath: String): DataFrame = {
-    val spark = df.sparkSession
-    if (!exists(spark, tombPath)) df
-    else snapFor(spark, tombPath) match {
-      case Some(s) => applyTo(df, s.schema.fields(0).name, tombPath)
-      case None =>
-        applyTo(df, spark.read.parquet(tombPath).columns(0), tombPath)
+  def applySelfTo(df: DataFrame, tombPath: String): DataFrame =
+    snapshots.get(df.sparkSession, tombPath).fold(df) { side =>
+      antiJoin(df, schemaOf(side).fields(0).name, tombPath, side)
     }
+
+  private def antiJoin(df: DataFrame, joinCol: String, tombPath: String,
+                       side: Either[StructType, Keys]): DataFrame = {
+    val spark = df.sparkSession
+    val tomb = side match {
+      case Right((schema, keys)) =>
+        val rows = new java.util.ArrayList[Row](keys.size())
+        keys.forEach(v => rows.add(Row(v)): Unit)
+        broadcast(spark.createDataFrame(rows, schema))
+      case Left(schema) => scan(spark, tombPath, schema)
+    }
+    df.join(tomb.select(col(tomb.columns(0)).as("__tomb")),
+      col(joinCol) <=> col("__tomb"), "left_anti")
   }
 
   /** Drop the sidecar after a compaction physically applied it. A crash
@@ -357,7 +293,7 @@ private[graft] object Tombstones {
     * sidecar whose anti-joins match nothing.
     */
   def drop(spark: SparkSession, tombPath: String): Unit = {
-    snapCache.remove(tombPath)
+    snapshots.reset(tombPath)
     fs(spark, tombPath)
       .delete(new org.apache.hadoop.fs.Path(tombPath), true): Unit
   }

@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, NumericType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DateType, NumericType, StringType, StructType, TimestampNTZType, TimestampType}
 
 /** Z-order (Morton-curve) file layout — the data-skipping tool for
   * multi-dimensional predicates at 100 TB. Sorting files by ONE column
@@ -305,76 +305,42 @@ object Layout {
     }
   }
 
-  /** The folded manifest: schema + collected rows + the listing
-    * fingerprint that proves them current — the symmetric cache to
-    * [[TimeTravel]]'s lineage snapshot (r17, VERDICT r16 #1: every
-    * manifest consultation used to re-list AND re-read manifest parquet
-    * per call; pruning / point lookup / delete screens / compaction all
-    * paid footer sweeps the lineage side stopped paying in r16). A
-    * manifest is file-count-sized by construction — one row per data
-    * file — so the driver holds the same metadata Delta's snapshot
-    * does; the 256-entry clear-all bounds cached TABLE count. */
-  private final case class ManifestSnap(fingerprint: String,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Array[org.apache.spark.sql.Row])
+  /** The folded manifest per manifest directory — schema + collected
+    * rows over its `*.parquet` parts, a [[ListingSnapshot]] like
+    * [[TimeTravel]]'s lineage (r17, VERDICT r16 #1: every manifest
+    * consultation used to re-list AND re-read manifest parquet per call;
+    * pruning / point lookup / delete screens / compaction all paid
+    * footer sweeps the lineage side stopped paying in r16). A manifest
+    * is file-count-sized by construction — one row per data file — so
+    * the driver holds the same metadata Delta's snapshot does. Every
+    * writer here appends a new part file or staged-swaps the directory,
+    * both of which move the fingerprint, and a hit costs ZERO Spark jobs
+    * (LayoutSpec pins this). A miss reads with mergeSchema (rows
+    * appended across a dims change carry different stat columns),
+    * falling back to a widening fold when mergeSchema REFUSES — a
+    * manifest holding legacy int-typed min_/max_ rows beside the
+    * stable-wide long ones ([[statsAggs]]'s r15 change) must stay
+    * readable, not strand the table behind its own cache (ADVICE r15). */
+  private val manifestSnapshots =
+    new ListingSnapshot[Nothing, (StructType, Array[Row])](
+        _.filter(_.getPath.getName.endsWith(".parquet")))({
+      (spark, mp, files) =>
+        val df =
+          if (files.isEmpty)
+            // no parquet parts (a directory holding only _SUCCESS, or an
+            // interrupted swap): surface the same no-schema error a
+            // direct directory read always gave, never cache it
+            spark.read.parquet(mp)
+          else TimeTravel.readWidened(spark, files.map(_.getPath.toString),
+            s"manifest of $mp")
+        Right((df.schema, df.collect()))
+    })
 
-  private val manifestSnapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ManifestSnap]()
-
-  /** Test/measurement seam, like [[TimeTravel.invalidateLineageCache]]:
-    * drop every cached manifest snapshot so the next consultation pays
-    * the cold path. Correctness never depends on it — the listing
-    * fingerprint (per-file name:len:mtime plus file count and the
-    * directory's own mtime, the delete-and-recreate discriminators)
-    * already invalidates stale entries. */
-  private[graft] def invalidateManifestCache(): Unit =
-    manifestSnapCache.clear()
-
-  /** Load (or reuse) one manifest directory's snapshot. One listing
-    * decides staleness — every writer here appends a new part file or
-    * staged-swaps the directory, both of which move the fingerprint —
-    * and a hit costs ZERO Spark jobs (LayoutSpec pins this). A miss
-    * reads with mergeSchema (rows appended across a dims change carry
-    * different stat columns), falling back to a widening fold when
-    * mergeSchema REFUSES — a manifest holding legacy int-typed
-    * min_/max_ rows beside the stable-wide long ones ([[statsAggs]]'s
-    * r15 change) must stay readable, not strand the table behind its
-    * own cache (ADVICE r15). The fold reads each part's footer and
-    * widens through [[TimeTravel.widenMerge]]'s safe lattice; values
-    * then decode natively under the wide target. */
-  private def manifestSnap(spark: SparkSession, mp: String): ManifestSnap = {
-    val hp = new org.apache.hadoop.fs.Path(mp)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(hp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val dirM = fs.getFileStatus(hp).getModificationTime
-    val fp = (s"n=${files.length}:dir=$dirM" +: files.toSeq.map(f =>
-      s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"))
-      .mkString("|")
-    val cached = manifestSnapCache.get(mp)
-    if (cached != null && cached.fingerprint == fp) return cached
-    val paths = files.map(_.getPath.toString).toSeq
-    val df =
-      if (paths.isEmpty)
-        // no parquet parts (a directory holding only _SUCCESS, or an
-        // interrupted swap): surface the same no-schema error a direct
-        // directory read always gave, never cache it
-        spark.read.parquet(mp)
-      else
-        try spark.read.option("mergeSchema", "true").parquet(paths: _*)
-        catch {
-          case _: org.apache.spark.SparkException =>
-            val target = paths.map(p => spark.read.parquet(p).schema)
-              .reduce((a, b) => TimeTravel.widenMerge(a, b,
-                s"manifest of $mp"))
-            spark.read.schema(target).parquet(paths: _*)
-        }
-    val snap = ManifestSnap(fp, df.schema, df.collect())
-    if (manifestSnapCache.size > 256) manifestSnapCache.clear()
-    manifestSnapCache.put(mp, snap)
-    snap
-  }
+  /** One manifest directory's (schema, rows), loaded or reused. */
+  private def manifestSnap(spark: SparkSession,
+                           mp: String): (StructType, Array[Row]) =
+    manifestSnapshots.get(spark, mp).getOrElse(
+      throw new java.io.FileNotFoundException(s"no manifest at $mp")).merge
 
   /** Every manifest consultation's read — a LocalRelation over the
     * snapshot's driver-held rows, so downstream prune filters, candidate
@@ -384,8 +350,8 @@ object Layout {
     * keeps no history — one row per live file, ever. */
   private[graft] def readManifestMerged(spark: SparkSession,
                                         mp: String): DataFrame = {
-    val s = manifestSnap(spark, mp)
-    spark.createDataFrame(java.util.Arrays.asList(s.rows: _*), s.schema)
+    val (schema, rows) = manifestSnap(spark, mp)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Union of several manifests' snapshots under one merged schema:
@@ -1172,10 +1138,10 @@ object Layout {
       // snapshot answers locally). Same basename rule as keepRowsPlan
       // (raw segment after the last '/', no decode), null file_name
       // counts as dropped exactly as the old semi-join did.
-      val s = manifestSnap(spark, mp)
-      val fIdx = s.schema.fieldNames.indexOf("file_name")
+      val (schema, rows) = manifestSnap(spark, mp)
+      val fIdx = schema.fieldNames.indexOf("file_name")
       val presentSet = present.toSet
-      dropped = s.rows.count { r =>
+      dropped = rows.count { r =>
         r.isNullAt(fIdx) || {
           val n = r.getString(fIdx)
           !presentSet(n.substring(n.lastIndexOf('/') + 1))

@@ -155,12 +155,10 @@ object TimeTravel {
   // Mechanics: one `listStatus` of the lineage directory yields the
   // EFFECTIVE file set — the newest checkpoint (`ckpt_v<N>.parquet`, a
   // fold of every segment ≤ N written by [[checkpointLineage]]) plus
-  // the tail segments with version > N — and a fingerprint
-  // (name:length:mtime per file). A snapshot cache keyed by the
-  // lineage path returns the previously collected rows when the
-  // fingerprint is unchanged; segments and checkpoints are immutable
-  // single-file births, so an unchanged listing proves unchanged
-  // content. Cost per consultation: one FS listing (cache hit), or
+  // the tail segments with version > N — and the [[ListingSnapshot]]
+  // keyed by the lineage path returns the previously collected rows
+  // while that set's fingerprint is unchanged (the staleness contract
+  // is stated there once). Cost per consultation: one FS listing (hit), or
   // one bounded read of ≤ checkpoint-interval files (miss — i.e. once
   // per commit). The rows are file-count-sized, the same driver
   // budget every face already spends.
@@ -180,12 +178,10 @@ object TimeTravel {
     spark.sparkContext.hadoopConfiguration
       .getInt(checkpointIntervalKey, 64)
 
-  /** The folded lineage: schema + collected rows + the listing
-    * fingerprint that proves them current. Field indexes are
+  /** The folded lineage: schema + collected rows. Field indexes are
     * precomputed for the hot driver-side scans. */
-  private final case class LineageSnap(fingerprint: String,
-                                       schema: StructType,
-                                       rows: Array[Row]) {
+  private final class LineageRows(val schema: StructType,
+                                  val rows: Array[Row]) {
     val vIdx: Int = schema.fieldNames.indexOf("version")
     val aIdx: Int = schema.fieldNames.indexOf("action")
     val fIdx: Int = schema.fieldNames.indexOf("file_name")
@@ -197,14 +193,33 @@ object TimeTravel {
     }
   }
 
-  private val snapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, LineageSnap]()
+  /** The lineage snapshot per lineage directory, fingerprinted over the
+    * effective files ([[ListingSnapshot]]). A miss reads them under one
+    * widened schema ([[widenMerge]] over per-file footers when a plain
+    * mergeSchema read refuses — e.g. a legacy segment recorded `min_x`
+    * stats as int where newer commits record long). */
+  private val snapshots =
+    new ListingSnapshot[Nothing, LineageRows](effectiveLineageFiles)({
+      (spark, lp, files) =>
+        val df = readWidened(spark, files.map(_.getPath.toString),
+          s"lineage at $lp")
+        Right(new LineageRows(df.schema, df.collect()))
+    })
 
-  /** Test/measurement seam: drop every cached lineage snapshot so the
-    * next consultation pays the cold path (one listing + the bounded
-    * effective-file load). Correctness never depends on this — the
-    * listing fingerprint already invalidates stale entries. */
-  private[graft] def invalidateLineageCache(): Unit = snapCache.clear()
+  /** Read `paths` under one schema: mergeSchema, or — when mergeSchema
+    * refuses across an int/long stat-column boundary (segments written
+    * before the stable-wide-stats rule mixed with segments after it) —
+    * each footer's schema folded through the SAFE widening lattice
+    * ([[widenMerge]]) and the files read under that one target. */
+  private[sources] def readWidened(spark: SparkSession, paths: Seq[String],
+                                   what: String): DataFrame =
+    try spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    catch {
+      case _: org.apache.spark.SparkException =>
+        val target = paths.map(p => spark.read.parquet(p).schema)
+          .reduce((a, b) => widenMerge(a, b, what))
+        spark.read.schema(target).parquet(paths: _*)
+    }
 
   /** Measurement seam: the driver-held lineage snapshot's (row count,
     * estimated bytes) — what the BASELINE lakemeta curve reports and
@@ -221,11 +236,8 @@ object TimeTravel {
     * version) and superseded checkpoints are ignored even while they
     * still exist on disk. */
   private def effectiveLineageFiles(
-      fs: org.apache.hadoop.fs.FileSystem, lp: String)
+      all: Seq[org.apache.hadoop.fs.FileStatus])
       : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val all =
-      if (!fs.exists(hp(lp))) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(hp(lp)).filter(_.isFile)
     val ckpt = all.flatMap(f => f.getPath.getName match {
       case ckptNameRe(v) => Some(v.toLong -> f)
       case _ => None
@@ -238,15 +250,13 @@ object TimeTravel {
     (ckpt.toSeq ++ segs).map(_._2)
   }
 
-  private def lineageExists(spark: SparkSession, dataPath: String): Boolean =
-    effectiveLineageFiles(fsOf(spark, dataPath),
-      lineagePath(dataPath)).nonEmpty
+  /** The effective lineage files of `dataPath` right now (empty when the
+    * table has no lineage) — one listing. */
+  private def lineageListing(spark: SparkSession, dataPath: String)
+      : Option[ListingSnapshot.Listing] =
+    snapshots.list(fsOf(spark, dataPath), lineagePath(dataPath))
+      .filter(_.files.nonEmpty)
 
-  /** Load (or reuse) the lineage snapshot. One listing decides
-    * staleness; a miss reads the bounded effective file set under one
-    * widened schema ([[widenMerge]] over per-file footers when a plain
-    * mergeSchema read refuses — e.g. a legacy segment recorded `min_x`
-    * stats as int where newer commits record long). */
   /** Does this failure mean a file vanished between our listing and
     * our read? The one benign cause here: a concurrent
     * [[checkpointLineage]] + [[vacuumLineage]] superseded the listed
@@ -266,11 +276,15 @@ object TimeTravel {
     false
   }
 
-  private def lineageSnap(spark: SparkSession,
-                          dataPath: String): LineageSnap = {
+  /** Load (or reuse) the lineage snapshot; None when the table has no
+    * commits. One listing decides staleness; a miss reads the bounded
+    * effective file set. */
+  private def lineageOpt(spark: SparkSession,
+                         dataPath: String): Option[LineageRows] = {
     var attempt = 0
     while (true) {
-      try return lineageSnapOnce(spark, dataPath)
+      try return lineageListing(spark, dataPath)
+        .map(snapshots.lookup(spark, lineagePath(dataPath), _).merge)
       catch {
         case e: Exception if attempt < 5 && vanishedFile(e) =>
           attempt += 1 // superseded listing — re-list and reload
@@ -279,55 +293,12 @@ object TimeTravel {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Fingerprint = per-file name:len:mtime PLUS file count and the
-    * lineage directory's own mtime: a delete-and-recreate at the same
-    * path can reproduce identical names/lengths, and on a coarse
-    * (second-granularity) store the per-file mtimes can collide too —
-    * the dir mtime moves on every create/delete inside it, so the
-    * recreate is still visible (ADVICE r16). Entry points that delete
-    * a table outright should additionally call
-    * [[invalidateLineageCache]]. One expression, shared by the cold
-    * load and the post-commit in-place refresh — they must never
-    * drift. */
-  private def lineageFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-      lp: String,
-      files: Seq[org.apache.hadoop.fs.FileStatus]): String = {
-    val dirM =
-      try fs.getFileStatus(hp(lp)).getModificationTime
-      catch { case _: java.io.FileNotFoundException => -1L }
-    (s"n=${files.length}:dir=$dirM" +: files.map(f =>
-      s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"))
-      .mkString("|")
-  }
-
-  private def lineageSnapOnce(spark: SparkSession,
-                              dataPath: String): LineageSnap = {
-    val lp = lineagePath(dataPath)
-    val fs = fsOf(spark, dataPath)
-    val files = effectiveLineageFiles(fs, lp)
-    require(files.nonEmpty,
-      s"no lineage at $lp — the table has no commits")
-    val fp = lineageFingerprint(fs, lp, files)
-    val cached = snapCache.get(lp)
-    if (cached != null && cached.fingerprint == fp) return cached
-    val paths = files.map(_.getPath.toString)
-    val df =
-      try spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      catch {
-        // mergeSchema refuses across an int/long stat-column boundary
-        // (segments written before the stable-wide-stats rule mixed
-        // with segments after it); fold the footers through the SAFE
-        // widening lattice instead and read under the one target
-        case _: org.apache.spark.SparkException =>
-          val target = paths
-            .map(p => spark.read.parquet(p).schema)
-            .reduce((a, b) => widenMerge(a, b, s"lineage of $dataPath"))
-          spark.read.schema(target).parquet(paths: _*)
-      }
-    val snap = LineageSnap(fp, df.schema, df.collect())
-    if (snapCache.size > 256) snapCache.clear()
-    snapCache.put(lp, snap)
-    snap
+  private def lineageSnap(spark: SparkSession,
+                          dataPath: String): LineageRows = {
+    val s = lineageOpt(spark, dataPath)
+    require(s.nonEmpty, s"no lineage at ${lineagePath(dataPath)} — the " +
+      "table has no commits")
+    s.get
   }
 
   /** The lineage as a DataFrame — a LocalRelation over the snapshot's
@@ -354,8 +325,7 @@ object TimeTravel {
 
   private def lineageHasBatch(spark: SparkSession, dataPath: String,
                               id: String): Boolean =
-    lineageExists(spark, dataPath) && {
-      val s = lineageSnap(spark, dataPath)
+    lineageOpt(spark, dataPath).exists { s =>
       val b = s.idx("batch_id")
       b >= 0 && s.rows.exists(r => !r.isNullAt(b) && r.getString(b) == id)
     }
@@ -506,8 +476,7 @@ object TimeTravel {
     * `schema_json` newer than the newest stamp, normally none). */
   private def recordedTableSchema(spark: SparkSession, dataPath: String)
       : Option[StructType] = {
-    if (!lineageExists(spark, dataPath)) return None
-    val s = lineageSnap(spark, dataPath)
+    val s = lineageOpt(spark, dataPath).getOrElse(return None)
     val sj = s.idx("schema_json")
     val tj = s.idx("table_schema_json")
     def parse(j: String): StructType =
@@ -538,8 +507,7 @@ object TimeTravel {
     * schemas, "none" when nothing was ever recorded. Test seam. */
   private[graft] def schemaResolution(spark: SparkSession,
                                       dataPath: String): String = {
-    if (!lineageExists(spark, dataPath)) return "none"
-    val s = lineageSnap(spark, dataPath)
+    val s = lineageOpt(spark, dataPath).getOrElse(return "none")
     val tj = s.idx("table_schema_json")
     val sj = s.idx("schema_json")
     val stampV =
@@ -591,8 +559,7 @@ object TimeTravel {
   /** Highest committed version; 0 for a table with no commits yet.
     * One directory listing (snapshot cache hit) — no job. */
   def latestVersion(spark: SparkSession, dataPath: String): Long =
-    if (!lineageExists(spark, dataPath)) 0L
-    else lineageSnap(spark, dataPath).maxVersion
+    lineageOpt(spark, dataPath).fold(0L)(_.maxVersion)
 
   /** The file names live at `v`: per file, its LATEST add/remove action
     * at or before `v` decides (not a mere add-minus-remove set — a
@@ -780,7 +747,9 @@ object TimeTravel {
     // lands at the true head. Honest commits can never trip it: any
     // fold reaching version ≥ v after our birth folded our rows in.
     postBirthForTests()
-    val filesAfter = effectiveLineageFiles(fs, lp)
+    val after = snapshots.list(fs, lp)
+    val filesAfter = after.fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(
+      _.files)
     val ckptAfter = filesAfter.map(_.getPath.getName).collectFirst {
       case ckptNameRe(cv) => cv.toLong }.getOrElse(0L)
     if (ckptAfter >= v) {
@@ -829,41 +798,26 @@ object TimeTravel {
       // the commit IS durable here; what follows is log maintenance.
       // A crash in it (the "checkpoint" matrix boundary) leaves a fully
       // committed version whose caller retry no-ops through batchId.
-      refreshSnapAfterAppend(spark, fs, lp, v, segRows, stamped.schema,
-        filesAfter)
+      refreshSnapAfterAppend(lp, v, segRows, stamped.schema, after)
     }
-    maybeCheckpoint(spark, dataPath)
+    maybeCheckpoint(spark, dataPath, filesAfter.count(f =>
+      segmentNameRe.pattern.matcher(f.getPath.getName).matches))
   }
 
   /** Fold the just-committed segment's rows into the cached lineage
-    * snapshot IN PLACE — zero jobs, one listing — instead of letting
-    * the next consultation reload every effective file. Guarded for
-    * concurrency: the update installs ONLY when the fresh listing is
-    * exactly the cached file set plus this commit's own segment (a
-    * concurrent committer/checkpointer/vacuum in the window makes the
-    * file sets differ — then we simply skip, and the fingerprint check
-    * reloads correctly on the next read). Never load-bearing: a
-    * skipped or raced update costs one cold reload, not correctness.
+    * snapshot IN PLACE — zero jobs, no extra listing — instead of
+    * letting the next consultation reload every effective file. The
+    * snapshot's guarded install ([[ListingSnapshot.afterAppend]]) skips
+    * it unless the post-birth listing is exactly the cached file set
+    * plus this commit's own segment — a cached set that already holds
+    * our segment (a concurrent cold load) would duplicate its rows.
+    * Never load-bearing: a skipped or raced update costs one cold
+    * reload, not correctness.
     */
-  private def refreshSnapAfterAppend(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, lp: String, v: Long,
+  private def refreshSnapAfterAppend(lp: String, v: Long,
       segRows: Array[Row], segSchema: StructType,
-      files: Seq[org.apache.hadoop.fs.FileStatus]): Unit = {
-    try {
-      val cached = snapCache.get(lp)
-      if (cached == null) return
-      val names = files.map(_.getPath.getName)
-      // the cached fingerprint's member names (lineage file names never
-      // contain ':' or '|' — segment_v<d>.parquet / ckpt_v<d>.parquet)
-      val cachedNames = cached.fingerprint.split('|').iterator.drop(1)
-        .map(_.takeWhile(_ != ':')).toSet
-      // the cached snapshot must predate OUR segment: a concurrent
-      // consultation may already have cold-loaded a listing that
-      // includes it — folding our rows in again would duplicate them
-      // (set union is idempotent, so the equality below alone would
-      // still pass)
-      if (cachedNames.contains(s"segment_v$v.parquet")) return
-      if (names.toSet != cachedNames + s"segment_v$v.parquet") return
+      after: Option[ListingSnapshot.Listing]): Unit =
+    try snapshots.afterAppend(lp, Set(s"segment_v$v.parquet"), after) { cached =>
       val merged = widenMerge(cached.schema, segSchema,
         s"lineage snapshot of $lp")
       def remap(rows: Array[Row], from: StructType): Array[Row] = {
@@ -888,25 +842,21 @@ object TimeTravel {
           })
         }
       }
-      val fp = lineageFingerprint(fs, lp, files)
-      snapCache.put(lp, LineageSnap(fp, merged,
-        remap(cached.rows, cached.schema) ++ remap(segRows, segSchema)))
+      new LineageRows(merged,
+        remap(cached.rows, cached.schema) ++ remap(segRows, segSchema))
     } catch {
       case scala.util.control.NonFatal(_) => () // next read reloads cold
     }
-  }
 
-  /** Fold the log when the tail past the newest checkpoint reaches the
+  /** Fold the log when the tail past the newest checkpoint (`tail`,
+    * counted on the commit's post-birth listing) reaches the
     * configured interval — [[appendLineage]]'s post-commit hook. Write
     * only, never delete (a delete here would race concurrent readers'
     * listings; [[vacuumLineage]] reclaims explicitly). */
-  private def maybeCheckpoint(spark: SparkSession, dataPath: String): Unit = {
+  private def maybeCheckpoint(spark: SparkSession, dataPath: String,
+                              tail: Int): Unit = {
     val k = checkpointInterval(spark)
-    if (k <= 0) return
-    val fs = fsOf(spark, dataPath)
-    val tail = effectiveLineageFiles(fs, lineagePath(dataPath))
-      .count(f => segmentNameRe.pattern.matcher(f.getPath.getName).matches)
-    if (tail < k) return
+    if (k <= 0 || tail < k) return
     crashForTests("checkpoint")
     // Best-effort maintenance: the commit this hook follows is ALREADY
     // durable, so a fold failure must not surface as an apparent commit
@@ -984,7 +934,7 @@ object TimeTravel {
     * reverse order would open a replay window). Pure driver fold over
     * the snapshot — zero jobs beyond the bounded ledger anti-join. */
   private def compactFoldRows(spark: SparkSession, dataPath: String,
-                              s: LineageSnap): Array[Row] = {
+                              s: LineageRows): Array[Row] = {
     val vacuumed = scala.collection.mutable.HashSet.empty[String]
     s.rows.foreach { r =>
       if (r.getString(s.aIdx) == "vacuum") vacuumed += r.getString(s.fIdx)
@@ -1105,9 +1055,9 @@ object TimeTravel {
     val fs = fsOf(spark, dataPath)
     if (!fs.exists(hp(dataPath))) return 0
     val referenced: Set[String] =
-      if (!lineageExists(spark, dataPath)) Set.empty
-      else lineage(spark, dataPath).select(col("file_name"))
-        .distinct().collect().map(_.getString(0)).toSet
+      lineageOpt(spark, dataPath).fold(Set.empty[String]) { s =>
+        s.rows.iterator.map(_.getString(s.fIdx)).toSet
+      }
     val doomed = fs.listStatus(hp(dataPath))
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getPath)
@@ -1969,8 +1919,7 @@ object TimeTravel {
     * r - 1, so reads at ≥ r survive its reclamation).
     */
   def earliestReadable(spark: SparkSession, dataPath: String): Long = {
-    if (!lineageExists(spark, dataPath)) return 1L
-    val s = lineageSnap(spark, dataPath)
+    val s = lineageOpt(spark, dataPath).getOrElse(return 1L)
     val vacuumed = s.rows.iterator
       .filter(_.getString(s.aIdx) == "vacuum")
       .map(_.getString(s.fIdx)).toSet

@@ -1448,61 +1448,92 @@ class LayoutSpec extends SparkSpec {
       (0L until 40L).filter(_ % 10 == 3).toSeq)
   }
 
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
+  /** One [[graft.sources.ListingSnapshot]] consumer under the cold/warm
+    * pin below: `consult` answers from the consumer's snapshot, each
+    * write is followed by the answer it must produce. */
+  private type Write = (() => Unit, Seq[String] => Boolean)
+  private final class SnapshotConsumer(val name: String,
+      val setup: String => (() => Seq[String], Seq[Write]),
+      val initial: Seq[String] => Boolean)
+
+  private val snapshotConsumers = Seq(
+    new SnapshotConsumer("manifest", { dir =>
+      val df = (0L until 400L).map(i => (i, i % 20)).toDF("id", "x")
+      Layout.writeZOrdered(df, dir, Seq("x"), files = 4)
+      Layout.writeManifest(spark, dir, Seq("x"))
+      val mp = Layout.manifestPath(dir)
+      // the rows come from the driver-held snapshot as a LocalRelation
+      // whose collect is a LocalTableScan — zero jobs warm (an AGGREGATE
+      // over it would still run a local job; the consult itself must not)
+      val consult = () => {
+        val m = Layout.readManifestMerged(spark, mp)
+        assert(m.columns.contains("min_x"))
+        m.collect().map(_.toString).toSeq.sorted
+      }
+      (consult, Seq(
+        // a manifest write moves the fingerprint: the next consult sees
+        // the new rows (freshness), never the stale snapshot
+        (() => {
+          Layout.appendZOrdered(df.withColumn("x", col("x") + 100), dir,
+            Seq("x"), files = 2)
+          assert(Layout.updateManifest(spark, dir, Seq("x")) == 2)
+        }, (_: Seq[String]).length == 6),
+        // the staged-swap compaction also moves the fingerprint
+        (() => Layout.compactManifest(spark, dir),
+          (_: Seq[String]).length == 6)))
+    }, _.length == 4),
+    new SnapshotConsumer("lineage", { dir =>
+      def batch(from: Long) =
+        spark.range(from, from + 50).select(col("id"), (col("id") % 7).as("x"))
+      graft.sources.TimeTravel.commitAppend(batch(0), dir, Seq("x"),
+        files = 2): Unit
+      val consult = () => graft.sources.TimeTravel.readLineage(spark, dir)
+        .select("version", "action", "file_name").collect()
+        .map(_.toString).toSeq.sorted
+      (consult, Seq(
+        // a commit lands a segment the post-commit install folds in
+        (() => graft.sources.TimeTravel.commitAppend(batch(50), dir,
+          Seq("x"), files = 2): Unit,
+          (rows: Seq[String]) => rows.length == 4 &&
+            rows.count(_.startsWith("[2,add,")) == 2)))
+    }, rows => rows.length == 2 && rows.forall(_.startsWith("[1,add,"))),
+    new SnapshotConsumer("ledger", { dir =>
+      val lp = s"$dir/ledger"
+      graft.operators.Ledger.init(spark, lp)
+      graft.operators.Ledger.record(spark, lp, "b1")
+      val consult = () => Seq("b1", "b2", "__base__").map(id =>
+        s"$id=${graft.operators.Ledger.contains(spark, lp, id)}")
+      (consult, Seq(
+        (() => graft.operators.Ledger.record(spark, lp, "b2"),
+          (_: Seq[String]) == Seq("b1=true", "b2=true", "__base__=true"))))
+    }, _ == Seq("b1=true", "b2=false", "__base__=true")))
+
+  snapshotConsumers.foreach { c =>
+    test(s"${c.name} snapshot cache: a consult on an unchanged listing runs " +
+        s"ZERO Spark jobs, and any ${c.name} write invalidates it") {
+      val (consult, writes) = c.setup(tmpDir(s"snapcache_${c.name}"))
+      graft.sources.ListingSnapshot.invalidateAll()
+      // cold: the snapshot load is real work (parquet read + collect)
+      var answer = Seq.empty[String]
+      val cold = jobsDuring { answer = consult() }
+      assert(cold >= 1, s"cold consult should run jobs, ran $cold")
+      assert(c.initial(answer), s"cold answer: $answer")
+      // warm: one directory listing decides staleness — zero jobs, and
+      // the same answer
+      val warm = jobsDuring(assert(consult() == answer))
+      assert(warm == 0, s"warm consult on an unchanged listing ran $warm jobs")
+      // dropping every snapshot changes nothing but the cost
+      graft.sources.ListingSnapshot.invalidateAll()
+      assert(consult() == answer)
+      writes.foreach { case (write, expect) =>
+        write()
+        val fresh = consult()
+        assert(expect(fresh), s"post-write consult must see the write: $fresh")
+        // and the refreshed snapshot is again zero-jobs warm
+        assert(jobsDuring(assert(consult() == fresh)) == 0)
+        graft.sources.ListingSnapshot.invalidateAll()
+        assert(consult() == fresh)
       }
     }
-    sc.addSparkListener(l)
-    try {
-      body
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods.find(m => m.getName == "waitUntilEmpty" &&
-        m.getParameterCount == 0).foreach(_.invoke(bus))
-    } finally sc.removeSparkListener(l)
-    n.get()
-  }
-
-  test("manifest snapshot cache: a consult on an unchanged listing runs " +
-      "ZERO Spark jobs, and any manifest write invalidates it") {
-    val df = (0L until 400L).map(i => (i, i % 20)).toDF("id", "x")
-    val dir = tmpDir("snapcache")
-    Layout.writeZOrdered(df, dir, Seq("x"), files = 4)
-    Layout.writeManifest(spark, dir, Seq("x"))
-    val mp = Layout.manifestPath(dir)
-
-    Layout.invalidateManifestCache()
-    // cold: the snapshot load is real work (parquet read + collect)
-    val cold = jobsDuring(Layout.readManifestMerged(spark, mp).collect(): Unit)
-    assert(cold >= 1, s"cold consult should run jobs, ran $cold")
-    // warm: one directory listing decides staleness; the rows come from
-    // the driver-held snapshot as a LocalRelation whose collect is a
-    // LocalTableScan — zero jobs (an AGGREGATE over it would still run
-    // a local job; the consult itself must not)
-    val warm = jobsDuring {
-      val m = Layout.readManifestMerged(spark, mp)
-      assert(m.columns.contains("min_x") && m.collect().length == 4)
-    }
-    assert(warm == 0, s"warm consult on an unchanged listing ran $warm jobs")
-
-    // a manifest write moves the fingerprint: the next consult sees the
-    // new rows (freshness), never the stale snapshot
-    Layout.appendZOrdered(df.withColumn("x", col("x") + 100), dir,
-      Seq("x"), files = 2)
-    assert(Layout.updateManifest(spark, dir, Seq("x")) == 2)
-    val m2 = Layout.readManifestMerged(spark, mp)
-    assert(m2.collect().length == 6,
-      "post-append consult must see the new segment")
-    // and the refreshed snapshot is again zero-jobs warm
-    assert(jobsDuring(
-      Layout.readManifestMerged(spark, mp).collect(): Unit) == 0)
-
-    // the staged-swap compaction also moves the fingerprint
-    Layout.compactManifest(spark, dir)
-    assert(Layout.readManifestMerged(spark, mp).collect().length == 6)
   }
 }

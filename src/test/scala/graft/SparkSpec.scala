@@ -8,6 +8,30 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs launched while `body` runs — the mechanical pin for
+    * the metadata-cost contracts ("reads O(1) segments", "a warm
+    * snapshot consult runs zero jobs"). The listener bus is drained
+    * before counting (its waitUntilEmpty is private[spark] in the API
+    * but public in bytecode). */
+  protected def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethods.find(m => m.getName == "waitUntilEmpty" &&
+        m.getParameterCount == 0).foreach(_.invoke(bus))
+    } finally sc.removeSparkListener(l)
+    n.get()
+  }
 }
 
 object SparkSpec {
