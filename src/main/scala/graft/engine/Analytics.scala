@@ -1,7 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 import graft.operators._
 
@@ -11,10 +17,14 @@ import graft.operators._
   * optional exactly like the reference's dynamically-built predicates
   * (webserver/server.py:156-167).
   *
-  * Scale shape: each flow scans each fact table ONCE per request (the
-  * reference issues 4-5 sequential SQL queries, webserver/server.py:130-256)
-  * and `compare`/`bookmarks` handle all keys in a single pass instead of
-  * re-running the stack per key (server.py:456-473, 561-580).
+  * Scale shape: the per-frame operators below are lazily-planned
+  * transforms. [[dashboard]] serves a page from three Spark queries (the
+  * geo lookup, one service-request query, one sales query; the last two
+  * run side by side) where the reference issues 4-5 sequential SQL
+  * queries (webserver/server.py:130-256), and derives the remaining
+  * frames on the driver. `compare`/`bookmarks` handle all keys in a
+  * single pass instead of re-running the stack per key
+  * (server.py:456-473, 561-580).
   */
 object Analytics {
 
@@ -33,6 +43,17 @@ object Analytics {
   private def windowed(df: DataFrame, dateCol: String, w: Window): DataFrame =
     Filters.dateWindow(df, dateCol, w.start, w.end)
 
+  /** One key's service requests inside the window. */
+  private def requestsOf(sr: DataFrame, geoId: Long, w: Window): DataFrame =
+    windowed(sr.filter(col("geographic_id") === geoId), "created_date", w)
+
+  /** One key's sales (joined to their properties) inside the window. */
+  private def salesOf(sale: DataFrame, property: DataFrame, geoId: Long,
+                      w: Window): DataFrame =
+    windowed(
+      sale.join(property.filter(col("geographic_id") === geoId), Seq("property_id")),
+      "sale_date", w)
+
   /** Geo point lookup: natural key → geographic_id row; empty frame = the
     * reference's 404 (webserver/server.py:135-149).
     */
@@ -40,14 +61,30 @@ object Analytics {
     Filters.naturalKey(geo, Map(
       "borough_code" -> borough, "block_code" -> block, "lot_code" -> lot))
 
+  /** [[geoLookup]]'s id, or None for an unknown key. */
+  def lookupId(geo: DataFrame, borough: Int, block: Int, lot: Int): Option[Long] =
+    // select the key column by NAME before the 1-row collect: a caller's
+    // geo frame with a different column order must not yield a wrong id
+    geoLookup(geo, borough, block, lot).select(col("geographic_id"))
+      .collect().headOption.map(_.getAs[Long]("geographic_id"))
+
+  /** Natural keys → geographic ids in ONE dimension scan; unresolved keys
+    * are simply absent (the compare and bookmarks contract).
+    */
+  def resolveKeys(geo: DataFrame, keys: Seq[(Int, Int, Int)]): Seq[Long] = {
+    val keyPred = keys.map { case (b, bl, lt) =>
+      col("borough_code") === b && col("block_code") === bl && col("lot_code") === lt
+    }.reduceOption(_ || _).getOrElse(lit(false))
+    geo.filter(keyPred).select(col("geographic_id"))
+      .collect().map(_.getAs[Long]("geographic_id")).toSeq
+  }
+
   /** §3.1 dashboard, service-request side: totals + per-complaint-type
-    * breakdown + top-5+Other chart reduction, one fact scan
+    * breakdown + top-5+Other chart reduction
     * (webserver/server.py:170-200, 411-419).
     */
   def requestTotals(sr: DataFrame, geoId: Long, w: Window): DataFrame =
-    Aggregates.totals(
-      windowed(sr.filter(col("geographic_id") === geoId), "created_date", w),
-      "status", ActiveStatuses)
+    Aggregates.totals(requestsOf(sr, geoId, w), "status", ActiveStatuses)
 
   def requestsByType(sr: DataFrame, complaintTypes: DataFrame, geoId: Long,
                      w: Window): DataFrame =
@@ -58,40 +95,41 @@ object Analytics {
     // carefully preserved grand total. On FK-clean data the two joins
     // are row-identical.
     Aggregates.groupCounts(
-      windowed(sr.filter(col("geographic_id") === geoId), "created_date", w)
+      requestsOf(sr, geoId, w)
         .join(broadcast(complaintTypes), Seq("complaint_type_id"), "left")
         .withColumn("complaint_type_name",
           coalesce(col("complaint_type_name"), lit("Unknown"))),
       "complaint_type_name", "status", ActiveStatuses)
 
+  /** Chart buckets: the top 5 types plus the residual "Other". */
+  private val ChartTop = 5
+
   def complaintChart(byType: DataFrame): DataFrame =
-    TopK.topNPlusOther(byType, "complaint_type_name", 5)
+    TopK.topNPlusOther(byType, "complaint_type_name", ChartTop)
 
   /** §3.1 dashboard, sales side: detail listing (date-desc) + stats with
     * the empty→0 contract (webserver/server.py:203-240).
     */
   def salesListing(sale: DataFrame, property: DataFrame, geoId: Long,
-                   w: Window, limit: Int = 10): DataFrame =
-    windowed(
-      sale.join(property.filter(col("geographic_id") === geoId), Seq("property_id")),
-      "sale_date", w)
-      .select(col("property_address"), col("apartment_number"),
-        col("sale_price"), col("sale_date"))
+                   w: Window, limit: Int = ListingLimit): DataFrame =
+    salesOf(sale, property, geoId, w)
+      .select(ListingCols.map(col): _*)
       .orderBy(col("sale_date").desc, col("sale_price").desc)
       .limit(limit)
 
+  private val ListingCols =
+    Seq("property_address", "apartment_number", "sale_price", "sale_date")
+  private val ListingLimit = 10
+
   def salesStats(sale: DataFrame, property: DataFrame, geoId: Long,
                  w: Window): DataFrame =
-    Aggregates.priceStats(
-      windowed(
-        sale.join(property.filter(col("geographic_id") === geoId), Seq("property_id")),
-        "sale_date", w),
-      "sale_price")
+    Aggregates.priceStats(salesOf(sale, property, geoId, w), "sale_price")
 
   /** The full §3.1 dashboard as one call — every frame the reference's
     * `/analytics/<bbl>` route assembles from 4–5 sequential SQL queries
-    * (webserver/server.py:383-432), here as lazily-planned transforms over
-    * at most one scan per fact table.
+    * (webserver/server.py:383-432). The frames are local relations with
+    * exactly the per-frame operators' schemas, already computed: collecting
+    * them runs no Spark job.
     */
   case class Dashboard(geoId: Long, requestTotals: DataFrame,
                        requestsByType: DataFrame, complaintChart: DataFrame,
@@ -99,24 +137,98 @@ object Analytics {
 
   /** Returns None for an unknown BBL (the reference's 404,
     * server.py:148-149).
+    *
+    * Three Spark queries: the geo lookup, then the service-request query
+    * on the calling thread while the sales query runs on a pool thread
+    * that carries the caller's job group, description and active session.
+    * A failure on either side is rethrown as the original exception.
     */
   def dashboard(geo: DataFrame, sr: DataFrame, complaintTypes: DataFrame,
                 sale: DataFrame, property: DataFrame,
                 borough: Int, block: Int, lot: Int,
                 w: Window = Window.default): Option[Dashboard] =
-    // select the key column by NAME before the 1-row collect: a caller's
-    // geo frame with a different column order must not yield a wrong id
-    geoLookup(geo, borough, block, lot).select(col("geographic_id"))
-      .collect().headOption.map { row =>
-      val geoId = row.getAs[Long]("geographic_id")
-      val byType = requestsByType(sr, complaintTypes, geoId, w)
-      Dashboard(geoId,
-        requestTotals(sr, geoId, w),
-        byType,
-        complaintChart(byType),
-        salesListing(sale, property, geoId, w),
-        salesStats(sale, property, geoId, w))
+    lookupId(geo, borough, block, lot).map { geoId =>
+      val spark = sr.sparkSession.asInstanceOf[classic.SparkSession]
+      val salesSide = SQLExecution.withThreadLocalCaptured(spark, pagePool)(
+        salesPage(spark, sale, property, geoId, w))
+      val (totals, byType, chart) =
+        try requestsPage(spark, sr, complaintTypes, geoId, w)
+        catch { case t: Throwable =>
+          // no job of this page outlives the call
+          scala.util.Try(salesSide.get())
+          throw t
+        }
+      val (listing, stats) =
+        try salesSide.get()
+        catch { case e: ExecutionException => throw e.getCause }
+      Dashboard(geoId, totals, byType, chart, listing, stats)
     }
+
+  // daemon threads: an idle page pool never holds the JVM open
+  private lazy val pagePool: ExecutorService = Executors.newCachedThreadPool {
+    (r: Runnable) =>
+      val t = new Thread(r, "graft-dashboard-sales")
+      t.setDaemon(true)
+      t
+  }
+
+  private def local(spark: SparkSession, schema: StructType,
+                    rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** The page's service-request side: [[requestsByType]] collected once
+    * under the serving tier's row cap, [[requestTotals]] and
+    * [[complaintChart]] derived from its rows. The LEFT join + Unknown
+    * bucket make the by-type rows sum to the totals, and the rows arrive
+    * in the chart's rank order (count desc, name), so the top
+    * [[ChartTop]] rows are the winners. As in [[TopK.topNPlusOther]], a
+    * real type named "Other" among them merges into the residual bucket,
+    * which sorts last and exists only when some row falls into it.
+    */
+  private def requestsPage(spark: SparkSession, sr: DataFrame,
+                           complaintTypes: DataFrame, geoId: Long,
+                           w: Window): (DataFrame, DataFrame, DataFrame) = {
+    val byType = requestsByType(sr, complaintTypes, geoId, w)
+    val rows = AnalyticsServer.collectBounded(byType)
+    val s = byType.schema
+    val totals = local(spark,
+      StructType(Seq(s("total_count"), s("active_count").copy(nullable = false))),
+      Seq(Row(rows.map(_.getLong(1)).sum, rows.map(_.getLong(2)).sum)))
+    val (top, rest) = rows.splitAt(ChartTop)
+    val (otherTop, winners) = top.partition(_.getString(0) == "Other")
+    val residual = (otherTop ++ rest).map(_.getLong(1))
+    val chart = local(spark,
+      StructType(Seq(s("complaint_type_name").copy(name = "bucket"),
+        s("total_count").copy(nullable = true))),
+      winners.map(r => Row(r.getString(0), r.getLong(1))) ++
+        (if (residual.isEmpty) Nil else Seq(Row("Other", residual.sum))))
+    (totals, local(spark, s, rows), chart)
+  }
+
+  /** The page's sales side in one aggregate: [[Aggregates.priceStats]]'
+    * columns plus the [[salesListing]] rows as a sorted array of
+    * (sale_date, sale_price, address, apartment) structs — descending
+    * struct order is [[salesListing]]'s (date desc, price desc, nulls
+    * last). Returns (listing, stats).
+    */
+  private def salesPage(spark: SparkSession, sale: DataFrame,
+                        property: DataFrame, geoId: Long,
+                        w: Window): (DataFrame, DataFrame) = {
+    val stats = Aggregates.priceStatCols("sale_price")
+    val listing = slice(sort_array(collect_list(struct(
+      Seq("sale_date", "sale_price", "property_address", "apartment_number")
+        .map(col): _*)), asc = false), 1, ListingLimit).as("listing")
+    val q = salesOf(sale, property, geoId, w).agg(stats.head,
+      stats.tail :+ listing: _*)
+    val row = q.collect().head
+    val elem = q.schema("listing").dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    (local(spark, StructType(ListingCols.map(elem(_))),
+      row.getSeq[Row](stats.size).map(r =>
+        Row.fromSeq(ListingCols.map(c => r.get(elem.fieldIndex(c)))))),
+      local(spark, StructType(q.schema.fields.take(stats.size)),
+        Seq(Row.fromSeq(row.toSeq.take(stats.size)))))
+  }
 
   /** §3.2 trends: month-bucketed series with spine gap fill — zero-filled
     * counts, null medians for empty months (webserver/server.py:259-342).
@@ -125,8 +237,7 @@ object Analytics {
   def requestTrend(spark: SparkSession, sr: DataFrame, geoId: Long,
                    start: String, end: String): DataFrame = {
     val agg = TimeSeries.monthly(
-      windowed(sr.filter(col("geographic_id") === geoId), "created_date",
-        Window(Some(start), Some(end))),
+      requestsOf(sr, geoId, Window(Some(start), Some(end))),
       "created_date", Seq(count(lit(1)).as("count")))
     TimeSeries.gapFill(TimeSeries.monthSpine(spark, start, end), agg, Seq("count"))
   }
@@ -134,9 +245,7 @@ object Analytics {
   def salesTrend(spark: SparkSession, sale: DataFrame, property: DataFrame,
                  geoId: Long, start: String, end: String): DataFrame = {
     val agg = TimeSeries.monthly(
-      windowed(
-        sale.join(property.filter(col("geographic_id") === geoId), Seq("property_id")),
-        "sale_date", Window(Some(start), Some(end))),
+      salesOf(sale, property, geoId, Window(Some(start), Some(end))),
       "sale_date",
       Seq(Aggregates.exactMedianMoney(col("sale_price")).as("median_price"),
         count(lit(1)).as("count")))
@@ -157,19 +266,13 @@ object Analytics {
     * its geocode result UNGUARDED — an unknown address raises mid-request
     * (webserver/server.py:461-468) — and `parse_bbl` misses 404 similarly.
     * The engine pins the graceful contract instead: keys are resolved in
-    * ONE dimension scan and unresolved ones are simply absent from the
-    * result (both unknown → empty frame), the same silent-absence rule as
-    * [[bookmarkSummaries]].
+    * ONE dimension scan ([[resolveKeys]]) and unresolved ones are simply
+    * absent from the result (both unknown → empty frame), the same
+    * silent-absence rule as [[bookmarkSummaries]].
     */
   def compareByKeys(geo: DataFrame, sr: DataFrame, keys: Seq[(Int, Int, Int)],
-                    w: Window = Window.default): DataFrame = {
-    val keyPred = keys.map { case (b, bl, lt) =>
-      col("borough_code") === b && col("block_code") === bl && col("lot_code") === lt
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    val ids = geo.filter(keyPred).select(col("geographic_id"))
-      .collect().map(_.getAs[Long]("geographic_id")).toSeq
-    compareRequests(sr, ids, w)
-  }
+                    w: Window = Window.default): DataFrame =
+    compareRequests(sr, resolveKeys(geo, keys), w)
 
   /** T2 bookmarks fan-out: saved keys, all-time window
     * (webserver/server.py:561-580). Unknown keys are silently absent.

@@ -2,6 +2,8 @@ package graft.engine
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.time.LocalDate
+import java.time.format.{DateTimeFormatter, DateTimeParseException, ResolverStyle}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -40,6 +42,10 @@ import org.apache.spark.sql.types._
   *    survives restarts
   *  - `GET /login` — 401, the reference's deliberate dead stub
   *    (server.py:583-588)
+  *
+  * Every route reads `start_date`/`end_date` through one parser
+  * ([[AnalyticsServer.dates]]): an empty bound is the default year, a
+  * malformed one a 400 naming the value.
   *
   * Serving-tier collects are interaction-sized BY CONSTRUCTION (top-5
   * charts, limit-10 listings, month spines, per-key compare rows) and
@@ -112,15 +118,6 @@ final class AnalyticsServer(
       case _ => send(ex, 404, "text/plain", s"no route: $path")
     }
   }
-
-  /** The reference's default-window rule (server.py:392-395): absent
-    * bounds fall back to the 2024 dashboard year. */
-  private def window(q: Map[String, String]): Analytics.Window =
-    Analytics.Window(
-      Some(q.getOrElse("start_date", "2024-01-01")).filter(_.nonEmpty)
-        .orElse(Some("2024-01-01")),
-      Some(q.getOrElse("end_date", "2024-12-31")).filter(_.nonEmpty)
-        .orElse(Some("2024-12-31")))
 
   /** The reference's search flow (server.py:359-380): required
     * house/street/borough → geocode → 302 redirect into the dashboard,
@@ -223,18 +220,17 @@ final class AnalyticsServer(
     parseBbl(bbl) match {
       case None => send(ex, 400, "text/plain", s"malformed BBL: $bbl")
       case Some((b, bl, lt)) =>
-        val ids = Analytics.geoLookup(geo, b, bl, lt)
-          .select("geographic_id").collect()
-        if (ids.isEmpty) { send(ex, 404, "text/plain", s"BBL $bbl"); return }
-        val geoId = ids.head.getLong(0)
-        val start = q.getOrElse("start_date", "2024-01-01")
-        val end = q.getOrElse("end_date", "2024-12-31")
-        val series = q.getOrElse("type", "service_requests") match {
-          case "sales" =>
-            Analytics.salesTrend(spark, sale, property, geoId, start, end)
-          case _ => Analytics.requestTrend(spark, sr, geoId, start, end)
+        val (start, end) = dates(q)
+        Analytics.lookupId(geo, b, bl, lt) match {
+          case None => send(ex, 404, "text/plain", s"BBL $bbl")
+          case Some(geoId) =>
+            val series = q.getOrElse("type", "service_requests") match {
+              case "sales" =>
+                Analytics.salesTrend(spark, sale, property, geoId, start, end)
+              case _ => Analytics.requestTrend(spark, sr, geoId, start, end)
+            }
+            send(ex, 200, "application/json", rowsJson(series))
         }
-        send(ex, 200, "application/json", rowsJson(series))
     }
 
   private def compareRoute(ex: HttpExchange, q: Map[String, String]): Unit = {
@@ -249,17 +245,19 @@ final class AnalyticsServer(
     parseBbl(bbl) match {
       case None => send(ex, 400, "text/plain", s"malformed BBL: $bbl")
       case Some((b, bl, lt)) =>
-        Analytics.dashboard(geo, sr, complaintTypes, sale, property,
-            b, bl, lt, window(q)) match {
+        val w = window(q)
+        Analytics.lookupId(geo, b, bl, lt) match {
           case None => send(ex, 404, "text/plain", s"BBL $bbl")
-          case Some(d) =>
-            // the reference's exact CSV headers (server.py:522-529)
+          case Some(geoId) =>
+            // only the exported side's query runs; the reference's exact
+            // CSV headers (server.py:522-529)
             val (headers, rows) = q.getOrElse("type", "complaints") match {
               case "sales" => (Seq("Address", "Sale Price", "Sale Date"),
-                collectBounded(d.salesListing.select(
-                  "property_address", "sale_price", "sale_date")))
+                collectBounded(Analytics.salesListing(sale, property, geoId, w)
+                  .select("property_address", "sale_price", "sale_date")))
               case _ => (Seq("Complaint Type", "Total Count", "Active Count"),
-                collectBounded(d.requestsByType))
+                collectBounded(Analytics.requestsByType(sr, complaintTypes,
+                  geoId, w)))
             }
             ex.getResponseHeaders.set("Content-Disposition",
               s"attachment; filename=${bbl}_" +
@@ -285,10 +283,7 @@ final class AnalyticsServer(
 
   private def bookmarksRoute(ex: HttpExchange): Unit = {
     val saved = sessionBookmarks(ex)._2
-    val ids = saved.flatMap(parseBbl).flatMap { case (b, bl, lt) =>
-      Analytics.geoLookup(geo, b, bl, lt).select("geographic_id")
-        .collect().headOption.map(_.getLong(0))
-    }
+    val ids = Analytics.resolveKeys(geo, saved.flatMap(parseBbl))
     send(ex, 200, "application/json", jsonObj(Seq(
       "bookmarks" -> jsonArr(saved.map(jsonStr)),
       "summaries" -> rowsJson(Analytics.bookmarkSummaries(sr, ids)))))
@@ -340,6 +335,31 @@ object AnalyticsServer {
         catch { case _: NumberFormatException => None }
       case _ => None
     }
+
+  /** The reference's default-window rule (server.py:392-395): an absent
+    * or empty bound falls back to the 2024 dashboard year. A malformed
+    * one is a caller error (400 naming the value), never a Spark cast
+    * failure mid-query. Bounds are normalized to ISO `yyyy-MM-dd`. */
+  private def dates(q: Map[String, String]): (String, String) = {
+    def bound(k: String, default: String): String =
+      q.get(k).filter(_.nonEmpty).fold(default) { v =>
+        try LocalDate.parse(v.trim, DateParam).toString
+        catch { case _: DateTimeParseException =>
+          throw new IllegalArgumentException(
+            s"malformed $k: $v (want yyyy-MM-dd)")
+        }
+      }
+    val d = Analytics.Window.default
+    (bound("start_date", d.start.get), bound("end_date", d.end.get))
+  }
+
+  private def window(q: Map[String, String]): Analytics.Window = {
+    val (start, end) = dates(q)
+    Analytics.Window(Some(start), Some(end))
+  }
+
+  private val DateParam =
+    DateTimeFormatter.ofPattern("uuuu-M-d").withResolverStyle(ResolverStyle.STRICT)
 
   private val MaxRows = 10000
 

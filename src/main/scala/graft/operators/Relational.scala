@@ -119,12 +119,18 @@ object Aggregates {
     * set reports 0, not NULL). Exact `percentile` matches PERCENTILE_CONT
     * interpolation; at 100 TB swap in [[approxPriceStats]].
     */
-  def priceStats(df: DataFrame, priceCol: String): DataFrame =
-    df.agg(
-      coalesce(exactMedianMoney(col(priceCol)), lit(0.0)).as("median_price"),
-      coalesce(round(min(col(priceCol)), 2), lit(0.0)).as("min_price"),
-      coalesce(round(max(col(priceCol)), 2), lit(0.0)).as("max_price"),
-      count(lit(1)).as("num_sales"))
+  def priceStats(df: DataFrame, priceCol: String): DataFrame = {
+    val cols = priceStatCols(priceCol)
+    df.agg(cols.head, cols.tail: _*)
+  }
+
+  /** [[priceStats]]' four aggregate columns, for a caller that computes
+    * them in one aggregate alongside its own. */
+  def priceStatCols(priceCol: String): Seq[Column] = Seq(
+    coalesce(exactMedianMoney(col(priceCol)), lit(0.0)).as("median_price"),
+    coalesce(round(min(col(priceCol)), 2), lit(0.0)).as("min_price"),
+    coalesce(round(max(col(priceCol)), 2), lit(0.0)).as("max_price"),
+    count(lit(1)).as("num_sales"))
 
   /** Sketch-based distinct count (HLL++, constant memory) — the opt-in
     * scale variant of `countDistinct` for 100 TB cardinality estimation

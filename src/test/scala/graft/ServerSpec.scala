@@ -74,6 +74,58 @@ class ServerSpec extends SparkSpec {
     }
   }
 
+  /** An empty date bound serves the default year; a malformed one is a
+    * 400 naming the value, never a Spark cast failure. */
+  private def assertDateParams(port: Int, route: String)
+                              (okDefault: String => Boolean): Unit = {
+    val sep = if (route.contains("?")) "&" else "?"
+    val empty = get(port, s"$route${sep}start_date=&end_date=")
+    assert(empty.statusCode() == 200, empty.body())
+    assert(okDefault(empty.body()), empty.body())
+    Seq("start_date=garbage" -> "garbage",
+      "end_date=2024-13-45" -> "2024-13-45",
+      "start_date=2024-02-30" -> "2024-02-30").foreach { case (p, bad) =>
+      val r = get(port, s"$route$sep$p")
+      assert(r.statusCode() == 400, s"$p: ${r.body()}")
+      assert(r.body().contains(bad) && !r.body().contains("Exception"),
+        r.body())
+    }
+  }
+
+  test("GET /analytics: empty date bounds serve the default year; a " +
+      "malformed date is 400 naming it") {
+    withServer() { (port, _) =>
+      assertDateParams(port, "/analytics/1-42-7")(
+        _.contains("\"total_count\":13"))
+    }
+  }
+
+  test("GET /trends: empty date bounds serve the default year; a " +
+      "malformed date is 400 naming it") {
+    withServer() { (port, _) =>
+      // twelve 2024 months
+      assertDateParams(port, "/trends/1-42-7?type=sales")(b =>
+        b.split("\\{").length - 1 == 12 && b.contains("\"month\":\"2024-12\""))
+    }
+  }
+
+  test("GET /compare: empty date bounds serve the default year; a " +
+      "malformed date is 400 naming it") {
+    withServer() { (port, _) =>
+      assertDateParams(port, "/compare?bbl1=1-42-7&bbl2=3-100-55")(
+        _.contains("\"total_count\":13"))
+    }
+  }
+
+  test("GET /export: empty date bounds serve the default year; a " +
+      "malformed date is 400 naming it") {
+    withServer() { (port, _) =>
+      // the default year holds 4 of BBL 101's sales (the fifth is 2023)
+      assertDateParams(port, "/export/1-42-7?type=sales")(
+        _.split("\r\n").length == 5)
+    }
+  }
+
   test("GET /trends/<bbl> serves both series with gap-filled months") {
     withServer() { (port, _) =>
       val r = get(port, "/trends/1-42-7?type=service_requests")
