@@ -198,6 +198,20 @@ object Layout {
         normBits(o, b(1 + 2 * i), b(2 + 2 * i), bits) }, bits)))
   }
 
+  /** The z-curve layout step every z-ordered writer shares: range-
+    * partition a `zkey`-carrying frame ([[withZKey]] /
+    * [[countAndZKey]]) into `files` contiguous curve segments, sort
+    * within each, and drop the key — a layout device, not data. `lead`
+    * columns (a hive partition column) order ahead of the curve.
+    */
+  private[graft] def zCluster(keyed: DataFrame, files: Int,
+                              lead: Column*): DataFrame = {
+    val order = lead :+ col("zkey")
+    keyed.repartitionByRange(files, order: _*)
+      .sortWithinPartitions(order: _*)
+      .drop("zkey")
+  }
+
   /** Write `df` as `files` parquet files laid out along the z-curve of
     * `dims`: range-partition by zkey (contiguous curve segments per
     * file) and sort within each file, so every file's parquet min/max
@@ -224,11 +238,8 @@ object Layout {
                     files: Int, bloomFor: Seq[String] = Nil,
                     options: Map[String, String] = Map.empty): Unit =
     bloomOpts(
-      withZKey(df, dims)
-        .repartitionByRange(files, col("zkey"))
-        .sortWithinPartitions(col("zkey"))
-        .drop("zkey")
-        .write.mode("overwrite"), bloomFor)
+      zCluster(withZKey(df, dims), files).write.mode("overwrite"),
+      bloomFor)
       .options(options)
       .parquet(path)
 
@@ -488,11 +499,7 @@ object Layout {
   def appendZOrdered(df: DataFrame, path: String, dims: Seq[String],
                      files: Int, bloomFor: Seq[String] = Nil): Unit =
     bloomOpts(
-      withZKey(df, dims)
-        .repartitionByRange(files, col("zkey"))
-        .sortWithinPartitions(col("zkey"))
-        .drop("zkey")
-        .write.mode("append"), bloomFor)
+      zCluster(withZKey(df, dims), files).write.mode("append"), bloomFor)
       .parquet(path)
 
   /** Needle lookup: rows whose `idCol` equals one of the literal `ids`.
@@ -837,10 +844,8 @@ object Layout {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val (nSurv, keyed) = countAndZKey(survMat, dims)
-      (if (nSurv == 0L) withZKey(survMat, dims) else keyed)
-        .repartitionByRange(math.max(1, candidates.length), col("zkey"))
-        .sortWithinPartitions(col("zkey"))
-        .drop("zkey")
+      zCluster(if (nSurv == 0L) withZKey(survMat, dims) else keyed,
+          math.max(1, candidates.length))
         .write.mode("overwrite").parquet(staged)
     } finally survMat.unpersist(false)
     fs.mkdirs(retired) // empty-or-absent: the collision check above ran
@@ -1237,10 +1242,7 @@ object Layout {
     require(!dims.contains(partCol),
       s"partition column '$partCol' cannot be a z-order dim: hive " +
         "layout stores it in the directory name, not the data files")
-    withZKey(df, dims)
-      .repartitionByRange(files, col(partCol), col("zkey"))
-      .sortWithinPartitions(col(partCol), col("zkey"))
-      .drop("zkey")
+    zCluster(withZKey(df, dims), files, col(partCol))
       .write.partitionBy(partCol).mode("overwrite").parquet(root)
   }
 
@@ -1450,10 +1452,7 @@ object Layout {
     require(!dims.contains(partCol),
       s"partition column '$partCol' cannot be a z-order dim: hive " +
         "layout stores it in the directory name, not the data files")
-    withZKey(df, dims)
-      .repartitionByRange(files, col(partCol), col("zkey"))
-      .sortWithinPartitions(col(partCol), col("zkey"))
-      .drop("zkey")
+    zCluster(withZKey(df, dims), files, col(partCol))
       .write.partitionBy(partCol).mode("append").parquet(root)
   }
 
@@ -1514,10 +1513,7 @@ object Layout {
       val originals = fs.listStatus(lp).map(_.getPath)
         .filter(_.getName.endsWith(".parquet"))
       originals.length > maxFilesPerLeaf && {
-        withZKey(spark.read.parquet(leafDir), dims)
-          .repartitionByRange(filesPerLeaf, col("zkey"))
-          .sortWithinPartitions(col("zkey"))
-          .drop("zkey")
+        zCluster(withZKey(spark.read.parquet(leafDir), dims), filesPerLeaf)
           .write.mode("overwrite").parquet(sp.toString)
         fs.mkdirs(retired)
         originals.foreach { p =>

@@ -311,17 +311,28 @@ object TimeTravel {
                                  dataPath: String): DataFrame =
     lineage(spark, dataPath)
 
-  /** Replay detection that survives the crash window between the
-    * lineage commit and the ledger record: every batchId commit stamps
-    * its id into its own segment (the ATOMIC commit point), so a retry
-    * finds the batch applied even when the crash killed the writer
-    * before the ledger line landed. The ledger stays as the fast path
-    * and the compactable long-term record. */
   /** Stamp a commit's batch id into its own segment rows — the
     * durable half of [[lineageHasBatch]]. No-op without a batchId
     * (the column is simply absent; lineage mergeSchema reads null). */
   private def stampBatch(seg: DataFrame, batchId: Option[String]): DataFrame =
     batchId.fold(seg)(id => seg.withColumn("batch_id", lit(id)))
+
+  /** Has `batchId` already committed? Replay detection that survives
+    * the crash window between the lineage commit and the ledger
+    * record: every batchId commit stamps its id into its own segment
+    * (the ATOMIC commit point), so a retry finds the batch applied even
+    * when the crash killed the writer before the ledger line landed.
+    * The ledger stays as the fast path and the compactable long-term
+    * record; it is created on first use. */
+  private def replayed(spark: SparkSession, dataPath: String,
+                       batchId: Option[String]): Boolean =
+    batchId.exists { id =>
+      val ledger = commitLedgerPath(dataPath)
+      if (!fsOf(spark, dataPath).exists(hp(ledger)))
+        graft.operators.Ledger.init(spark, ledger)
+      graft.operators.Ledger.contains(spark, ledger, id) ||
+        lineageHasBatch(spark, dataPath, id)
+    }
 
   private def lineageHasBatch(spark: SparkSession, dataPath: String,
                               id: String): Boolean =
@@ -1183,12 +1194,140 @@ object TimeTravel {
       .withColumn("table_schema_json", lit(cumulative.json))
   }
 
-  /** Commit a new batch as version `latest + 1`: z-cluster `df` on
-    * `dims` into `files` parquet files (same clustering discipline as
-    * [[Layout.appendZOrdered]] — bounds drift between batches only
-    * loosens skip rate, never results) and record their `add` actions.
-    * Returns the committed version. `batchId` makes whole-commit
-    * replays exact no-ops (see object doc).
+  /** Materialize-once, the rule every batch face enters by: a commit
+    * reads its batch from several places — emptiness and guard
+    * aggregates, candidate joins, the range partitioner's sample pass,
+    * the staged write — and batches are routinely derived trees (SCD
+    * stamps, feed filters, change-feed joins), not raw scans. Each use
+    * would re-evaluate the tree, and a non-deterministic batch could
+    * pass a guard and then write different rows. MEMORY_AND_DISK spills
+    * instead of OOMing when a batch outgrows executor storage (the
+    * materialize-the-merge-source move Delta's MERGE makes);
+    * unpersisted on every exit.
+    */
+  private def materialized[T](df: DataFrame)(body: DataFrame => T): T = {
+    val mat = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(mat) finally mat.unpersist(false)
+  }
+
+  /** THE rewrite commit every write face lands on: version `base + 1`
+    * is the live set at `base` minus the `rewrite` files, plus one
+    * fresh generation — the rows of the rewritten files that `keep`
+    * retains, unioned with `batch` (schema evolution by the merged
+    * union every read uses). A face plans against `base` (which files
+    * to rewrite, which rows survive) and owns its guards and its retry
+    * rule; everything after the plan happens here, once:
+    *  1. the batch arrives [[materialized]] from its face; a merge
+    *     generation (survivors AND a batch — a join tree) is
+    *     materialized too, so the bounds probe, the range partitioner's
+    *     sample and the staged write evaluate it once. Survivors alone
+    *     (a delete's single-pass write, a compaction's re-read of
+    *     immutable files) are not cached: the cache would cost a Spark
+    *     job per commit;
+    *  2. it is z-clustered on `dimsFor(its columns)` into `files`
+    *     parquet files: ONE aggregate ([[Layout.countAndZKey]]) yields
+    *     the row count and the z-key bounds, [[Layout.zCluster]] lays
+    *     out the curve. Bounds drift between generations only loosens
+    *     skip rate, never results. An empty or dim-less generation,
+    *     and a delete's survivors (`cluster = false`: one output file
+    *     per rewritten file keeps file sizes stable), take a plain
+    *     repartition instead;
+    *  3. nothing to write and nothing to remove commits nothing and
+    *     returns `base` — never a contentless version;
+    *  4. `admit` runs the face's last pre-staging guard; then the
+    *     interleave seam, [[stageAndPromote]], the `remove` rows for
+    *     `rewrite` and the batch-id stamp;
+    *  5. [[appendLineage]], the commit point (a lost race escapes as
+    *     [[CommitRaceLost]] to the face's retry rule), then — for a
+    *     batch — the commit-ledger record.
+    */
+  private def rewriteCommit(spark: SparkSession, dataPath: String,
+      base: Long, rewrite: Seq[String], keep: DataFrame => DataFrame,
+      batch: Option[DataFrame], dimsFor: Seq[String] => Seq[String],
+      files: Int, batchId: Option[String] = None, cluster: Boolean = true,
+      admit: () => Unit = () => ()): Long = {
+    def commit(gen: DataFrame): Long = {
+      val dims = dimsFor(gen.columns.toSeq)
+      val (empty, laid) =
+        if (!cluster || dims.isEmpty)
+          (rewrite.isEmpty && gen.isEmpty, gen.repartition(files))
+        else Layout.countAndZKey(gen, dims) match {
+          case (0L, _) => (true, gen.repartition(files))
+          case (_, keyed) => (false, Layout.zCluster(keyed, files))
+        }
+      if (empty && rewrite.isEmpty) return base
+      admit()
+      val v = base + 1
+      interleaveForTests()
+      appendLineage(spark, dataPath,
+        stampBatch(stageAndPromote(spark, dataPath, v, laid, dims)
+          .unionByName(actionRows(spark,
+            rewrite.map(name => (v, "remove", name, 0L))),
+            allowMissingColumns = true), batchId), v)
+      if (batch.nonEmpty) {
+        crashForTests("ledger")
+        batchId.foreach(graft.operators.Ledger.record(spark,
+          commitLedgerPath(dataPath), _))
+      }
+      v
+    }
+    val survivors =
+      if (rewrite.isEmpty) None
+      else Some(keep(readFilesWidened(spark, dataPath, rewrite)))
+    (survivors, batch) match {
+      case (None, None) => base
+      case (None, Some(b)) => commit(b)
+      case (Some(s), None) => commit(s)
+      case (Some(s), Some(b)) =>
+        materialized(s.unionByName(b, allowMissingColumns = true))(commit)
+    }
+  }
+
+  /** The files among `files` whose lineage `add` rows may hold a row
+    * inside every prunable range — [[Layout.rangeKeep]]'s conservative
+    * rule: null-bearing files and stats-less add rows (a commit
+    * predating the dimension) stay, so stats may only cost skip rate,
+    * never rows. A range over a column the lineage has never recorded
+    * stats for prunes nothing; `also` is one more keep condition over
+    * the same stat columns. A driver filter over the lineage's local
+    * rows — no data read. */
+  private def statScreen(l: DataFrame, files: Seq[String],
+                         ranges: Seq[Layout.ColRange],
+                         also: Option[Column] = None): Seq[String] = {
+    val keeps = ranges.filter(r => Seq("min_", "max_", "nulls_")
+        .forall(p => l.columns.contains(p + r.colName)))
+      .map(Layout.rangeKeep) ++ also
+    if (keeps.isEmpty || files.isEmpty) files
+    else {
+      val kept = l.filter(col("action") === "add" && keeps.reduce(_ && _))
+        .select(col("file_name")).collect().map(_.getString(0)).toSet
+      files.filter(kept)
+    }
+  }
+
+  /** The files among `candidates` actually holding a row `matching`
+    * selects — the data half of a rewrite's discovery, one scan of
+    * ONLY the candidate files. No broadcast hint on an id frame a
+    * `matching` joins: it is usually needle-sized but is not REQUIRED
+    * to be, and a literal hint would pin a build side that might be
+    * 10^9 ids at 100 TB — AQE picks the broadcast at runtime when the
+    * frame is small. Sorted. */
+  private def filesHolding(spark: SparkSession, dataPath: String,
+                           candidates: Seq[String],
+                           matching: DataFrame => DataFrame): Seq[String] =
+    if (candidates.isEmpty) Seq.empty
+    else matching(readFilesWidened(spark, dataPath, candidates)
+        .withColumn("__file", element_at(split(input_file_name(), "/"), -1)))
+      .select(col("__file")).distinct()
+      .collect().map(r =>
+        Layout.decodePathComponent(r.getString(0))).toSeq.sorted
+
+  /** Commit a new batch as version `latest + 1`: the batch z-clustered
+    * on `dims` into `files` parquet files and its `add` actions
+    * recorded ([[rewriteCommit]], rewriting no file). Returns the
+    * committed version; an empty batch commits nothing (streaming
+    * epochs are routinely empty). `batchId` makes whole-commit replays
+    * exact no-ops (see object doc).
     *
     * `expectedVersion` is the pre-commit CAS for writers that stamp
     * the target version INTO their rows (e.g. [[Scd]] epochs): when
@@ -1201,76 +1340,43 @@ object TimeTravel {
   def commitAppend(df: DataFrame, dataPath: String, dims: Seq[String],
                    files: Int, batchId: Option[String] = None,
                    retries: Int = 3,
-                   expectedVersion: Option[Long] = None): Long = {
-    // Materialize the batch once (commitUpsert's rule): the commit
-    // evaluates it up to four times — emptiness probe, constraint
-    // gate, the range partitioner's sample pass, the staging write —
-    // and batches are routinely derived trees (SCD stamps, feed
-    // filters), not raw scans. MEMORY_AND_DISK; unpersist on exit.
-    val mat = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try commitAppendImpl(mat, dataPath, dims, files, batchId,
-      retries, expectedVersion)
-    finally mat.unpersist(false)
-  }
+                   expectedVersion: Option[Long] = None): Long =
+    materialized(df)(appendBatch(_, dataPath, dims, files, batchId,
+      retries, expectedVersion))
 
-  private def commitAppendImpl(df: DataFrame,
-                   dataPath: String, dims: Seq[String],
-                   files: Int, batchId: Option[String],
-                   retries: Int,
-                   expectedVersion: Option[Long]): Long = {
+  private def appendBatch(df: DataFrame, dataPath: String,
+                          dims: Seq[String], files: Int,
+                          batchId: Option[String], retries: Int,
+                          expectedVersion: Option[Long]): Long = {
     val spark = df.sparkSession
-    val ledger = commitLedgerPath(dataPath)
-    batchId.foreach { id =>
-      if (!fsOf(spark, dataPath).exists(hp(ledger)))
-        graft.operators.Ledger.init(spark, ledger)
-      if (graft.operators.Ledger.contains(spark, ledger, id) ||
-          lineageHasBatch(spark, dataPath, id))
-        return latestVersion(spark, dataPath)
-    }
+    if (replayed(spark, dataPath, batchId))
+      return latestVersion(spark, dataPath)
     // Probe BEFORE staging too (appendLineage is the authoritative choke
     // point, but failing after a table-sized stage write helps nobody)
     requireAtomicBirth(spark, fsOf(spark, dataPath), dataPath)
-    // Empty batch = no-op, like commitUpsert's no-match path: committing
-    // a zero-row segment would burn a version (or wedge retries on a
-    // contentless segment), and streaming epochs are routinely empty.
-    // The emptiness probe and the z-key bounds ride ONE aggregate over
-    // the persisted batch (r18, guide §1.2 — `isEmpty` plus withZKey's
-    // broadcast bounds subquery were two extra job launches per commit,
-    // the fixed cost that dominated dribble-sized commits).
-    val (nRows, keyed) = Layout.countAndZKey(df, dims)
-    if (nRows == 0L) return latestVersion(spark, dataPath)
-    enforceConstraints(spark, dataPath, df, "commitAppend")
-    enforceWidening(spark, dataPath, df, "commitAppend")
-    val v = latestVersion(spark, dataPath) + 1
-    expectedVersion.filter(_ != v).foreach(ev =>
-      throw new CommitRaceLost(ev, dataPath,
-        s"commitAppend REFUSED before staging: the caller pinned " +
-          s"version $ev but the head of $dataPath now lands commits " +
-          s"at $v — another writer committed after the caller read " +
-          "the head. Nothing was staged; re-derive against the new " +
-          "head (rows stamped with the pinned epoch must not land " +
-          "at a different version)"))
-    val clustered = keyed
-      .repartitionByRange(files, col("zkey"))
-      .sortWithinPartitions(col("zkey"))
-      .drop("zkey")
-    interleaveForTests()
-    try {
-      appendLineage(spark, dataPath,
-        stampBatch(stageAndPromote(spark, dataPath, v, clustered, dims),
-          batchId), v)
-    } catch {
+    val latest = latestVersion(spark, dataPath)
+    try rewriteCommit(spark, dataPath, latest, Nil, identity, Some(df),
+      _ => dims, files, batchId, admit = () => {
+        enforceConstraints(spark, dataPath, df, "commitAppend")
+        enforceWidening(spark, dataPath, df, "commitAppend")
+        expectedVersion.filter(_ != latest + 1).foreach(ev =>
+          throw new CommitRaceLost(ev, dataPath,
+            s"commitAppend REFUSED before staging: the caller pinned " +
+              s"version $ev but the head of $dataPath now lands commits " +
+              s"at ${latest + 1} — another writer committed after the " +
+              "caller read the head. Nothing was staged; re-derive " +
+              "against the new head (rows stamped with the pinned epoch " +
+              "must not land at a different version)"))
+      })
+    catch {
       // an append reads and rewrites NOTHING — its conflict set is
       // empty, so serializing behind any winner is correct; bounded
       // only as a runaway-race backstop. A pinned expectedVersion
       // never retries: the retry would land past the pin.
       case _: CommitRaceLost if retries > 0 && expectedVersion.isEmpty =>
-        return commitAppendImpl(df, dataPath, dims, files, batchId,
-          retries - 1, expectedVersion)
+        appendBatch(df, dataPath, dims, files, batchId, retries - 1,
+          expectedVersion)
     }
-    crashForTests("ledger")
-    batchId.foreach(graft.operators.Ledger.record(spark, ledger, _))
-    v
   }
 
   /** The merge-retry conflict check: after losing the race from base
@@ -1337,75 +1443,47 @@ object TimeTravel {
     * a row of `doomedIds` disappear from version `latest + 1` on, while
     * every earlier version still reads them. Only the files that
     * actually hold a doomed row are rewritten (survivors re-staged as
-    * new files, originals logically removed); untouched files are
-    * shared between the old and new versions. Returns the new version,
-    * or the current one unchanged when nothing matched (a no-op delete
-    * commits nothing — replay-friendly like [[Layout.deleteByIds]]).
+    * one new file per rewritten file, originals logically removed);
+    * untouched files are shared between the old and new versions.
+    * Returns the new version, or the current one unchanged when nothing
+    * matched (a no-op delete commits nothing — replay-friendly like
+    * [[Layout.deleteByIds]]).
     *
     * The affected-file discovery composes two prunes before any data
     * moves: the lineage's own per-file `[min, max]` stats screen
-    * candidate files against the id frame (a metadata-sized join — the
-    * same conservative discriminator as [[Layout]]'s delete: a
-    * stats-less add row cannot be proven id-free and stays a
-    * candidate), then one semi-join of ONLY the candidate files' rows
-    * against the ids yields the files actually holding a doomed row.
+    * candidate files against the id frame ([[idCandidateFiles]]), then
+    * one semi-join of ONLY the candidate files' rows against the ids
+    * yields the files actually holding a doomed row ([[filesHolding]]).
     * Driver cost stays file-count-bounded; data cost is
-    * candidate-bounded, never table-bounded.
+    * candidate-bounded, never table-bounded. A lost race retries only
+    * when provably disjoint ([[requireRetryDisjoint]]), recomputing
+    * everything from the new head.
     */
   def commitDelete(spark: SparkSession, dataPath: String, idCol: String,
                    doomedIds: DataFrame, retries: Int = 3): Long = {
     val latest = latestVersion(spark, dataPath)
     require(latest >= 1, s"commitDelete: no committed table at $dataPath")
     val live = liveFileNames(spark, dataPath, latest)
-    // null doomed ids are inert BY the join semantics below (null never
-    // equals a data row's id), so the candidate screen drops them too.
-    // Materialized once (commitUpsert's rule): the id frame joins three
-    // times — stat screen, affected probe, survivor anti-join — and is
-    // routinely a derived tree (a change-feed filter), not a literal
-    // list; MEMORY_AND_DISK spills instead of OOMing on huge deletes.
-    val ids = doomedIds.select(doomedIds.columns.head).toDF(idCol)
-      .filter(col(idCol).isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val l = lineage(spark, dataPath)
-    val candidates = idCandidateFiles(l, live, idCol, ids)
-    if (candidates.isEmpty) return latest
-    // no broadcast hint on the id frame in either join: it is usually
-    // needle-sized but is not REQUIRED to be, and a literal hint would
-    // pin a build side that might be 10^9 ids at 100 TB — AQE picks the
-    // broadcast at runtime when the frame is small
-    val withFile = readFilesWidened(spark, dataPath, candidates)
-      .withColumn("__file",
-        element_at(split(input_file_name(), "/"), -1))
-    val affected = withFile
-      .join(ids, Seq(idCol), "left_semi")
-      .select(col("__file")).distinct()
-      .collect().map(r =>
-        Layout.decodePathComponent(r.getString(0))).toSeq.sorted
-    if (affected.isEmpty) return latest
-    val v = latest + 1
-    val survivors = readFilesWidened(spark, dataPath, affected)
-      .join(ids, Seq(idCol), "left_anti")
-      // survivor files: one per rewritten file keeps file sizes stable
-      .repartition(affected.size)
-    interleaveForTests()
-    try {
-      appendLineage(spark, dataPath,
-        stageAndPromote(spark, dataPath, v, survivors, statDims(l))
-          .unionByName(actionRows(spark,
-            affected.map(name => (v, "remove", name, 0L))),
-            allowMissingColumns = true), v)
-    } catch {
-      case _: CommitRaceLost if retries > 0 =>
-        // retry only when provably disjoint from every intervening
-        // commit; the retry RECOMPUTES candidates/affected from the new
-        // head, so nothing stale is reused
-        requireRetryDisjoint(spark, dataPath, latest, idCol, ids,
-          affected, "commitDelete")
-        return commitDelete(spark, dataPath, idCol, doomedIds, retries - 1)
+    // null doomed ids are inert BY the join semantics (null never equals
+    // a data row's id), so the candidate screen drops them too. The id
+    // frame joins three times — stat screen, affected probe, survivor
+    // anti-join — and is routinely a derived tree (a change-feed filter)
+    materialized(doomedIds.select(doomedIds.columns.head).toDF(idCol)
+        .filter(col(idCol).isNotNull).distinct()) { ids =>
+      val l = lineage(spark, dataPath)
+      val affected = filesHolding(spark, dataPath,
+        idCandidateFiles(l, live, idCol, ids),
+        _.join(ids, Seq(idCol), "left_semi"))
+      try rewriteCommit(spark, dataPath, latest, affected,
+        _.join(ids, Seq(idCol), "left_anti"), None, _ => statDims(l),
+        affected.size, cluster = false)
+      catch {
+        case _: CommitRaceLost if retries > 0 =>
+          requireRetryDisjoint(spark, dataPath, latest, idCol, ids,
+            affected, "commitDelete")
+          commitDelete(spark, dataPath, idCol, doomedIds, retries - 1)
+      }
     }
-    v
-    } finally ids.unpersist(false)
   }
 
   /** The stat dimensions the lineage already records (`min_<c>` column
@@ -1449,9 +1527,10 @@ object TimeTravel {
     * screen, then one candidate-bounded semi-join) finds the files that
     * actually hold a matched id, ONLY those are rewritten (their
     * survivors re-staged together with every update row as one freshly
-    * z-clustered generation), and untouched files are shared between the
-    * versions. Earlier versions still read the pre-update rows — an
-    * upsert is history-preserving like every commit here.
+    * z-clustered generation, [[rewriteCommit]]), and untouched files are
+    * shared between the versions. Earlier versions still read the
+    * pre-update rows — an upsert is history-preserving like every
+    * commit here.
     *
     * Contract guards, all loud: `updates` must not carry duplicate ids
     * (two updates for one key in one commit has no deterministic winner
@@ -1468,49 +1547,37 @@ object TimeTravel {
     * pre-commit CAS (see [[commitAppend]]): refuse with
     * [[CommitRaceLost]] before staging when the head has moved past
     * the caller's read, and never retry past the pin.
+    *
+    * `screenRanges` is an optional caller-supplied stat screen (e.g.
+    * [[Scd]]'s business-key range when the match id itself is a string
+    * with no lineage stats), applied by [[statScreen]]. INTERSECTION
+    * contract: every matched row must satisfy ALL supplied ranges, so a
+    * file failing ANY single range is pruned before any data is read.
+    * Do not pass ALTERNATIVE ranges (a row satisfying only one of them
+    * would be silently lost).
     */
   def commitUpsert(spark: SparkSession, dataPath: String, idCol: String,
                    updates: DataFrame, files: Int,
                    batchId: Option[String] = None,
                    retries: Int = 3,
                    screenRanges: Seq[Layout.ColRange] = Nil,
-                   expectedVersion: Option[Long] = None): Long = {
-    // Materialize the update batch ONCE: the merge evaluates it from
-    // five places (dup-guard aggregate, candidate ids ×3 joins, the
-    // staged generation), and `updates` is routinely an expensive tree
-    // — a change-feed join, an SCD delta. Recomputing it per use
-    // multiplied the whole source plan; MEMORY_AND_DISK spills instead
-    // of OOMing when a batch outgrows executor storage (the same
-    // materialize-the-merge-source move Delta's MERGE makes). Unpersist
-    // on every exit.
-    val upd = updates.filter(col(idCol).isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try commitUpsertImpl(spark, dataPath, idCol, upd, updates, files,
-      batchId, retries, screenRanges, expectedVersion)
-    finally upd.unpersist(false)
-  }
+                   expectedVersion: Option[Long] = None): Long =
+    materialized(updates.filter(col(idCol).isNotNull))(upsertBatch(spark,
+      dataPath, idCol, _, files, batchId, retries, screenRanges,
+      expectedVersion))
 
-  private def commitUpsertImpl(spark: SparkSession, dataPath: String,
-                   idCol: String, upd: DataFrame, updates: DataFrame,
-                   files: Int,
-                   batchId: Option[String],
-                   retries: Int,
-                   screenRanges: Seq[Layout.ColRange],
-                   expectedVersion: Option[Long]): Long = {
+  private def upsertBatch(spark: SparkSession, dataPath: String,
+                          idCol: String, upd: DataFrame, files: Int,
+                          batchId: Option[String], retries: Int,
+                          screenRanges: Seq[Layout.ColRange],
+                          expectedVersion: Option[Long]): Long = {
     val latest = latestVersion(spark, dataPath)
-    val ledger = commitLedgerPath(dataPath)
     // replay check FIRST, before the pin (commitAppend's ordering): a
     // verbatim replay of an already-landed pinned commit — same
     // batchId, same now-stale pin — must absorb as a no-op, not throw
     // CommitRaceLost; exactly-once means the replay's answer is the
     // landed version regardless of how stale its arguments look
-    batchId.foreach { id =>
-      if (!fsOf(spark, dataPath).exists(hp(ledger)))
-        graft.operators.Ledger.init(spark, ledger)
-      if (graft.operators.Ledger.contains(spark, ledger, id) ||
-          lineageHasBatch(spark, dataPath, id))
-        return latest
-    }
+    if (replayed(spark, dataPath, batchId)) return latest
     // the pre-commit CAS (see commitAppend): a caller that stamped its
     // rows with the target version pins it here, and a head that has
     // already moved refuses BEFORE any candidate read or staging —
@@ -1538,115 +1605,39 @@ object TimeTravel {
     enforceConstraints(spark, dataPath, upd, "commitUpsert")
     enforceWidening(spark, dataPath, upd, "commitUpsert")
     if (latest == 0)
-      return commitAppend(upd, dataPath, Seq(idCol), files, batchId,
-        expectedVersion = expectedVersion)
+      return appendBatch(upd, dataPath, Seq(idCol), files, batchId,
+        retries, expectedVersion)
     requireNoCollision(upd.columns.toSeq, Seq("__file"), "commitUpsert")
     val live = liveFileNames(spark, dataPath, latest)
     val l = lineage(spark, dataPath)
     // the distinct-id frame joins three times (stat screen, affected
-    // probe, survivor anti-join) — one shuffle, not three. Persisted
-    // IMMEDIATELY before the try whose finally unpersists it (ADVICE
-    // r17: lineage() between the persist and the try can throw on a
-    // retry-exhausted vanished-file race, leaking the pinned frame for
-    // the session lifetime — commitDelete's ordering).
-    val ids = upd.select(col(idCol)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // optional caller-supplied stat screen (e.g. [[Scd]]'s business-key
-    // range when the match id itself is a string with no lineage
-    // stats). INTERSECTION contract: every matched row must satisfy
-    // ALL supplied ranges, so a file failing ANY single range is
-    // pruned — the exactness-preserving cut happens before any data
-    // is read. Do not pass ALTERNATIVE ranges (a row satisfying only
-    // one of them would be silently lost).
-    // Same prunable/conservative rules as [[readAsOfPruned]] — an
-    // unrecorded column never prunes, null stats keep the file.
-    try {
-    val candidates = {
-      val byId = idCandidateFiles(l, live, idCol, ids)
-      val prunable = screenRanges.filter(r =>
-        Seq(s"min_${r.colName}", s"max_${r.colName}", s"nulls_${r.colName}")
-          .forall(l.columns.contains))
-      if (prunable.isEmpty || byId.isEmpty) byId
-      else prunable.foldLeft(
-          l.filter(col("action") === "add" &&
-            col("file_name").isin(byId: _*)))(
-          (df, r) => df.filter(Layout.rangeKeep(r)))
-        .select(col("file_name")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
+    // probe, survivor anti-join) — one shuffle, not three
+    materialized(upd.select(col(idCol)).distinct()) { ids =>
+      val affected = filesHolding(spark, dataPath,
+        statScreen(l, idCandidateFiles(l, live, idCol, ids), screenRanges),
+        _.join(ids, Seq(idCol), "left_semi"))
+      // cluster and record stats on the lineage's dims that still EXIST
+      // in the merged generation (an update batch may drop one); falling
+      // back to the id keeps the generation clustered by the column
+      // every prune here screens on
+      try rewriteCommit(spark, dataPath, latest, affected,
+        _.join(ids, Seq(idCol), "left_anti"), Some(upd),
+        cols => statDims(l).filter(cols.contains) match {
+          case Seq() => Seq(idCol)
+          case d => d
+        }, files, batchId)
+      catch {
+        // provably disjoint or refuse; the retry recomputes candidates
+        // and survivors from the new head. A pinned expectedVersion
+        // never retries (the retry would land past the pin — the caller
+        // re-derives instead).
+        case _: CommitRaceLost if retries > 0 && expectedVersion.isEmpty =>
+          requireRetryDisjoint(spark, dataPath, latest, idCol, ids,
+            affected, "commitUpsert")
+          upsertBatch(spark, dataPath, idCol, upd, files, batchId,
+            retries - 1, screenRanges, expectedVersion)
+      }
     }
-    // files actually holding a matched id — only these are rewritten.
-    // No broadcast hint on ids (commitDelete's rule): AQE picks it at
-    // runtime when the frame is small, and 10^9-id updates stay legal.
-    val affected: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else readFilesWidened(spark, dataPath, candidates)
-        .withColumn("__file",
-          element_at(split(input_file_name(), "/"), -1))
-        .join(ids, Seq(idCol), "left_semi")
-        .select(col("__file")).distinct()
-        .collect().map(r =>
-          Layout.decodePathComponent(r.getString(0))).toSeq.sorted
-    val v = latest + 1
-    // survivors of the rewritten files + every update row, one merged
-    // union (mergeSchema on the survivor read: affected files may span a
-    // schema change) re-clustered like any append so the new generation
-    // skips as well as the old
-    val survivors =
-      if (affected.isEmpty) None
-      else Some(readFilesWidened(spark, dataPath, affected)
-        .join(ids, Seq(idCol), "left_anti"))
-    val staged = survivors
-      .map(_.unionByName(upd, allowMissingColumns = true))
-      .getOrElse(upd)
-    // cluster and record stats on the lineage's dims that still EXIST in
-    // the merged schema (an update batch may drop one); falling back to
-    // the id keeps the generation clustered by the column every prune
-    // here screens on
-    val dims = {
-      val d = statDims(l).filter(staged.columns.contains)
-      if (d.isEmpty) Seq(idCol) else d
-    }
-    // The staged generation (survivor read + anti-join ∪ updates) fed
-    // BOTH withZKey's bounds aggregate and the staging write — two full
-    // evaluations of a join tree. Materialize it once (the same rule as
-    // the update batch itself), probe bounds from the cache, write from
-    // the cache (r18, guide §1.2/§5). Unpersisted on every exit. When
-    // nothing was affected, staged IS the already-persisted upd — no
-    // second persist (a double persist/unpersist pair would drop upd's
-    // cache from under the outer finally).
-    val stagedOwned = survivors.nonEmpty
-    val stagedMat =
-      if (stagedOwned)
-        staged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else staged
-    try {
-    val clustered = Layout.countAndZKey(stagedMat, dims)._2
-      .repartitionByRange(files, col("zkey"))
-      .sortWithinPartitions(col("zkey"))
-      .drop("zkey")
-    interleaveForTests()
-    try {
-      appendLineage(spark, dataPath,
-        stampBatch(stageAndPromote(spark, dataPath, v, clustered, dims)
-          .unionByName(actionRows(spark,
-            affected.map(name => (v, "remove", name, 0L))),
-            allowMissingColumns = true), batchId), v)
-    } catch {
-      case _: CommitRaceLost if retries > 0 && expectedVersion.isEmpty =>
-        // commitDelete's rule: provably disjoint or refuse; the retry
-        // recomputes candidates/survivors from the new head. A pinned
-        // expectedVersion never retries (the retry would land past
-        // the pin — the caller re-derives instead).
-        requireRetryDisjoint(spark, dataPath, latest, idCol, ids,
-          affected, "commitUpsert")
-        return commitUpsert(spark, dataPath, idCol, updates, files,
-          batchId, retries - 1, screenRanges)
-    }
-    crashForTests("ledger")
-    batchId.foreach(graft.operators.Ledger.record(spark, ledger, _))
-    v
-    } finally { if (stagedOwned) stagedMat.unpersist(false): Unit }
-    } finally ids.unpersist(false)
   }
 
   /** Atomic REPLACE WHERE — the backfill commit: version `latest + 1`
@@ -1667,16 +1658,17 @@ object TimeTravel {
     *
     * An EMPTY batch is a predicate DELETE in one commit; nothing
     * matching + empty batch = version-free no-op. File economics are
-    * the keyed faces': optional `screenRanges` (lineage min/max stats,
-    * [[readAsOfPruned]]'s prunable/conservative rules) cut candidate
-    * files before any data moves, then only files actually HOLDING a
-    * matching row rewrite — their non-matching survivors re-staged
-    * with the batch as one freshly z-clustered generation, untouched
-    * files shared between versions. Replace commits do not auto-retry
-    * a lost race ([[CommitRaceLost]] propagates): a predicate's
-    * conflict set is not provably disjoint by id stats, and refusal is
-    * the honest arbitration (re-derive against the new head).
-    * `batchId` gives exactly-once replays through the commit ledger.
+    * the keyed faces': optional `screenRanges` plus the predicate's own
+    * simple conjuncts ([[predicateScreen]]) cut candidate files by the
+    * lineage stats ([[statScreen]]) before any data moves, then only
+    * files actually HOLDING a matching row rewrite — their non-matching
+    * survivors re-staged with the batch as one freshly z-clustered
+    * generation ([[rewriteCommit]]), untouched files shared between
+    * versions. Replace commits do not auto-retry a lost race
+    * ([[CommitRaceLost]] propagates): a predicate's conflict set is not
+    * provably disjoint by id stats, and refusal is the honest
+    * arbitration (re-derive against the new head). `batchId` gives
+    * exactly-once replays through the commit ledger.
     */
   def commitReplaceWhere(spark: SparkSession, dataPath: String,
                          predicate: Column, batch: DataFrame, files: Int,
@@ -1686,87 +1678,33 @@ object TimeTravel {
     require(latest >= 1,
       s"commitReplaceWhere: no committed table at $dataPath — a first " +
         "batch is commitAppend, there is no region to replace")
-    val ledger = commitLedgerPath(dataPath)
-    batchId.foreach { id =>
-      if (!fsOf(spark, dataPath).exists(hp(ledger)))
-        graft.operators.Ledger.init(spark, ledger)
-      if (graft.operators.Ledger.contains(spark, ledger, id) ||
-          lineageHasBatch(spark, dataPath, id))
-        return latest
-    }
+    if (replayed(spark, dataPath, batchId)) return latest
     requireAtomicBirth(spark, fsOf(spark, dataPath), dataPath)
     requireNoCollision(batch.columns.toSeq, Seq("__file"),
       "commitReplaceWhere")
-    // region contract: one batch-sized aggregate names the offenders
-    val out = batch.agg(
-      sum(when(predicate <=> lit(true), 0L).otherwise(1L))).head()
-    val nOut = if (out.isNullAt(0)) 0L else out.getLong(0)
-    require(nOut == 0L,
-      s"commitReplaceWhere: $nOut batch rows do NOT match the replace " +
-        "predicate — a backfill writes only inside the region it " +
-        "replaces (widen the predicate or trim the batch)")
-    enforceConstraints(spark, dataPath, batch, "commitReplaceWhere")
-    enforceWidening(spark, dataPath, batch, "commitReplaceWhere")
-    val live = liveFileNames(spark, dataPath, latest)
-    val l = lineage(spark, dataPath)
-    val candidates = {
-      val prunable = screenRanges.filter(r =>
-        Seq(s"min_${r.colName}", s"max_${r.colName}", s"nulls_${r.colName}")
-          .forall(l.columns.contains))
-      // the AUTOMATIC screen: simple comparison conjuncts of the
-      // predicate itself (col = v, col >/</>=/<= v, col IN (...))
-      // against the lineage's recorded stats — so the common backfill
-      // shapes prune with NO caller-supplied ranges
-      val auto = predicateScreen(l, predicate)
-      if (prunable.isEmpty && auto.isEmpty) live
-      else {
-        val base = prunable.foldLeft(
-            l.filter(col("action") === "add" &&
-              col("file_name").isin(live: _*)))(
-            (df, r) => df.filter(Layout.rangeKeep(r)))
-        auto.fold(base)(base.filter)
-          .select(col("file_name")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      }
+    val inRegion = predicate <=> lit(true)
+    materialized(batch) { b =>
+      // region contract: one shuffle-free count of the offenders, which
+      // is also the pass that builds the batch's cache (an aggregate
+      // here would add an exchange and an adaptive cache-building stage)
+      val nOut = b.filter(!inRegion).queryExecution.toRdd.count()
+      require(nOut == 0L,
+        s"commitReplaceWhere: $nOut batch rows do NOT match the replace " +
+          "predicate — a backfill writes only inside the region it " +
+          "replaces (widen the predicate or trim the batch)")
+      enforceConstraints(spark, dataPath, b, "commitReplaceWhere")
+      enforceWidening(spark, dataPath, b, "commitReplaceWhere")
+      val l = lineage(spark, dataPath)
+      // widened-target candidate reads: the predicate may reference a
+      // column older files lack (reads null there → no match → survive)
+      // or one a later commit widened
+      val affected = filesHolding(spark, dataPath,
+        statScreen(l, liveFileNames(spark, dataPath, latest), screenRanges,
+          predicateScreen(l, predicate)),
+        _.filter(inRegion))
+      rewriteCommit(spark, dataPath, latest, affected, _.filter(!inRegion),
+        Some(b), cols => statDims(l).filter(cols.contains), files, batchId)
     }
-    // files actually holding a matching row — only these rewrite.
-    // widened-target candidate reads: the predicate may reference a
-    // column older files lack (reads null there → no match → survive)
-    // or one a later commit widened
-    val affected: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else readFilesWidened(spark, dataPath, candidates)
-        .withColumn("__file",
-          element_at(split(input_file_name(), "/"), -1))
-        .filter(predicate <=> lit(true))
-        .select(col("__file")).distinct()
-        .collect().map(r =>
-          Layout.decodePathComponent(r.getString(0))).toSeq.sorted
-    if (affected.isEmpty && batch.isEmpty) return latest
-    val v = latest + 1
-    val survivors =
-      if (affected.isEmpty) None
-      else Some(readFilesWidened(spark, dataPath, affected)
-        .filter(!(predicate <=> lit(true))))
-    val staged = survivors
-      .map(_.unionByName(batch, allowMissingColumns = true))
-      .getOrElse(batch)
-    val dims = statDims(l).filter(staged.columns.contains)
-    val clustered =
-      if (dims.isEmpty) staged.repartition(files)
-      else Layout.withZKey(staged, dims)
-        .repartitionByRange(files, col("zkey"))
-        .sortWithinPartitions(col("zkey"))
-        .drop("zkey")
-    interleaveForTests()
-    appendLineage(spark, dataPath,
-      stampBatch(stageAndPromote(spark, dataPath, v, clustered, dims)
-        .unionByName(actionRows(spark,
-          affected.map(name => (v, "remove", name, 0L))),
-          allowMissingColumns = true), batchId), v)
-    crashForTests("ledger")
-    batchId.foreach(graft.operators.Ledger.record(spark, ledger, _))
-    v
   }
 
   /** The automatic stat screen [[commitReplaceWhere]] derives from its
@@ -1844,29 +1782,20 @@ object TimeTravel {
   }
 
   /** Rewrite the live file set as one freshly z-clustered generation
-    * (version `latest + 1`): adds the compacted files, logically
-    * removes every prior live file. As-of reads at EVERY earlier
-    * version are untouched — the old files stay on disk until
-    * [[vacuum]] — which is the whole point of logical removal. Returns
-    * the new version.
+    * (version `latest + 1`, [[rewriteCommit]]): adds the compacted
+    * files, logically removes every prior live file. As-of reads at
+    * EVERY earlier version are untouched — the old files stay on disk
+    * until [[vacuum]] — which is the whole point of logical removal.
+    * Returns the new version; a table with no live files (every row
+    * deleted) commits nothing and returns the head.
     */
   def compact(spark: SparkSession, dataPath: String, dims: Seq[String],
               files: Int): Long = {
     val latest = latestVersion(spark, dataPath)
     require(latest >= 1, s"compact: no committed table at $dataPath")
-    val live = liveFileNames(spark, dataPath, latest)
-    val v = latest + 1
-    val clustered = Layout.withZKey(
-        readFilesWidened(spark, dataPath, live), dims)
-      .repartitionByRange(files, col("zkey"))
-      .sortWithinPartitions(col("zkey"))
-      .drop("zkey")
-    appendLineage(spark, dataPath,
-      stageAndPromote(spark, dataPath, v, clustered, dims)
-        .unionByName(actionRows(spark,
-          live.map(name => (v, "remove", name, 0L))),
-          allowMissingColumns = true), v)
-    v
+    rewriteCommit(spark, dataPath, latest,
+      liveFileNames(spark, dataPath, latest), identity, None, _ => dims,
+      files)
   }
 
   /** Size-aware INCREMENTAL compaction — the 100 TB form: bin-pack
@@ -1899,18 +1828,8 @@ object TimeTravel {
     if (small.size < minInputFiles) return latest
     val outFiles = math.max(1L,
       (small.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
-    val v = latest + 1
-    val clustered = Layout.withZKey(
-        readFilesWidened(spark, dataPath, small.map(_._1)), dims)
-      .repartitionByRange(outFiles, col("zkey"))
-      .sortWithinPartitions(col("zkey"))
-      .drop("zkey")
-    appendLineage(spark, dataPath,
-      stageAndPromote(spark, dataPath, v, clustered, dims)
-        .unionByName(actionRows(spark,
-          small.map { case (name, _) => (v, "remove", name, 0L) }),
-          allowMissingColumns = true), v)
-    v
+    rewriteCommit(spark, dataPath, latest, small.map(_._1), identity, None,
+      _ => dims, outFiles)
   }
 
   /** Earliest version still fully readable: 1 until a [[vacuum]] has
@@ -1978,23 +1897,11 @@ object TimeTravel {
   def readAsOfPruned(spark: SparkSession, dataPath: String, version: Long,
                      ranges: Seq[Layout.ColRange]): DataFrame = {
     val base = readAsOf(spark, dataPath, version) // validation + corruption
-    val live = liveFileNames(spark, dataPath, version)
-    val l = lineage(spark, dataPath)
     // prune only on dimensions the lineage has ever recorded; a range
     // over an unrecorded column still row-filters below
-    val prunable = ranges.filter(r =>
-      Seq(s"min_${r.colName}", s"max_${r.colName}", s"nulls_${r.colName}")
-        .forall(l.columns.contains))
-    val files =
-      if (prunable.isEmpty) live
-      else {
-        val kept = prunable.foldLeft(
-            l.filter(col("version") <= version && col("action") === "add"))(
-            (df, r) => df.filter(Layout.rangeKeep(r)))
-          .select(col("file_name"))
-          .collect().map(_.getString(0)).toSet
-        live.filter(kept.contains)
-      }
+    val files = statScreen(
+      lineage(spark, dataPath).filter(col("version") <= version),
+      liveFileNames(spark, dataPath, version), ranges)
     val pruned =
       if (files.isEmpty) base.limit(0)
       else readFilesWidened(spark, dataPath, files)

@@ -2199,4 +2199,99 @@ class TimeTravelSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       TimeTravel.readAsOf(spark, dir, 1L).collect())
   }
+
+  // ---- the one rewrite-commit core under every write face ----------
+
+  test("every write face in one fixture: each launches at most its " +
+      "pinned jobs, and every version's history row is unchanged") {
+    val dir = tmpDir("faces")
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def face(name: String)(commit: => Long): Unit =
+      jobs(name) = jobsDuring(commit: Unit)
+    face("append_cold")(
+      TimeTravel.commitAppend(batch(0), dir, Seq("id"), files = 2))
+    face("append")(TimeTravel.commitAppend(batch(1), dir, Seq("id"),
+      files = 2, batchId = Some("faces_b1")))
+    face("append_warm")(TimeTravel.commitAppend(batch(2), dir, Seq("id"),
+      files = 2, batchId = Some("faces_b2")))
+    face("upsert")(TimeTravel.commitUpsert(spark, dir, "id",
+      batch(0).filter(col("id") < 25L).withColumn("v", lit(-1L))
+        .unionByName(batch(3).filter(col("id") < 310L)),
+      files = 2, batchId = Some("faces_up")))
+    face("delete")(TimeTravel.commitDelete(spark, dir, "id",
+      spark.range(0L, 400L).filter(col("id") % 10 === 7L).toDF("id")))
+    face("replace_where")(TimeTravel.commitReplaceWhere(spark, dir,
+      col("grp") === 1L,
+      spark.range(500L, 510L)
+        .select(col("id"), lit(1L).as("grp"), (col("id") * 3).as("v")),
+      files = 2, batchId = Some("faces_rw")))
+    face("compact_small")(
+      TimeTravel.compactSmall(spark, dir, Seq("id"), 1L << 20))
+    face("compact")(TimeTravel.compact(spark, dir, Seq("id"), files = 2))
+    // ceilings: each face's jobs on this fixture when the faces were
+    // six hand-copied pipelines (same session, same inputs)
+    val ceiling = Map("append_cold" -> 6, "append" -> 10,
+      "append_warm" -> 6, "upsert" -> 20, "delete" -> 11,
+      "replace_where" -> 10, "compact_small" -> 5, "compact" -> 6)
+    info(s"jobs per face: $jobs")
+    jobs.foreach { case (f, n) =>
+      assert(n <= ceiling(f), s"$f launched $n jobs, ceiling ${ceiling(f)}")
+    }
+    // (version, n_adds, n_removes, rows_added): the delete keeps one
+    // file per rewritten file, the merges and compactions z-cluster
+    // into `files`, compactSmall packs everything into one target file
+    val hist = TimeTravel.history(spark, dir)
+      .select("version", "n_adds", "n_removes", "rows_added").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+    assert(hist == Seq((1L, 2L, 0L, 100L), (2L, 2L, 0L, 100L),
+      (3L, 2L, 0L, 100L), (4L, 2L, 1L, 60L), (5L, 7L, 7L, 279L),
+      (6L, 2L, 7L, 227L), (7L, 1L, 2L, 227L), (8L, 2L, 1L, 227L)))
+    // and the head holds exactly the modelled rows
+    val model = (0L until 310L)
+      .map(i => (i, i % 5, if (i < 25L) -1L else i * 3))
+      .filter(r => r._1 % 10 != 7L && r._2 != 1L) ++
+      (500L until 510L).map(i => (i, 1L, i * 3))
+    assert(TimeTravel.read(spark, dir).select("id", "grp", "v").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      model.toSet)
+  }
+
+  test("each batch face evaluates its batch exactly once: a counting " +
+      "non-deterministic UDF sees every batch row one time") {
+    val evals = spark.sparkContext.longAccumulator("batch_evals")
+    val counted = udf((x: Long) => { evals.add(1L); x }).asNondeterministic()
+    // ten rows through the counting UDF, all inside replaceWhere's region
+    def tenRows: DataFrame = spark.range(500L, 510L)
+      .select(counted(col("id")).as("id"), lit(1L).as("grp"),
+        (col("id") * 3).as("v"))
+    val faces: Seq[(String, String => Long)] = Seq(
+      "append" -> (dir => TimeTravel.commitAppend(tenRows, dir, Seq("id"),
+        files = 2)),
+      "upsert" -> (dir => TimeTravel.commitUpsert(spark, dir, "id",
+        tenRows, files = 2)),
+      "replace_where" -> (dir => TimeTravel.commitReplaceWhere(spark, dir,
+        col("grp") === 1L, tenRows, files = 2)))
+    faces.foreach { case (name, commit) =>
+      val dir = tmpDir(s"once_$name")
+      TimeTravel.commitAppend(batch(0), dir, Seq("id"), files = 2)
+      evals.reset()
+      assert(commit(dir) == 2L, name)
+      assert(evals.value == 10L,
+        s"$name evaluated its 10-row batch ${evals.value} times")
+      assert(TimeTravel.read(spark, dir)
+        .filter(col("id") >= 500L).count() == 10L, name)
+    }
+  }
+
+  test("compact and compactSmall of a table whose rows were all deleted " +
+      "commit nothing and return the head") {
+    val dir = tmpDir("compact_empty")
+    TimeTravel.commitAppend(batch(0), dir, Seq("id"), files = 2)
+    assert(TimeTravel.commitDelete(spark, dir, "id",
+      spark.range(0L, 100L).toDF("id")) == 2L)
+    assert(TimeTravel.compact(spark, dir, Seq("id"), files = 2) == 2L)
+    assert(TimeTravel.compactSmall(spark, dir, Seq("id"), 1L << 20) == 2L)
+    assert(TimeTravel.latestVersion(spark, dir) == 2L)
+  }
 }
