@@ -3,6 +3,7 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -127,9 +128,10 @@ object PlanFingerprint {
       case other => other.nodeName.replaceAll("\\s", "")
     }
     // engine-native expression classes used anywhere in this node (sorted
-    // multiset of distinct names — order-insensitive, id-free)
+    // multiset of distinct names — order-insensitive, id-free); a
+    // graft.functions.Param is a literal value, ignored like any other
     val native = plan.expressions.flatMap(_.collect {
-      case e if e.getClass.getName.startsWith("graft.") =>
+      case e if e.getClass.getName.startsWith("graft.") && !e.isInstanceOf[Literal] =>
         e.getClass.getSimpleName
     }).distinct.sorted
     val tagged =

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructType}
 
+import graft.functions.Param
 import graft.operators._
 
 /** The reference's three entry flows (SURVEY.md §3) as pure transforms over
@@ -24,7 +25,10 @@ import graft.operators._
   * queries (webserver/server.py:130-256), and derives the remaining
   * frames on the driver. `compare`/`bookmarks` handle all keys in a
   * single pass instead of re-running the stack per key
-  * (server.py:456-473, 561-580).
+  * (server.py:456-473, 561-580). Every per-request value — the natural
+  * key, the geographic id, the compared key list, the window bounds — is
+  * bound as a [[graft.functions.Param]], so the generated code does not
+  * depend on it: one compiled class per route shape, not one per key.
   */
 object Analytics {
 
@@ -45,21 +49,24 @@ object Analytics {
 
   /** One key's service requests inside the window. */
   private def requestsOf(sr: DataFrame, geoId: Long, w: Window): DataFrame =
-    windowed(sr.filter(col("geographic_id") === geoId), "created_date", w)
+    windowed(sr.filter(Param.equalTo(sr, "geographic_id", geoId)), "created_date", w)
 
   /** One key's sales (joined to their properties) inside the window. */
   private def salesOf(sale: DataFrame, property: DataFrame, geoId: Long,
                       w: Window): DataFrame =
     windowed(
-      sale.join(property.filter(col("geographic_id") === geoId), Seq("property_id")),
+      sale.join(property.filter(Param.equalTo(property, "geographic_id", geoId)),
+        Seq("property_id")),
       "sale_date", w)
 
   /** Geo point lookup: natural key → geographic_id row; empty frame = the
     * reference's 404 (webserver/server.py:135-149).
     */
   def geoLookup(geo: DataFrame, borough: Int, block: Int, lot: Int): DataFrame =
-    Filters.naturalKey(geo, Map(
-      "borough_code" -> borough, "block_code" -> block, "lot_code" -> lot))
+    Filters.naturalKey(geo, bbl(borough, block, lot))
+
+  private def bbl(borough: Int, block: Int, lot: Int): Map[String, Any] =
+    Map("borough_code" -> borough, "block_code" -> block, "lot_code" -> lot)
 
   /** [[geoLookup]]'s id, or None for an unknown key. */
   def lookupId(geo: DataFrame, borough: Int, block: Int, lot: Int): Option[Long] =
@@ -72,9 +79,8 @@ object Analytics {
     * are simply absent (the compare and bookmarks contract).
     */
   def resolveKeys(geo: DataFrame, keys: Seq[(Int, Int, Int)]): Seq[Long] = {
-    val keyPred = keys.map { case (b, bl, lt) =>
-      col("borough_code") === b && col("block_code") === bl && col("lot_code") === lt
-    }.reduceOption(_ || _).getOrElse(lit(false))
+    val keyPred = keys.map { case (b, bl, lt) => Filters.keyMatch(geo, bbl(b, bl, lt)) }
+      .reduceOption(_ || _).getOrElse(lit(false))
     geo.filter(keyPred).select(col("geographic_id"))
       .collect().map(_.getAs[Long]("geographic_id")).toSeq
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.Param
+
 /** Bookmark state — the reference's only mutable state: a per-user ordered
   * BBL list with toggle semantics (add if absent, remove if present,
   * insertion order preserved; reference webserver/server.py:538-558).
@@ -70,8 +72,8 @@ object Bookmarks {
     val next =
       if (!fs.exists(new org.apache.hadoop.fs.Path(path))) 1L
       else {
-        val m = spark.read.parquet(path)
-          .filter(col("userId") === userId)
+        val events = spark.read.parquet(path)
+        val m = events.filter(Param.equalTo(events, "userId", userId))
           .agg(max(col("seq"))).head()
         if (m.isNullAt(0)) 1L else m.getLong(0) + 1L
       }
@@ -102,8 +104,8 @@ object Bookmarks {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return Seq.empty
     import spark.implicits._
-    spark.read.parquet(path).as[ToggleEvent]
-      .filter(col("userId") === userId)
+    val events = spark.read.parquet(path).as[ToggleEvent]
+    events.filter(Param.equalTo(events, "userId", userId))
       .collect().sortBy(e => (e.seq, e.bbl))
       .foldLeft(Seq.empty[String])((acc, e) => toggle(acc, e.bbl))
   }

@@ -1,8 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, TimestampAddInterval}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, DayTimeIntervalType, TimestampNTZType, TimestampType}
+
+import graft.functions.Param
 
 /** Generic relational operator families re-expressing the reference's query
   * semantics (SURVEY.md §2) as composable `DataFrame => DataFrame`
@@ -33,23 +37,61 @@ object Filters {
   /** Composite natural-key equality filter — the reference's BBL point
     * lookup (reference: webserver/server.py:135-144, key uniqueness
     * schema.sql:17). Conjunction of per-column equalities; pushed to the
-    * scan.
+    * scan. The key values are bound as [[graft.functions.Param]]s, so a new
+    * key reuses the compiled plan of the last.
     */
   def naturalKey(df: DataFrame, key: Map[String, Any]): DataFrame =
-    df.filter(key.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
+    df.filter(keyMatch(df, key))
+
+  /** [[naturalKey]]'s predicate. */
+  def keyMatch(df: DataFrame, key: Map[String, Any]): Column =
+    key.map { case (c, v) => Param.equalTo(df, c, v) }.reduce(_ && _)
 
   /** Optional-bound date range — the reference builds the SQL fragment only
     * when a bound is present (reference: webserver/server.py:156-167); absent
     * bound = all-time (bookmarks path, server.py:572-576). `Option.fold`
     * composition keeps the plan free of always-true predicates.
+    *
+    * Rows with `to_timestamp(start) <= dateCol < to_timestamp(end) + 1 day`.
+    * Each bound is computed on the driver under the session's parse, zone
+    * and ANSI rules and bound as a [[graft.functions.Param]] of the
+    * column's own type (a date column gets date bounds), so no cast lands
+    * on either side for the optimizer to fold into an inlined literal.
     */
   def dateWindow(df: DataFrame, dateCol: String,
                  start: Option[String], end: Option[String]): DataFrame = {
-    val lower = start.fold(lit(true))(s => col(dateCol) >= to_timestamp(lit(s)))
-    val upper = end.fold(lit(true))(e =>
-      col(dateCol) < to_timestamp(lit(e)) + expr("interval 1 day"))
+    val lower = start.fold(lit(true))(s => col(dateCol) >= windowBound(df, dateCol, s, 0))
+    val upper = end.fold(lit(true))(e => col(dateCol) < windowBound(df, dateCol, e, 1))
     df.filter(lower && upper)
   }
+
+  /** `to_timestamp(s) + days` as a bound on `dateCol`: in the column's
+    * type when it is a date or timestamp, else in the session's timestamp
+    * type (the column is then coerced as before). A date `d` is inside a
+    * timestamp bound `t` exactly when `d >= ceil(t)` to a date, which is
+    * the bound a date column gets. */
+  private def windowBound(df: DataFrame, dateCol: String, s: String,
+                          days: Int): Column = {
+    val conf = Param.confOf(df)
+    val tz = Some(conf.sessionLocalTimeZone)
+    val tsType = conf.timestampType
+    val parsed = Literal(Cast(Literal(s), tsType, tz, conf.ansiEnabled).eval(), tsType)
+    val t = if (days == 0) parsed else Literal(TimestampAddInterval(parsed,
+      Literal(days * MicrosPerDay, DayTimeIntervalType(DayTimeIntervalType.DAY)),
+      tz).eval(), tsType)
+    def as(to: DataType): Any = Cast(t, to, tz).eval()
+    Param.typeOf(df, dateCol) match {
+      case Some(ts @ (TimestampType | TimestampNTZType)) => Param.column(as(ts), ts)
+      case Some(DateType) =>
+        val ceil = Option(as(DateType)).map { case d: Int =>
+          if (Cast(Literal(d, DateType), tsType, tz).eval() == t.value) d else d + 1
+        }
+        Param.column(ceil.getOrElse(null), DateType)
+      case _ => Param.column(t.value, tsType)
+    }
+  }
+
+  private val MicrosPerDay = 86400L * 1000 * 1000
 
   /** IN-list membership ("active" status set, reference:
     * webserver/server.py:172).
@@ -595,16 +637,17 @@ object TimeSeries {
   /** Month spine: one row per calendar month in [start, end] — replaces the
     * reference's driver-side month-increment loop
     * (webserver/server.py:319-329) with `sequence` + `explode`: a single
-    * constant-foldable expression the optimizer broadcasts.
+    * constant-foldable expression the optimizer broadcasts. Like the
+    * loop, a start month after the end month yields no months.
     */
   def monthSpine(spark: org.apache.spark.sql.SparkSession,
                  start: String, end: String): DataFrame = {
     import spark.implicits._
+    val s = date_trunc("month", to_timestamp(col("s")))
+    val e = date_trunc("month", to_timestamp(col("e")))
     Seq((start, end)).toDF("s", "e")
-      .select(explode(sequence(
-        date_trunc("month", to_timestamp(col("s"))),
-        date_trunc("month", to_timestamp(col("e"))),
-        expr("interval 1 month"))).as("month_ts"))
+      .select(explode(when(s <= e, sequence(s, e, expr("interval 1 month"))))
+        .as("month_ts"))
       .select(date_format(col("month_ts"), "yyyy-MM").as("month"))
   }
 
@@ -1044,7 +1087,7 @@ object Compare {
     */
   def sideBySide(df: DataFrame, keyCol: String, keys: Seq[Any],
                  aggs: Seq[Column]): DataFrame =
-    df.filter(col(keyCol).isin(keys: _*))
+    df.filter(col(keyCol).isin(keys.map(Param.against(df, keyCol, _)): _*))
       .groupBy(col(keyCol))
       .agg(aggs.head, aggs.tail: _*)
       .orderBy(col(keyCol))

@@ -77,6 +77,17 @@ class AnalyticsSpec extends SparkSpec {
     assert(rows.map(_.getLong(1)).toSeq == Seq(4L, 3L, 0L, 3L, 3L, 0L))
   }
 
+  test("a reversed trend window yields no months, not a sequence error " +
+      "(server.py:319-329)") {
+    assert(Analytics.requestTrend(spark, sr, 101L, "2024-12-01", "2024-01-01")
+      .collect().isEmpty)
+    assert(Analytics.salesTrend(spark, sale, prop, 101L, "2024-12-01",
+      "2024-01-01").collect().isEmpty)
+    // one shared month is a one-month spine
+    assert(Analytics.requestTrend(spark, sr, 101L, "2024-01-31", "2024-01-01")
+      .collect().map(_.getString(0)).toSeq == Seq("2024-01"))
+  }
+
   test("sales trend: zero-filled counts but NULL medians for empty months") {
     val rows = Analytics.salesTrend(spark, sale, prop, 101L,
       "2024-01-01", "2024-04-30").collect()

@@ -231,4 +231,62 @@ class DashboardSpec extends SparkSpec {
       assert(status == 200)
     } finally srv.stop()
   }
+
+  // ------------------------------------------------------------------
+  // per-request values bound outside the generated code
+  // ------------------------------------------------------------------
+
+  test("a key and a window not seen before compile no new classes on " +
+      "any route") {
+    val srv = new AnalyticsServer(spark, lake("geo"), lake("sr"), lake("ct"),
+      lake("sale"), lake("prop"))
+    val port = srv.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def get(path: String): Unit = {
+      val r = client.send(java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://localhost:$port$path")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, s"$path: ${r.body()}")
+    }
+    val routes = Seq("/analytics/%s?%s", "/trends/%s?type=service_requests&%s",
+      "/trends/%s?type=sales&%s", "/export/%s?type=complaints&%s",
+      "/export/%s?type=sales&%s", "/compare?bbl1=%s&bbl2=4-999-1&%s")
+    // the fresh key (geo 102) has requests and a sale inside the fresh window
+    val fresh = ("3-100-55", "start_date=2023-02-01&end_date=2024-11-30")
+    // each route is warmed right before its fresh request: Spark's code
+    // cache is a small segmented LRU shared by the whole JVM, so a route
+    // warmed earlier may have been evicted by the routes after it
+    try {
+      val compiles = routes.map { r =>
+        get(r.format("1-42-7", "start_date=2024-01-01&end_date=2024-12-31"))
+        r -> compilesDuring(get(r.format(fresh._1, fresh._2)))
+      }
+      assert(compiles.forall(_._2 == 0), compiles)
+    } finally srv.stop()
+  }
+
+  test("the scans keep the bound key and window as pushed filters") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.sources._
+    val w = Window(Some("2023-02-01"), Some("2024-11-30"))
+    // the filters the scan hands the parquet reader (a protected lazy
+    // val in Scala, a public method in bytecode)
+    def pushed(df: DataFrame): Map[String, Seq[Filter]] =
+      df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.head.getName -> s.getClass
+          .getMethod("pushedDownFilters").invoke(s).asInstanceOf[Seq[Filter]]
+      }.toMap
+    def dateBounds(c: String): Seq[Filter] =
+      Seq(GreaterThanOrEqual(c, Date.valueOf("2023-02-01")),
+        LessThan(c, Date.valueOf("2024-12-01")))
+    val geoScan = pushed(Analytics.geoLookup(lake("geo"), 3, 100, 55))("geo")
+    Seq(EqualTo("borough_code", 3), EqualTo("block_code", 100),
+      EqualTo("lot_code", 55)).foreach(f => assert(geoScan.contains(f), geoScan))
+    val srScan = pushed(Analytics.requestsByType(lake("sr"), lake("ct"), 102L, w))("sr")
+    (EqualTo("geographic_id", 102L) +: dateBounds("created_date"))
+      .foreach(f => assert(srScan.contains(f), srScan))
+    val sales = pushed(Analytics.salesListing(lake("sale"), lake("prop"), 102L, w))
+    assert(sales("prop").contains(EqualTo("geographic_id", 102L)), sales)
+    dateBounds("sale_date").foreach(f => assert(sales("sale").contains(f), sales))
+  }
 }

@@ -141,6 +141,17 @@ class ServerSpec extends SparkSpec {
     }
   }
 
+  test("GET /trends: a start month after the end month serves no months") {
+    withServer() { (port, _) =>
+      Seq("service_requests", "sales").foreach { t =>
+        val r = get(port,
+          s"/trends/1-42-7?type=$t&start_date=2024-12-01&end_date=2024-01-01")
+        assert(r.statusCode() == 200, r.body())
+        assert(r.body() == "[]")
+      }
+    }
+  }
+
   test("GET /compare answers both keys in one frame; unknowns are absent") {
     withServer() { (port, _) =>
       val r = get(port, "/compare?bbl1=1-42-7&bbl2=3-100-55")

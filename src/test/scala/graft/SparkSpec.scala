@@ -32,6 +32,17 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(l)
     n.get()
   }
+
+  /** Classes compiled while `body` runs — the twin of [[jobsDuring]] for
+    * the generated-code contracts ("a new key compiles nothing"). Spark
+    * records one `CodegenMetrics` compilation per code-cache miss, on the
+    * driver and (in local mode, the same JVM) on the executors. */
+  protected def compilesDuring(body: => Unit): Long = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = h.getCount
+    body
+    h.getCount - before
+  }
 }
 
 object SparkSpec {
