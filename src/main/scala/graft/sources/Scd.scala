@@ -42,8 +42,9 @@ import org.apache.spark.sql.functions._
   * dimension — are skipped by metadata before any data is read; a
   * closed row rewrites exactly once (by the commit that closes it)
   * and never again. Cost tracks the batch and the CURRENT table's
-  * touched files, never the history ([[graft.ScdCurve]] measures the
-  * decade).
+  * touched files, never the history (ScdSpec pins it: a slice merge
+  * and its no-op re-merge read the same records at ×1/×4/×10 closed
+  * history).
   *
   * Concurrency contract: SCD merges on one table are inherently
   * overlapping commits (two merges both adjudicate "current"), so this

@@ -16,12 +16,12 @@ class ContractSpec extends SparkSpec {
   }
 
   test("every query analyzes against sf0.001 (schema-level contract)") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, "/root/testdata/sf0.001")
-      assert(df.schema.fields.nonEmpty, name)
+    CatalogFrames.at(spark, "/root/testdata/sf0.001").foreach { f =>
+      val name = f.name
+      assert(f.schema.fields.nonEmpty, name)
       // oracle-checked queries must alias every column (no generated names)
       if (SparkEntry.oracleSql.contains(name)) {
-        val bad = df.columns.filter(c => c.contains("(") || c.contains(")"))
+        val bad = f.columns.filter(c => c.contains("(") || c.contains(")"))
         assert(bad.isEmpty, s"$name has unaliased columns: ${bad.mkString(",")}")
       }
     }

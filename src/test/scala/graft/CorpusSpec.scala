@@ -288,6 +288,25 @@ class CorpusSpec extends SparkSpec {
     val foreign = score(Seq((99L, "nope nope2")).toDF("doc_id", "text"))
     assert(foreign(99L)._1 == 1)
     assert(math.abs(foreign(99L)._2 - 1.0 / 6.0) < 1e-15)
+
+    // an append reads its batch and NO history: the records it reads
+    // are the same over a 10-doc and a 1000-doc history
+    def docs(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select(col("id").as("doc_id"),
+        concat_ws(" ", lit("w"), (col("id") % 37).cast("string"),
+          (col("id") % 11).cast("string")).as("text"))
+    val fileBatch = s"$path/batch_file"
+    docs(1000000L, 1000050L).write.parquet(fileBatch)
+    val reads = Seq(10L, 1000L).map { n =>
+      val p = s"$path/history_$n"
+      Corpus.saveLmStats(docs(0L, n), p, "doc_id", "text")
+      readDuring {
+        assert(Corpus.appendLmStats(spark.read.parquet(fileBatch), p,
+          "doc_id", "text", "b1"))
+      }.records
+    }
+    assert(reads.distinct.size == 1 && reads.head > 0L,
+      s"appends over 10- and 1000-doc histories read $reads records")
   }
 
   test("LM append converges after a crashed promotion; ledger scales without collecting") {
@@ -475,6 +494,25 @@ class CorpusSpec extends SparkSpec {
         Seq("web" -> 8L, "code" -> 100L))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got.keySet.subsetOf(bigger))
+
+    // the scale claim: one dominant group stays parallel. On a one-group
+    // corpus the plain window's shuffle hands every row to ONE task; the
+    // binned cumsum's widest task holds a fraction of them. Adaptive
+    // execution is off so partition coalescing cannot merge the tasks.
+    val oneGroup = spark.range(0L, 4000L).select(col("id").as("doc_id"),
+      lit("a b c").as("text"), lit("web").as("source"))
+    def maxRowsPerTask(df: org.apache.spark.sql.DataFrame): Long =
+      readDuring(df.write.format("noop").mode("overwrite").save())
+        .shuffleRecords.values.maxBy(_.sum).max
+    val (binnedMax, windowMax) =
+      withConf(Seq("spark.sql.adaptive.enabled" -> "false")) {
+        (maxRowsPerTask(Corpus.tokenBudgetFill(oneGroup, "source",
+            "doc_id", "text", Seq("web" -> 6000L))),
+          maxRowsPerTask(oneGroup.withColumn("cum", sum(lit(3L)).over(w))
+            .filter(col("cum") <= 6000L)))
+      }
+    assert(windowMax == 4000L && binnedMax * 2 < 4000L,
+      s"widest task: binned $binnedMax rows, plain window $windowMax")
   }
 
   test("tokenBudgetFill matches a plain-window cumsum on a randomized " +

@@ -278,24 +278,15 @@ class LayoutSpec extends SparkSpec {
     // records read while updating after the append must be batch-sized,
     // not table-sized — THE incremental claim, pinned behaviorally
     Layout.appendZOrdered(batch, dir, "l_shipdate", "l_partkey", files = 2)
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(l)
-    val statted =
-      try {
-        val n = Layout.updateManifest(spark, dir, dims)
-        Thread.sleep(1000) // listener bus is async; let task-end events drain
-        n
-      } finally spark.sparkContext.removeSparkListener(l)
+    var statted = -1
+    val read = readDuring {
+      statted = Layout.updateManifest(spark, dir, dims)
+    }.records
     assert(statted == 2, s"update statted $statted files, appended 2")
     val batchRows = batch.count()
     val baseRows = base.count()
-    assert(read.get() < batchRows + 100,
-      s"manifest update read ${read.get()} records — more than the " +
+    assert(read < batchRows + 100,
+      s"manifest update read $read records — more than the " +
         s"$batchRows-row batch + manifest; it must never rescan the " +
         s"$baseRows-row base")
     // idempotent no-op

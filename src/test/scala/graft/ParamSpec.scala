@@ -36,15 +36,6 @@ class ParamSpec extends SparkSpec {
     "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
 
-  private def withConf[A](kvs: Seq[(String, String)])(body: => A): A = {
-    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("Param and lit give identical rows for Long, Int and Date edge " +
       "values, with and without codegen") {
     import spark.implicits._

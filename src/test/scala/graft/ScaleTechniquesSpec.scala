@@ -35,11 +35,11 @@ class ScaleTechniquesSpec extends SparkSpec {
     // single-node sort at scale. Guard every contract query's plan.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val dir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val globals = fn(spark, dir).queryExecution.optimizedPlan.collect {
+    CatalogFrames.at(spark, dir).foreach { f =>
+      val globals = f.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }
-      assert(globals.isEmpty, s"$name plans an unpartitioned Window")
+      assert(globals.isEmpty, s"${f.name} plans an unpartitioned Window")
     }
   }
 
@@ -169,5 +169,31 @@ class ScaleTechniquesSpec extends SparkSpec {
     assert(dupSpread > 1, "identical duplicate rows must not collapse to one salt")
     val dupJoin = Skew.saltedJoin(dups, dim, "k", n = 8)
     assert(dupJoin.count() == 100)
+
+    // the salt flattens the reducers: 80% of the rows on one hot key
+    // land on ONE reduce task of the plain join; salted, the hot key's
+    // rows spread over all of them. Broadcast is off (a small dim would
+    // broadcast and no reducer skew would exist), and so is adaptive
+    // execution, whose own skew split and coalescing would blur both.
+    val skewed = spark.range(0L, 40000L).select(
+      when(col("id") % 5 =!= 0, lit(1L)).otherwise(col("id") % 100)
+        .as("k"), col("id").as("payload"))
+    val keys = spark.range(0L, 100L)
+      .select(col("id").as("k"), col("id").cast("string").as("name"))
+    // max / median shuffle records read per task of the join's stage
+    def spread(join: => org.apache.spark.sql.DataFrame): Double = {
+      val r = readDuring(join.write.format("noop").mode("overwrite").save())
+      val tasks = r.shuffleRecords.values.maxBy(_.sum).sorted
+      tasks.last.toDouble / math.max(tasks(tasks.size / 2), 1L)
+    }
+    val (plainSpread, saltedSpread) = withConf(Seq(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "8")) {
+      (spread(skewed.join(keys, Seq("k"))),
+        spread(Skew.saltedJoin(skewed, keys, "k", n = 32)))
+    }
+    assert(plainSpread > 8.0 && saltedSpread < 3.0,
+      s"reducer max/median: plain $plainSpread, salted $saltedSpread")
   }
 }

@@ -334,6 +334,51 @@ class ScdSpec extends SparkSpec {
     assert(Scd.current(spark, dir).count() == 100L)
   }
 
+  test("a merge reads the batch's current rows, never the closed " +
+      "history: records and bytes read stay flat at ×1/×4/×10 history") {
+    val keys = 200L
+    def gen(epoch: Long): DataFrame = spark.range(0L, keys)
+      .select(col("id").as("k"), concat(lit("n"), col("id")).as("name"),
+        (col("id") * 31 + epoch).as("score"))
+    // a fixed 5% key slice changes payload
+    val slice = gen(999L).filter(col("k") < keys / 20)
+    val dir = tmpDir("decade")
+    Scd.merge(spark, dir, "k", gen(0L), files = 4)
+    var epochs = 0L
+    val reads = Seq(1L, 4L, 10L).map { n =>
+      // epochs that each change EVERY key: each closes the whole
+      // current generation, so closed history grows to n × current
+      while (epochs < n) {
+        epochs += 1
+        Scd.merge(spark, dir, "k", gen(epochs), files = 4)
+      }
+      assert(Scd.history(spark, dir).count() == keys * (n + 1))
+      val head = TimeTravel.latestVersion(spark, dir)
+      var v = -1L
+      val merge = readDuring { v = Scd.merge(spark, dir, "k", slice, 1) }
+      // the identical re-merge is pure change detection: version-free
+      val noop = readDuring {
+        assert(Scd.merge(spark, dir, "k", slice, 1) == v)
+      }
+      // back to the head's files, so the next epochs grow the same
+      // current layout the slice merge was measured on
+      TimeTravel.rollback(spark, dir, head)
+      assert(Scd.current(spark, dir).count() == keys)
+      n -> (merge, noop)
+    }
+    // equal records; bytes (which carry the footer of every file opened)
+    // flat within 5% — a scan that opened the closed files would grow
+    // by one footer per epoch even where their row groups are skipped
+    val (m1, o1) = reads.head._2
+    def near(a: Long, b: Long) = math.abs(a - b) * 20 <= b
+    assert(m1.records > 0L && reads.forall { case (_, (m, o)) =>
+        m.records == m1.records && o.records == o1.records &&
+          near(m.bytes, m1.bytes) && near(o.bytes, o1.bytes) },
+      "(merge, no-op) reads by history scale: " + reads.map {
+        case (n, (m, o)) => s"x$n: ${m.records}/${m.bytes} B, " +
+          s"${o.records}/${o.bytes} B" }.mkString("; "))
+  }
+
   test("two concurrent merges: the interleaved winner lands, the loser's " +
       "pre-commit CAS refuses BEFORE anything enters the lineage, and " +
       "the re-derived merge succeeds — never an epoch-inconsistent " +

@@ -371,6 +371,17 @@ class SimilaritySpec extends SparkSpec {
     val again = Similarity.quantizedTopK(emb, queries, "vec_id", "embedding", k = 10)
       .select($"query_id", $"neighbor_id")
     assert(quant.exceptAll(again).isEmpty && again.exceptAll(quant).isEmpty)
+    // the storage half of the claim: the int8 column takes under a
+    // third of the float32 column's parquet bytes
+    def parquetBytes(df: org.apache.spark.sql.DataFrame): Long = {
+      val p = java.nio.file.Files.createTempDirectory("graft_quant").toFile
+      df.write.mode("overwrite").parquet(p.getPath)
+      p.listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    }
+    val f32 = parquetBytes(emb.select($"vec_id", $"embedding"))
+    val i8 = parquetBytes(Similarity.quantizeEmbeddings(emb, "embedding")
+      .select($"vec_id", $"q8"))
+    assert(i8 * 3 < f32, s"int8 parquet $i8 B vs float32 $f32 B")
   }
 
   test("rescored top-k: cosines are the exact float values; recall >= plain quantized") {
@@ -429,6 +440,39 @@ class SimilaritySpec extends SparkSpec {
     val normOff = enc.join(emb, $"id" === $"vec_id")
       .filter(abs($"norm" - VectorOps.norm($"embedding")) > 0.0)
     assert(normOff.isEmpty)
+
+    // an append's idempotence anti-join reaches the codes table as an
+    // id-only scan with the batch's [min,max] span pushed into parquet
+    // (the incremental IVF pin, on the PQ face): append cost tracks
+    // id-range overlap, not history size
+    val idx = java.nio.file.Files.createTempDirectory("graft_pq_ap").toString
+    Similarity.savePqIndex(Similarity.pqEncode(emb.filter($"vec_id" >= 250),
+      "vec_id", "embedding", books), books, idx, "vec_id")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      Similarity.appendPqIndex(emb.filter($"vec_id" < 250), idx, "vec_id",
+        "embedding")
+      drainListenerBus()
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    val codesScans = plans.asScala.toSeq.flatMap(_.split("\n"))
+      .filter(l => l.contains("FileScan parquet") &&
+        l.contains(new java.io.File(idx).getName + "/codes"))
+    assert(codesScans.nonEmpty && codesScans.forall(s =>
+        s.contains("ReadSchema: struct<vec_id:bigint>") &&
+          s.contains("GreaterThanOrEqual(vec_id,0)") &&
+          s.contains("LessThanOrEqual(vec_id,249)")),
+      codesScans.mkString("\n"))
+    assert(spark.read.parquet(s"$idx/codes").count() == emb.count())
   }
 
   test("PQ rescored top-k: exact cosines on the shortlist, recall " +

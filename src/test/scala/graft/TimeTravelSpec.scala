@@ -1359,15 +1359,23 @@ class TimeTravelSpec extends SparkSpec {
 
   test("compactSmall bin-packs ONLY sub-target files, leaves big " +
       "files alone, changes no read, and no-ops below minInputFiles") {
-    val dir = tmpDir("compactsmall")
-    // one BIG generation (5000 rows in one file), then streaming-style
-    // dribble: four tiny single-file commits
+    // the big generation grows ×1/×4/×10 under a constant dribble: the
+    // pack reads exactly the dribble's rows at every scale — its cost
+    // tracks the small bytes, never the table
+    Seq(1, 4, 10).foreach(compactSmallAtScale)
+  }
+
+  private def compactSmallAtScale(scale: Int): Unit = {
+    val dir = tmpDir(s"compactsmall_x$scale")
+    val big = 5000L * scale
+    // one BIG generation (5000 × scale rows in one file), then
+    // streaming-style dribble: four tiny single-file commits
     TimeTravel.commitAppend(
-      spark.range(0L, 5000L).select(col("id"), (col("id") % 5).as("grp"),
+      spark.range(0L, big).select(col("id"), (col("id") % 5).as("grp"),
         (col("id") * 3).as("v")), dir, Seq("id"), files = 1)      // v1
     (0 until 4).foreach { i =>
       TimeTravel.commitAppend(
-        spark.range(5000L + i * 10, 5010L + i * 10)
+        spark.range(big + i * 10, big + 10 + i * 10)
           .select(col("id"), (col("id") % 5).as("grp"),
             (col("id") * 3).as("v")),
         dir, Seq("id"), files = 1)                                // v2..v5
@@ -1382,9 +1390,16 @@ class TimeTravelSpec extends SparkSpec {
     val before = (1L to 5L).map(v =>
       ids(TimeTravel.readAsOf(spark, dir, v)))
     // target sized between the tiny files and the big one
-    val v6 = TimeTravel.compactSmall(spark, dir, Seq("id"),
-      targetBytes = bigLen)
+    var v6 = -1L
+    val read = readDuring {
+      v6 = TimeTravel.compactSmall(spark, dir, Seq("id"),
+        targetBytes = bigLen)
+    }
     assert(v6 == 6L)
+    // two passes over the dribble's 40 rows (the z-bounds aggregate,
+    // then the write) and none over the big file
+    assert(read.records == 2 * 40L, s"x$scale: compactSmall read " +
+      s"${read.records} records; the dribble holds 40 (big: $big)")
     // every historical read and the head are bit-identical
     (1L to 5L).foreach(v =>
       assert(ids(TimeTravel.readAsOf(spark, dir, v)) == before((v - 1).toInt)))

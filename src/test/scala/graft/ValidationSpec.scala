@@ -77,23 +77,14 @@ class ValidationSpec extends SparkSpec {
     val p = new java.io.File(dir, "d").getPath
     messy().write.parquet(p)
     val df = spark.read.parquet(p)
-    var recordsRead = 0L
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          recordsRead += e.taskMetrics.inputMetrics.recordsRead
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val recordsRead = readDuring {
       Validation.report(df, Seq(
         NotNull("id"), InRange("v", lit(0.0), lit(100.0)),
         InSet("flag", Seq("A", "N", "R")), Matches("label", "^ok-"),
-        NotNull("v"), NotNull("flag"))).collect()
-      Thread.sleep(1000) // listener bus is async; let task-end events drain
-      // 5 rows read ONCE for six rules — a per-rule plan would read 30
-      assert(recordsRead == 5L,
-        s"six scalar rules must read the 5 rows once, read $recordsRead")
-    } finally spark.sparkContext.removeSparkListener(listener)
+        NotNull("v"), NotNull("flag"))).collect(): Unit
+    }.records
+    // 5 rows read ONCE for six rules — a per-rule plan would read 30
+    assert(recordsRead == 5L,
+      s"six scalar rules must read the 5 rows once, read $recordsRead")
   }
 }
