@@ -497,21 +497,25 @@ class CorpusSpec extends SparkSpec {
 
     // the scale claim: one dominant group stays parallel. On a one-group
     // corpus the plain window's shuffle hands every row to ONE task; the
-    // binned cumsum's widest task holds a fraction of them. Adaptive
-    // execution is off so partition coalescing cannot merge the tasks.
-    val oneGroup = spark.range(0L, 4000L).select(col("id").as("doc_id"),
+    // widest task of ANY stage of the binned cumsum holds a fraction of
+    // them. Its per-group bin-offset window is one task too, but over at
+    // most 4096 bin totals whatever the corpus holds, so the corpus is
+    // ten times that. Adaptive execution is off so partition coalescing
+    // cannot merge the tasks.
+    val n = 40000L
+    val oneGroup = spark.range(0L, n).select(col("id").as("doc_id"),
       lit("a b c").as("text"), lit("web").as("source"))
     def maxRowsPerTask(df: org.apache.spark.sql.DataFrame): Long =
       readDuring(df.write.format("noop").mode("overwrite").save())
-        .shuffleRecords.values.maxBy(_.sum).max
+        .shuffleRecords.values.flatten.max
     val (binnedMax, windowMax) =
       withConf(Seq("spark.sql.adaptive.enabled" -> "false")) {
         (maxRowsPerTask(Corpus.tokenBudgetFill(oneGroup, "source",
-            "doc_id", "text", Seq("web" -> 6000L))),
+            "doc_id", "text", Seq("web" -> 60000L))),
           maxRowsPerTask(oneGroup.withColumn("cum", sum(lit(3L)).over(w))
-            .filter(col("cum") <= 6000L)))
+            .filter(col("cum") <= 60000L)))
       }
-    assert(windowMax == 4000L && binnedMax * 2 < 4000L,
+    assert(windowMax == n && binnedMax * 2 < n,
       s"widest task: binned $binnedMax rows, plain window $windowMax")
   }
 

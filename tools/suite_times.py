@@ -6,13 +6,15 @@ target/test-reports, where `sbt test` writes them) and prints the test
 count, the failures and errors, the sum of suite times and the slowest
 suites, so the headroom under the tier-1 timeout is a number per change:
 
-    python3 tools/suite_times.py [report_dir] [--top N]
+    python3 tools/suite_times.py [report_dir]
 """
 import argparse
 import glob
 import os
 import sys
 import xml.etree.ElementTree as ET
+
+TOP = 10  # slowest suites printed
 
 
 def suites(report_dir):
@@ -30,7 +32,6 @@ def suites(report_dir):
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("report_dir", nargs="?", default="target/test-reports")
-    ap.add_argument("--top", type=int, default=10)
     a = ap.parse_args(argv)
     rows = suites(a.report_dir)
     if not rows:
@@ -40,8 +41,8 @@ def main(argv):
     total = sum(r[3] for r in rows)
     print(f"suites {len(rows)}  tests {tests}  failed {bad}  "
           f"suite time {total:.1f} s")
-    print(f"slowest {min(a.top, len(rows))}:")
-    for name, n, _, t in sorted(rows, key=lambda r: -r[3])[:a.top]:
+    print(f"slowest {min(TOP, len(rows))}:")
+    for name, n, _, t in sorted(rows, key=lambda r: -r[3])[:TOP]:
         print(f"  {t:8.1f} s  {n:4d} tests  {name}")
 
 
