@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -57,28 +57,72 @@ object Bookmarks {
   // in-memory and streaming faces use, so all three faces provably
   // agree and the state survives restarts like every other persisted
   // family. Single-writer per store path (the serving tier's session
-  // affinity), like the index ledgers. ---
+  // affinity), like the index ledgers. A store directory that holds no
+  // parquet file yet (a first append interrupted after the directory
+  // was made) is an empty store. ---
+
+  private val EventSchema = Encoders.product[ToggleEvent].schema
+
+  /** The store's events under their declared schema: no schema-
+    * inference job, and a directory with no parquet file reads as
+    * empty instead of failing to infer. */
+  private def events(spark: SparkSession, path: String): Dataset[ToggleEvent] = {
+    import spark.implicits._
+    spark.read.schema(EventSchema).parquet(path).as[ToggleEvent]
+  }
+
+  /** Each user's max `seq` per store directory, a
+    * [[graft.sources.ListingSnapshot]] over the visible parquet files:
+    * a warm [[appendToggle]] costs one listing and zero jobs. A store
+    * past [[graft.sources.ListingSnapshot.MaxKeys]] users is marked
+    * over-bound and keeps the pushed-down point-filter `max`. */
+  private val maxSeqs =
+    new graft.sources.ListingSnapshot[Unit, Map[Long, Long]](
+        _.filter { f =>
+          val n = f.getPath.getName
+          n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+        })({ (spark, path, files) =>
+      val bound = graft.sources.ListingSnapshot.MaxKeys
+      val rows =
+        if (files.isEmpty) Array.empty[Row]
+        else events(spark, path).groupBy(col("userId")).agg(max(col("seq")))
+          .limit(bound + 1).collect()
+      if (rows.length > bound) Left(())
+      else Right(rows.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    })
 
   /** Record one toggle for `userId`. `seq` is assigned as the user's
-    * max + 1 — one pushed-down point-filter read plus a one-row append
-    * (interaction-sized; a bulk producer with its own ordering should
-    * append [[ToggleEvent]] frames directly and keep its seq).
+    * max + 1, read from the driver snapshot of every user's max (one
+    * listing warm; one aggregate after a restart or a foreign write;
+    * the pushed-down point-filter `max` past the snapshot bound). The
+    * row lands as one driver-written file
+    * ([[graft.sources.LocalParquet.appendFile]]) and is folded into the
+    * snapshot, so a warm toggle runs no Spark job (interaction-sized; a
+    * bulk producer with its own ordering should append [[ToggleEvent]]
+    * frames directly and keep its seq).
     */
   def appendToggle(spark: SparkSession, path: String, userId: Long,
                    bbl: String): Unit = {
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path))) 1L
-      else {
-        val events = spark.read.parquet(path)
-        val m = events.filter(Param.equalTo(events, "userId", userId))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
+    val snap = maxSeqs.get(spark, path)
+    val next = snap match {
+      case None => 1L
+      case Some(Right(m)) => m.getOrElse(userId, 0L) + 1L
+      case Some(Left(())) =>
+        val ev = events(spark, path)
+        val m = ev.filter(Param.equalTo(ev, "userId", userId))
           .agg(max(col("seq"))).head()
         if (m.isNullAt(0)) 1L else m.getLong(0) + 1L
-      }
-    Seq(ToggleEvent(userId, bbl, next)).toDS()
-      .write.mode("append").parquet(path)
+    }
+    val landed = graft.sources.LocalParquet.appendFile(
+      Array(Row(userId, bbl, next)), EventSchema, path, "toggle", hconf).get
+    if (snap.isEmpty)
+      maxSeqs.afterSwap(path, Set(landed), maxSeqs.list(fs, path),
+        Map(userId -> next))
+    else
+      maxSeqs.afterAppend(path, Set(landed), maxSeqs.list(fs, path))(
+        _.updated(userId, next))
   }
 
   /** Every user's current list, replayed from the ledger: per-user
@@ -87,7 +131,7 @@ object Bookmarks {
     */
   def replay(spark: SparkSession, path: String): Dataset[UserBookmarks] = {
     import spark.implicits._
-    spark.read.parquet(path).as[ToggleEvent]
+    events(spark, path)
       .groupByKey(_.userId)
       .mapGroups { (userId, events) =>
         val ordered = events.toSeq.sortBy(e => (e.seq, e.bbl))
@@ -103,9 +147,8 @@ object Bookmarks {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return Seq.empty
-    import spark.implicits._
-    val events = spark.read.parquet(path).as[ToggleEvent]
-    events.filter(Param.equalTo(events, "userId", userId))
+    val ev = events(spark, path)
+    ev.filter(Param.equalTo(ev, "userId", userId))
       .collect().sortBy(e => (e.seq, e.bbl))
       .foldLeft(Seq.empty[String])((acc, e) => toggle(acc, e.bbl))
   }

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Shared batch-id ledger for the incremental indexes whose appends are
   * NOT idempotent by value — additive count segments ([[Corpus]] LM
@@ -28,38 +30,18 @@ private[graft] object Ledger {
   /** Append batch-id rows WITHOUT a Spark job (r17): a ledger record is
     * one id in one column — launching a distributed write per recorded
     * commit paid a whole job for a metadata-sized file. The row lands
-    * through parquet-mr directly (same staged-file + unique-rename
-    * discipline the old Spark-job appender used, so concurrent recorders still
-    * commute), readable by every existing `spark.read.parquet` face. */
+    * through [[graft.sources.LocalParquet.appendFile]] (staged file +
+    * unique rename, so concurrent recorders commute), uncompressed and
+    * under the `ledger` root name as ledger files always were (their
+    * bytes count toward a table's write amplification), readable by
+    * every existing `spark.read.parquet` face. */
   private def appendIdsLocal(spark: SparkSession, path: String,
-                             ids: Seq[String]): String = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = p(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = p(path.stripSuffix("/") + s"_rectmp_$token.parquet")
-    val schema = org.apache.parquet.schema.MessageTypeParser
-      .parseMessageType(
-        "message ledger { optional binary batch_id (UTF8); }")
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    org.apache.parquet.hadoop.example.GroupWriteSupport
-      .setSchema(schema, conf)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(tmp, conf))
-      .withConf(conf)
-      .build()
-    try ids.foreach { id =>
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
-      g.append("batch_id", id)
-      w.write(g)
-    } finally w.close()
-    fs.mkdirs(p(path))
-    val name = s"rec_${token}_0.parquet"
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(p(path), name)),
-      s"ledger append: could not promote $tmp into $path")
-    name
-  }
+                             ids: Seq[String]): String =
+    graft.sources.LocalParquet.appendFile(ids.map(Row(_)).toArray,
+      IdSchema, path, "rec", spark.sparkContext.hadoopConfiguration,
+      CompressionCodecName.UNCOMPRESSED, "ledger").get
+
+  private val IdSchema = StructType(Seq(StructField("batch_id", StringType)))
 
   /** Driver-held membership set per ledger directory, a
     * [[graft.sources.ListingSnapshot]] over every file: a warm

@@ -114,26 +114,14 @@ private[graft] object Tombstones {
   }
 
   /** Land `values` as ONE locally-written parquet file inside the
-    * sidecar directory (staged sibling + rename, the [[Ledger]] append
-    * discipline, so concurrent recorders commute). None = type outside
-    * LocalParquet's map, nothing written; Some(landed file name)
-    * otherwise. */
+    * sidecar directory ([[graft.sources.LocalParquet.appendFile]], so
+    * concurrent recorders commute). None = type outside LocalParquet's
+    * map, nothing written; Some(landed file name) otherwise. */
   private def appendKeysLocal(spark: SparkSession, path: String,
                               schema: StructType,
-                              values: Seq[Any]): Option[String] = {
-    val fsys = fs(spark, path)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = path.stripSuffix("/") + s"_tombtmp_$token.parquet"
-    if (!graft.sources.LocalParquet.write(values.map(Row(_)).toArray, schema,
-        tmp, spark.sparkContext.hadoopConfiguration)) return None
-    fsys.mkdirs(p(path))
-    val name = s"tomb_${token}_0.parquet"
-    require(fsys.rename(p(tmp),
-        new org.apache.hadoop.fs.Path(p(path), name)),
-      s"tombstone append: could not promote $tmp into $path")
-    Some(name)
-  }
+                              values: Seq[Any]): Option[String] =
+    graft.sources.LocalParquet.appendFile(values.map(Row(_)).toArray,
+      schema, path, "tomb", spark.sparkContext.hadoopConfiguration)
 
   // --- operations ---------------------------------------------------
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, NumericType, StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, NumericType, ShortType, StringType, StructType, TimestampNTZType, TimestampType}
 
 /** Z-order (Morton-curve) file layout — the data-skipping tool for
   * multi-dimensional predicates at 100 TB. Sorting files by ONE column
@@ -183,19 +183,43 @@ object Layout {
                                   dims: Seq[String]): (Long, DataFrame) = {
     require(dims.nonEmpty && dims.distinct.size == dims.size,
       s"z-order dims must be distinct and non-empty: $dims")
-    val bits = bitsFor(dims.size)
     val ords = dims.map(c => ord(df, c))
     val aggs = count(lit(1)).as("__zn") +: ords.zipWithIndex.flatMap {
       case (o, i) => Seq(min(o).as(s"__zlo$i"), max(o).as(s"__zhi$i")) }
     val r = df.agg(aggs.head, aggs.tail: _*).head()
     if (r.getLong(0) == 0L) return (0L, df)
+    def b(j: Int): Option[Double] =
+      if (r.isNullAt(j)) None else Some(r.getDouble(j))
+    (r.getLong(0), keyedBy(df, ords,
+      ords.indices.map(i => (b(1 + 2 * i), b(2 + 2 * i)))))
+  }
+
+  /** Does a file's recorded min/max of a column of this type give the
+    * exact [min, max] of its [[ord]] image? True for the integral types
+    * and date: their stats are exact and their image is a monotone cast
+    * to double, so the image of the min is the min of the images. */
+  private[graft] def exactStatOrd(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType => true
+    case _ => false
+  }
+
+  /** [[countAndZKey]]'s keyed frame from bounds already known — each
+    * dim's ord-image (min, max), None when every value is null — with
+    * no aggregate; keys are bit-identical to [[countAndZKey]]'s for the
+    * same bounds. */
+  private[graft] def zKeyFromBounds(df: DataFrame, dims: Seq[String],
+      bounds: Seq[(Option[Double], Option[Double])]): DataFrame =
+    keyedBy(df, dims.map(c => ord(df, c)), bounds)
+
+  private def keyedBy(df: DataFrame, ords: Seq[Column],
+      bounds: Seq[(Option[Double], Option[Double])]): DataFrame = {
+    val bits = bitsFor(ords.size)
     // typed null literals keep the all-null-dim case identical to the
     // broadcast form (null bounds → null zkey; they sort together)
-    def b(j: Int): Column =
-      if (r.isNullAt(j)) lit(null).cast("double") else lit(r.getDouble(j))
-    (r.getLong(0), df.withColumn("zkey", mortonKeyN(
-      ords.zipWithIndex.map { case (o, i) =>
-        normBits(o, b(1 + 2 * i), b(2 + 2 * i), bits) }, bits)))
+    def b(x: Option[Double]): Column =
+      x.fold(lit(null).cast("double"))(lit(_))
+    df.withColumn("zkey", mortonKeyN(ords.zip(bounds).map {
+      case (o, (lo, hi)) => normBits(o, b(lo), b(hi), bits) }, bits))
   }
 
   /** The z-curve layout step every z-ordered writer shares: range-

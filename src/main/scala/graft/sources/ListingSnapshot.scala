@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** A driver-held value derived from one directory's files, reused until
   * the directory's listing changes — the one snapshot cache behind the
   * lineage ([[TimeTravel]]), the stats manifest ([[Layout]]), the batch
-  * ledger ([[graft.operators.Ledger]]) and the tombstone sidecars
-  * ([[graft.operators.Tombstones]]). Every file those directories hold
+  * ledger ([[graft.operators.Ledger]]), the tombstone sidecars
+  * ([[graft.operators.Tombstones]]) and the bookmark store's per-user
+  * max `seq` ([[graft.engine.Bookmarks]]). Every file those directories hold
   * is an immutable single-file birth, so an unchanged listing proves
   * unchanged content: a warm consult costs one `listStatus` plus one
   * `getFileStatus` and zero Spark jobs.
@@ -130,9 +131,9 @@ private[graft] final class ListingSnapshot[M, T](
 private[graft] object ListingSnapshot {
 
   /** The driver-memory bound shared by the consumers whose data is not
-    * file-count-sized (ledger ids, tombstone keys): past it the load
-    * marks the path over-bound and the consumer keeps its distributed
-    * formulation, so driver memory stays flat. */
+    * file-count-sized (ledger ids, tombstone keys, bookmark users): past
+    * it the load marks the path over-bound and the consumer keeps its
+    * distributed formulation, so driver memory stays flat. */
   val MaxKeys = 100000
 
   /** One listing's selected files and their fingerprint. */

@@ -1,10 +1,12 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Driver-side single-parquet-file writer for METADATA-sized frames
-  * (lineage segments, checkpoint folds) — the rows are already local
+  * (lineage segments, checkpoint folds, the one-row-batch appends of
+  * [[appendFile]]) — the rows are already local
   * `Array[Row]`s by construction, and launching a Spark job (task +
   * output-committer temporary-directory dance + rename) per one-file
   * write was a fixed per-commit cost the data never justified (r18,
@@ -52,21 +54,25 @@ private[graft] object LocalParquet {
 
   /** Write `rows` under `schema` as ONE parquet file at `path`
     * (driver-side, no Spark job). False (nothing written) when the
-    * schema is outside the supported map — caller falls back. */
+    * schema is outside the supported map — caller falls back. `codec`
+    * and `message` (the footer's root schema name) are part of the
+    * file's bytes; a family whose file sizes are accounted keeps its
+    * own. */
   def write(rows: Array[Row], schema: StructType, path: String,
-            hconf: org.apache.hadoop.conf.Configuration): Boolean = {
+            hconf: org.apache.hadoop.conf.Configuration,
+            codec: CompressionCodecName = CompressionCodecName.SNAPPY,
+            message: String = "lineage_segment"): Boolean = {
     val fields = schema.fields.map(parquetField)
     if (fields.exists(_.isEmpty)) return false
     val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      fields.flatten.mkString("message lineage_segment { ", " ", " }"))
+      fields.flatten.mkString(s"message $message { ", " ", " }"))
     val conf = new org.apache.hadoop.conf.Configuration(hconf)
     org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(msg, conf)
     val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
         .fromPath(new org.apache.hadoop.fs.Path(path), conf))
       .withConf(conf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .withCompressionCodec(codec)
       .build()
     try rows.foreach { r =>
       val g = new org.apache.parquet.example.data.simple.SimpleGroup(msg)
@@ -100,5 +106,33 @@ private[graft] object LocalParquet {
       w.write(g)
     } finally w.close()
     true
+  }
+
+  /** Land `rows` in directory `dir` as ONE new file, without a Spark
+    * job: [[write]] to a unique sibling temp file
+    * (`<dir>_<tag>tmp_<token>.parquet`), then rename it into `dir` as
+    * `<tag>_<token>_0.parquet`. The rename is the file's birth, so a
+    * reader never sees a partial file and concurrent appenders commute
+    * (distinct tokens). Creates `dir` when absent. Returns the landed
+    * name; None (nothing written) when the schema is outside the
+    * supported map. The one append of the driver-snapshot families
+    * whose rows are interaction-sized (batch ledgers, tombstone
+    * sidecars, the bookmark store).
+    */
+  def appendFile(rows: Array[Row], schema: StructType, dir: String,
+                 tag: String, hconf: org.apache.hadoop.conf.Configuration,
+                 codec: CompressionCodecName = CompressionCodecName.SNAPPY,
+                 message: String = "lineage_segment"): Option[String] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(hconf)
+    val token = java.util.UUID.randomUUID().toString.take(12)
+    val tmp = dir.stripSuffix("/") + s"_${tag}tmp_$token.parquet"
+    if (!write(rows, schema, tmp, hconf, codec, message)) return None
+    fs.mkdirs(path)
+    val name = s"${tag}_${token}_0.parquet"
+    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
+        new org.apache.hadoop.fs.Path(path, name)),
+      s"$tag append: could not promote $tmp into $dir")
+    Some(name)
   }
 }

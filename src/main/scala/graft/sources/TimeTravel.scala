@@ -1227,11 +1227,15 @@ object TimeTravel {
     *  2. it is z-clustered on `dimsFor(its columns)` into `files`
     *     parquet files: ONE aggregate ([[Layout.countAndZKey]]) yields
     *     the row count and the z-key bounds, [[Layout.zCluster]] lays
-    *     out the curve. Bounds drift between generations only loosens
-    *     skip rate, never results. An empty or dim-less generation,
-    *     and a delete's survivors (`cluster = false`: one output file
-    *     per rewritten file keeps file sizes stable), take a plain
-    *     repartition instead;
+    *     out the curve. A generation of `wholeFiles` (the rewritten
+    *     files kept whole, no batch: compact, compactSmall) takes the
+    *     count and bounds from the files' lineage `add` rows instead
+    *     when they are exact ([[lineageZBounds]]), so the files are
+    *     read once, by the write. Bounds drift between generations
+    *     only loosens skip rate, never results. An empty or dim-less
+    *     generation, and a delete's survivors (`cluster = false`:
+    *     one output file per rewritten file keeps file sizes stable),
+    *     take a plain repartition instead;
     *  3. nothing to write and nothing to remove commits nothing and
     *     returns `base` — never a contentless version;
     *  4. `admit` runs the face's last pre-staging guard; then the
@@ -1245,13 +1249,19 @@ object TimeTravel {
       base: Long, rewrite: Seq[String], keep: DataFrame => DataFrame,
       batch: Option[DataFrame], dimsFor: Seq[String] => Seq[String],
       files: Int, batchId: Option[String] = None, cluster: Boolean = true,
-      admit: () => Unit = () => ()): Long = {
+      admit: () => Unit = () => (), wholeFiles: Boolean = false): Long = {
     def commit(gen: DataFrame): Long = {
       val dims = dimsFor(gen.columns.toSeq)
+      val fromLineage =
+        if (wholeFiles && batch.isEmpty && cluster && dims.nonEmpty)
+          lineageZBounds(spark, dataPath, rewrite, gen, dims)
+        else None
       val (empty, laid) =
         if (!cluster || dims.isEmpty)
           (rewrite.isEmpty && gen.isEmpty, gen.repartition(files))
-        else Layout.countAndZKey(gen, dims) match {
+        else fromLineage.map { case (n, bounds) =>
+            (n, Layout.zKeyFromBounds(gen, dims, bounds)) }
+          .getOrElse(Layout.countAndZKey(gen, dims)) match {
           case (0L, _) => (true, gen.repartition(files))
           case (_, keyed) => (false, Layout.zCluster(keyed, files))
         }
@@ -1281,6 +1291,61 @@ object TimeTravel {
       case (Some(s), Some(b)) =>
         materialized(s.unionByName(b, allowMissingColumns = true))(commit)
     }
+  }
+
+  /** Test seam: false sends every rewrite to the aggregate probe, so a
+    * spec can run both z-bounds paths over the same files. True in
+    * production. */
+  private[graft] var lineageBoundsForTests: Boolean = true
+
+  /** The row count of `files` and each z-dim's ord-image bounds (None
+    * when every value is null), from the files' lineage `add` rows
+    * alone: `sum(n_rows)`, and the min of `min_<dim>` / max of
+    * `max_<dim>` through the z-key's monotone cast to double. Exact only
+    * for [[Layout.exactStatOrd]] types, so None — the caller keeps the
+    * aggregate — unless every dim of `gen` has such a type and every
+    * file's add row carries `n_rows` and the dim's stats (a null min
+    * only on an all-null file: `nulls_<dim>` = `n_rows`). */
+  private def lineageZBounds(spark: SparkSession, dataPath: String,
+      files: Seq[String], gen: DataFrame, dims: Seq[String])
+      : Option[(Long, Seq[(Option[Double], Option[Double])])] = {
+    if (!lineageBoundsForTests || !dims.forall(d => gen.schema.fields
+        .exists(f => f.name == d && Layout.exactStatOrd(f.dataType))))
+      return None
+    val s = lineageSnap(spark, dataPath)
+    val nIdx = s.idx("n_rows")
+    val stat = dims.map(d =>
+      (s.idx(s"min_$d"), s.idx(s"max_$d"), s.idx(s"nulls_$d")))
+    if (nIdx < 0 || stat.exists { case (a, b, c) => a < 0 || b < 0 || c < 0 })
+      return None
+    val want = files.toSet
+    val adds = s.rows.iterator.filter(r =>
+        r.getString(s.aIdx) == "add" && want(r.getString(s.fIdx)))
+      .map(r => r.getString(s.fIdx) -> r).toMap.values.toSeq
+    if (adds.size != want.size || adds.exists(_.isNullAt(nIdx))) return None
+    def image(v: Any): Option[Double] = v match {
+      case n: java.lang.Long    => Some(n.doubleValue)
+      case n: java.lang.Integer => Some(n.doubleValue)
+      case d: java.sql.Date =>
+        Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .fromJavaDate(d).toDouble)
+      case d: java.time.LocalDate => Some(d.toEpochDay.toDouble)
+      case _ => None
+    }
+    val bounds = stat.map { case (mnI, mxI, nuI) =>
+      val perFile = adds.map { r =>
+        if (r.isNullAt(nuI)) None
+        else if (r.isNullAt(mnI) || r.isNullAt(mxI))
+          Option.when(r.getLong(nuI) == r.getLong(nIdx))(
+            Option.empty[(Double, Double)])
+        else for (lo <- image(r.get(mnI)); hi <- image(r.get(mxI)))
+          yield Option((lo, hi))
+      }
+      if (perFile.exists(_.isEmpty)) return None
+      val known = perFile.flatten.flatten
+      (known.map(_._1).minOption, known.map(_._2).maxOption)
+    }
+    Some((adds.map(_.getLong(nIdx)).sum, bounds))
   }
 
   /** The files among `files` whose lineage `add` rows may hold a row
@@ -1795,7 +1860,7 @@ object TimeTravel {
     require(latest >= 1, s"compact: no committed table at $dataPath")
     rewriteCommit(spark, dataPath, latest,
       liveFileNames(spark, dataPath, latest), identity, None, _ => dims,
-      files)
+      files, wholeFiles = true)
   }
 
   /** Size-aware INCREMENTAL compaction — the 100 TB form: bin-pack
@@ -1829,7 +1894,7 @@ object TimeTravel {
     val outFiles = math.max(1L,
       (small.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
     rewriteCommit(spark, dataPath, latest, small.map(_._1), identity, None,
-      _ => dims, outFiles)
+      _ => dims, outFiles, wholeFiles = true)
   }
 
   /** Earliest version still fully readable: 1 until a [[vacuum]] has

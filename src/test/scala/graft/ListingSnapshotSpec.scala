@@ -2,13 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.engine.Bookmarks
 import graft.operators.{Ledger, Tombstones}
 import graft.sources.ListingSnapshot
 
 /** The driver snapshot primitive: its staleness, mark and install rules
-  * on plain files, and the over-bound branches of the two
+  * on plain files, and the over-bound branches of the three
   * consumers whose data is not file-count-sized (ledger ids, tombstone
-  * keys), run on real data past [[ListingSnapshot.MaxKeys]].
+  * keys, bookmark users), run on real data past [[ListingSnapshot.MaxKeys]].
   */
 class ListingSnapshotSpec extends SparkSpec {
   import spark.implicits._
@@ -155,5 +156,47 @@ class ListingSnapshotSpec extends SparkSpec {
     Tombstones.clear(Seq(7L, 99999L).toDF("id"), "id", tomb)
     model --= Seq(7L, 99999L)
     check()
+  }
+
+  test("bookmark store past the snapshot bound: the store is marked, and " +
+      "appendToggle assigns the same seqs as on an in-bound store") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val n = ListingSnapshot.MaxKeys + 1L
+    // user 5 toggled b (seq 1, among the bulk), then c, then b off
+    def history(store: String, users: Long): Unit = {
+      spark.range(0L, users).select(col("id").as("userId"),
+          lit("b").as("bbl"), lit(1L).as("seq"))
+        .write.parquet(store)
+      Seq(Bookmarks.ToggleEvent(5L, "c", 2L), Bookmarks.ToggleEvent(5L, "b", 3L))
+        .toDS().write.mode("append").parquet(store)
+    }
+    def toggles(store: String): Unit = {
+      Bookmarks.appendToggle(spark, store, 5L, "d")
+      Bookmarks.appendToggle(spark, store, 5L, "c")
+      Bookmarks.appendToggle(spark, store, n + 7L, "z") // a new user
+    }
+    val over = tmpDir("graft_ls_bm") + "/toggles"
+    val in = tmpDir("graft_ls_bm") + "/toggles"
+    history(over, n)
+    history(in, 6L)
+    toggles(over)
+    toggles(in)
+    // warm, the in-bound store answers from the snapshot; the marked one
+    // runs the point-filter max and never re-collects its users
+    assert(jobsDuring(Bookmarks.appendToggle(spark, in, 5L, "e")) == 0)
+    var read: SparkSpec.Reads = null
+    assert(jobsDuring {
+      read = readDuring(Bookmarks.appendToggle(spark, over, 5L, "e"))
+    } > 0)
+    assert(read.shuffleRecords.values.flatten.sum < 100L, read)
+    def seqs(store: String, u: Long): Seq[(Long, String)] =
+      spark.read.parquet(store).as[Bookmarks.ToggleEvent]
+        .filter(_.userId == u).collect().map(e => e.seq -> e.bbl)
+        .sorted.toSeq
+    Seq(5L, n + 7L).foreach(u => assert(seqs(over, u) == seqs(in, u)))
+    assert(seqs(over, 5L).map(_._1) == Seq(1L, 2L, 3L, 4L, 5L, 6L))
+    // b, c, b off, d, c off, e
+    assert(Bookmarks.saved(spark, over, 5L) == Seq("d", "e"))
+    assert(Bookmarks.saved(spark, in, 5L) == Seq("d", "e"))
   }
 }

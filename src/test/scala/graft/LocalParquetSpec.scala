@@ -71,5 +71,11 @@ class LocalParquetSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/a.parquet")) &&
       !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/b.parquet")) &&
       !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/c.parquet")))
+    // the directory append refuses the same way: no temp file, no
+    // directory
+    assert(LocalParquet.appendFile(Array(Row(java.math.BigDecimal.ONE)),
+      StructType(Seq(StructField("x", DecimalType(10, 2)))), s"$dir/d",
+      "t", spark.sparkContext.hadoopConfiguration).isEmpty)
+    assert(new java.io.File(dir).list().isEmpty)
   }
 }

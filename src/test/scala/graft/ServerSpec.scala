@@ -274,6 +274,103 @@ class ServerSpec extends SparkSpec {
     assert(replayed.length == 1 && replayed.head.bbls == folded)
   }
 
+  test("a store directory that holds no parquet file yet (an interrupted " +
+      "first append) is an empty store: /bookmarks, /analytics and the " +
+      "first toggle serve 200, and the toggle gets seq 1") {
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_bm_empty").toString + "/toggles"
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(store, "_temporary", "0"))
+    withServer(Some(store)) { (port, _) =>
+      val bms = get(port, "/bookmarks")
+      assert(bms.statusCode() == 200, bms.body())
+      assert(bms.body().contains("\"bookmarks\":[]"))
+      val page = get(port, "/analytics/1-42-7")
+      assert(page.statusCode() == 200, page.body())
+      assert(page.body().contains("\"is_bookmarked\":false"))
+      val first = post(port, "/bookmark/1-42-7")
+      assert(first.statusCode() == 200, first.body())
+      assert(first.body().contains("\"action\":\"added\""))
+    }
+    assert(Bookmarks.replay(spark, store).collect().map(_.bbls.toSeq)
+      .toSeq == Seq(Seq("1-42-7")))
+    import spark.implicits._
+    assert(spark.read.parquet(store).select("seq").as[Long].collect()
+      .toSeq == Seq(1L))
+  }
+
+  test("a warm POST /bookmark runs zero Spark jobs, and so does a warm " +
+      "direct appendToggle") {
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_bm_warm").toString + "/toggles"
+    withServer(Some(store)) { (port, _) =>
+      val first = post(port, "/bookmark/1-42-7") // new session + new store
+      val cookie = first.headers().firstValue("Set-Cookie").get
+      assert(jobsDuring {
+        assert(post(port, "/bookmark/3-100-55", Some(cookie)).statusCode() ==
+          200)
+        assert(post(port, "/bookmark/1-42-7", Some(cookie)).body()
+          .contains("\"action\":\"removed\""))
+      } == 0)
+      assert(get(port, "/bookmarks", Some(cookie)).body()
+        .contains("\"bookmarks\":[\"3-100-55\"]"))
+    }
+    Bookmarks.appendToggle(spark, store, 42L, "2-1-1") // a new user
+    assert(jobsDuring {
+      Bookmarks.appendToggle(spark, store, 42L, "2-1-2")
+      Bookmarks.appendToggle(spark, store, 43L, "2-1-1")
+    } == 0)
+    import spark.implicits._
+    val seqs = spark.read.parquet(store).as[Bookmarks.ToggleEvent].collect()
+      .groupMap(_.userId)(_.seq).map { case (u, s) => u -> s.sorted.toSeq }
+    assert(seqs.values.toSet == Set(Seq(1L, 2L, 3L), Seq(1L, 2L), Seq(1L)))
+    assert(Bookmarks.saved(spark, store, 42L) == Seq("2-1-1", "2-1-2"))
+  }
+
+  test("seq continues at the user's max + 1 across a restart over a " +
+      "store mixing Spark-written and locally written files; saved and " +
+      "replay equal the in-memory fold") {
+    import spark.implicits._
+    import Bookmarks.ToggleEvent
+    val store = java.nio.file.Files
+      .createTempDirectory("graft_bm_mixed").toString + "/toggles"
+    // the store as distributed appends wrote it: user 7 (a, b, then a
+    // off) and user 8 (a)
+    def sparkAppend(es: ToggleEvent*): Unit =
+      es.toDS().write.mode("append").parquet(store)
+    sparkAppend(ToggleEvent(7L, "1-42-7", 1L), ToggleEvent(8L, "1-42-7", 1L))
+    sparkAppend(ToggleEvent(7L, "3-100-55", 2L))
+    val cookie7 = Some("graft_session=7")
+    withServer(Some(store)) { (port, _) =>
+      assert(get(port, "/bookmarks", cookie7).body()
+        .contains("\"bookmarks\":[\"1-42-7\",\"3-100-55\"]"))
+      assert(post(port, "/bookmark/1-42-7", cookie7).body()
+        .contains("\"action\":\"removed\"")) // seq 3, written locally
+    }
+    sparkAppend(ToggleEvent(8L, "2-1-1", 2L)) // a foreign write
+    // a restart: a new process holds no snapshot
+    graft.sources.ListingSnapshot.invalidateAll()
+    withServer(Some(store)) { (port, _) =>
+      assert(get(port, "/bookmarks", cookie7).body()
+        .contains("\"bookmarks\":[\"3-100-55\"]"))
+      assert(post(port, "/bookmark/1-42-7", cookie7).body()
+        .contains("\"action\":\"added\"")) // seq 4
+    }
+    Bookmarks.appendToggle(spark, store, 8L, "1-42-7") // seq 3: off
+    val all = spark.read.parquet(store).as[ToggleEvent].collect().toSeq
+    assert(all.filter(_.userId == 7L).map(_.seq).sorted == Seq(1L, 2L, 3L, 4L))
+    assert(all.filter(_.userId == 8L).map(_.seq).sorted == Seq(1L, 2L, 3L))
+    val fold = all.groupMap(_.userId)(identity).map { case (u, es) =>
+      u -> es.sortBy(_.seq).map(_.bbl).foldLeft(Seq.empty[String])(
+        Bookmarks.toggle)
+    }
+    assert(fold == Map(7L -> Seq("3-100-55", "1-42-7"), 8L -> Seq("2-1-1")))
+    fold.foreach { case (u, want) =>
+      assert(Bookmarks.saved(spark, store, u) == want) }
+    assert(Bookmarks.replay(spark, store).collect()
+      .map(b => b.userId -> b.bbls.toSeq).toMap == fold)
+  }
+
   test("GET /vdash serves the dashboard AS OF a snapshot-group cut: " +
       "cut 1 replays the pre-mutation state after both members " +
       "advanced, the default is the latest cut, and bad cuts are 400") {

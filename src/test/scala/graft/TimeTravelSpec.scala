@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.TimeTravel
@@ -1400,9 +1400,9 @@ class TimeTravelSpec extends SparkSpec {
         targetBytes = bigLen)
     }
     assert(v6 == 6L)
-    // at most two passes over the dribble's 40 rows (the z-bounds
-    // aggregate, then the write), none over the big file's rows
-    assert(read.records <= 2 * 40L, s"x$scale: compactSmall read " +
+    // one pass over the dribble's 40 rows (the write: the z-bounds
+    // come from the lineage stats), none over the big file's rows
+    assert(read.records <= 40L, s"x$scale: compactSmall read " +
       s"${read.records} records; the dribble holds 40 (big: $big)")
     // every historical read and the head are bit-identical
     (1L to 5L).foreach(v =>
@@ -1427,6 +1427,53 @@ class TimeTravelSpec extends SparkSpec {
       .head()
     assert(r.getLong(r.fieldIndex("version")) == 6L)
     read.records
+  }
+
+  test("compaction takes integral and date z-bounds from the lineage " +
+      "stats: the same files, history and head rows as the aggregate " +
+      "probe, and one read of the rewritten rows instead of two") {
+    // long and date dims; an all-null date file and a partly-null one
+    def build(dir: String): Unit = {
+      def batch(from: Long, n: Long, d: Column) =
+        spark.range(from, from + n).select(col("id"),
+          (col("id") % 3).cast("int").as("grp"), d.as("d"))
+      val day = date_add(lit("2024-01-01").cast("date"),
+        (col("id") % 40).cast("int"))
+      TimeTravel.commitAppend(batch(0L, 30L, day), dir, Seq("id", "d"),
+        files = 2)
+      TimeTravel.commitAppend(batch(30L, 10L, lit(null).cast("date")), dir,
+        Seq("id", "d"), files = 1)
+      TimeTravel.commitAppend(batch(40L, 10L,
+        when(col("id") % 2 === 0, day)), dir, Seq("id", "d"), files = 1)
+    }
+    def run(fromLineage: Boolean) = {
+      val dir = tmpDir(s"zbounds_$fromLineage")
+      build(dir)
+      TimeTravel.lineageBoundsForTests = fromLineage
+      var v = -1L
+      val read = try readDuring {
+        v = TimeTravel.compactSmall(spark, dir, Seq("id", "d"),
+          targetBytes = 1L << 30)
+      } finally TimeTravel.lineageBoundsForTests = true
+      assert(v == 4L)
+      val added = spark.read.parquet(TimeTravel.lineagePath(dir))
+        .filter(col("version") === v && col("action") === "add")
+        .select("file_name").as[String].collect().sorted.toSeq
+      // each packed file's rows in physical order
+      val files = added.map(f => spark.read.parquet(s"$dir/$f").collect()
+        .map(_.toSeq).toSeq)
+      val history = TimeTravel.history(spark, dir).drop("commit_ts")
+        .collect().toSeq
+      val head = TimeTravel.readAsOf(spark, dir, v).collect()
+        .map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      (files, history, head, read.records)
+    }
+    val (aggFiles, aggHistory, aggHead, aggRead) = run(fromLineage = false)
+    val (linFiles, linHistory, linHead, linRead) = run(fromLineage = true)
+    assert(linFiles.nonEmpty && linFiles == aggFiles)
+    assert(linHistory == aggHistory)
+    assert(linHead.size == 50 && linHead == aggHead)
+    assert(aggRead == 2 * 50L && linRead == 50L, s"$aggRead / $linRead")
   }
 
   test("replicate maintains a LAKE REPLICA from the feed alone across " +
