@@ -236,6 +236,79 @@ object Layout {
       .drop("zkey")
   }
 
+  /** Are `df`'s rows already on the driver? True when its optimized
+    * plan is one `LocalRelation` (a `Seq.toDF`, a `createDataFrame` over
+    * local rows, a temp view over either, or a Project/Filter the
+    * optimizer folded into one) and nothing in it is non-deterministic:
+    * evaluating it again yields the same rows with no Spark job. */
+  private[graft] def driverHeld(df: DataFrame): Boolean = {
+    val qe = df.queryExecution
+    qe.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation] &&
+      !qe.analyzed.exists(_.expressions.exists(!_.deterministic))
+  }
+
+  /** The ord image of one long, int or date value, as a Row or a
+    * lineage stat holds it: the double [[ord]]'s cast yields. None for
+    * any other value. */
+  private[graft] def exactOrdImage(v: Any): Option[Double] = v match {
+    case n: java.lang.Long    => Some(n.doubleValue)
+    case n: java.lang.Integer => Some(n.doubleValue)
+    case d: java.sql.Date =>
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
+        .fromJavaDate(d).toDouble)
+    case d: java.time.LocalDate => Some(d.toEpochDay.toDouble)
+    case _ => None
+  }
+
+  /** [[countAndZKey]] and [[zCluster]] on the driver, with no Spark
+    * job, for a batch whose rows the driver holds ([[driverHeld]]),
+    * whose every dim is an [[exactStatOrd]] type and whose schema
+    * [[LocalParquet.supports]]. The count and each dim's ord-image
+    * bounds come from the rows; the keys from [[keyedBy]], so they are
+    * bit-identical (its Project over local rows folds on the driver).
+    * The rows are sorted by key and cut into at most `files` contiguous
+    * runs the way the range partitioner cuts a sample holding every
+    * row: a cut after every `n / files`-th row, at a key above the last
+    * cut, so rows sharing a key never split. Returns the non-empty runs
+    * in curve order (none for an empty batch), or None for any other
+    * batch: the caller keeps the distributed layout.
+    */
+  private[graft] def zRunsOnDriver(df: DataFrame, dims: Seq[String],
+                                   files: Int): Option[Seq[Array[Row]]] = {
+    if (!LocalParquet.supports(df.schema) ||
+        !dims.forall(c => exactStatOrd(df.schema(c).dataType)) ||
+        !driverHeld(df)) return None
+    val rows = df.collect()
+    if (rows.isEmpty) return Some(Nil)
+    val bounds = dims.map { c =>
+      val i = df.schema.fieldIndex(c)
+      val images = rows.flatMap(r =>
+        if (r.isNullAt(i)) None else exactOrdImage(r.get(i)))
+      (images.minOption, images.maxOption)
+    }
+    // zkey is never null for these types; a null would sort first, as
+    // the range partitioner's ascending order puts it
+    val keys = keyedBy(df, dims.map(c => ord(df, c)), bounds)
+      .select(col("zkey")).collect()
+      .map(r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+    val order = rows.indices.sortBy(keys(_)) // stable
+    val step = rows.length.toDouble / files
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var target = step
+    order.iterator.zipWithIndex.foreach { case (r, i) =>
+      if (cuts.size < files - 1 && i + 1 >= target &&
+          cuts.lastOption.forall(keys(r) > _)) {
+        cuts += keys(r)
+        target += step
+      }
+    }
+    Some(order.groupBy(r => cuts.indexWhere(keys(r) <= _) match {
+        case -1 => cuts.size
+        case p => p
+      }).toSeq.sortBy(_._1).map(_._2.map(rows).toArray))
+  }
+
   /** Write `df` as `files` parquet files laid out along the z-curve of
     * `dims`: range-partition by zkey (contiguous curve segments per
     * file) and sort within each file, so every file's parquet min/max

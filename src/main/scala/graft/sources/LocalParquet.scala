@@ -4,10 +4,12 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** Driver-side single-parquet-file writer for METADATA-sized frames
-  * (lineage segments, checkpoint folds, the one-row-batch appends of
-  * [[appendFile]]) — the rows are already local
-  * `Array[Row]`s by construction, and launching a Spark job (task +
+/** Driver-side single-parquet-file writer for frames whose rows the
+  * driver already holds: METADATA-sized ones (lineage segments,
+  * checkpoint folds, the one-row-batch appends of [[appendFile]]) and
+  * the data files of a small commit whose batch is a local relation
+  * (TimeTravel's driver layout, one file per z-curve run) — the rows
+  * are already local `Array[Row]`s, and launching a Spark job (task +
   * output-committer temporary-directory dance + rename) per one-file
   * write was a fixed per-commit cost the data never justified (r18,
   * guide §1.2 — same move as [[graft.operators.Ledger]]'s jobless
@@ -16,7 +18,7 @@ import org.apache.spark.sql.types._
   * binary, date=INT32/DATE, timestamp=INT64 micros UTC-adjusted — a
   * lossless image of Spark's internal micros), so `spark.read
   * .parquet`/mergeSchema over mixed Spark-written and locally-written
-  * segments sees one coherent schema.
+  * files sees one coherent schema.
   *
   * Conservative by construction: [[write]] returns false — and writes
   * NOTHING — whenever any field's type or column name falls outside

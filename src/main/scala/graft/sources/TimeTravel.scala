@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Versioned lake snapshots — read-as-of ("time travel") over an
   * append-only file-action lineage, the subsystem the [[Layout]] family
@@ -579,14 +579,21 @@ object TimeTravel {
     * no data is read.
     */
   private def liveFileNames(spark: SparkSession, dataPath: String,
-                            v: Long): Seq[String] = {
-    val s = lineageSnap(spark, dataPath)
-    // driver fold over the cached snapshot (file-count-sized) — the
-    // hottest metadata question, asked by every face; zero jobs
+                            v: Long): Seq[String] =
+    lastActions(lineageSnap(spark, dataPath), v).iterator
+      .collect { case (f, (a, rm)) if a > 0 && a > rm => f }.toSeq.sorted
+
+  /** Per file, its latest `add` and latest `remove` version at or before
+    * `upTo` (0 when it has none) — the latest-action-wins fold of
+    * [[liveFileNames]] and [[vacuum]]. A driver fold over the cached
+    * snapshot (file-count-sized), the hottest metadata question, asked
+    * by every face; zero jobs. */
+  private def lastActions(s: LineageRows,
+                          upTo: Long): collection.Map[String, (Long, Long)] = {
     val acc = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
     s.rows.foreach { r =>
       val ver = r.getLong(s.vIdx)
-      if (ver <= v) {
+      if (ver <= upTo) {
         val (a0, r0) = acc.getOrElse(r.getString(s.fIdx), (0L, 0L))
         r.getString(s.aIdx) match {
           case "add" => acc(r.getString(s.fIdx)) = (math.max(a0, ver), r0)
@@ -595,8 +602,7 @@ object TimeTravel {
         }
       }
     }
-    acc.iterator.collect { case (f, (a, rm)) if a > 0 && a > rm => f }
-      .toSeq.sorted
+    acc
   }
 
   /** Append one commit's action rows as the lineage segment for version
@@ -1100,7 +1106,14 @@ object TimeTravel {
     FooterStats.statsDf(spark,
       promoted.map(n => (n, hp(s"$dataPath/$n"))), schema, dims)
 
-  /** Stage `df` (already clustered by the caller), promote the parts
+  /** A generation laid out on the driver ([[Layout.zRunsOnDriver]]):
+    * its rows in curve order, one run per file. */
+  private final case class LocalRuns(schema: StructType,
+                                     runs: Seq[Array[Row]])
+
+  /** Stage `staged` (already clustered by the caller: a frame Spark
+    * writes, or runs [[LocalParquet]] writes one file each with no
+    * Spark job), promote the parts
     * under attempt-unique `v<v>_<token>_<i>.parquet` names, and return
     * the commit's `add` lineage rows: per promoted file its row count
     * AND the [[Layout.statsAggs]] min/max/null-count payload for
@@ -1112,9 +1125,10 @@ object TimeTravel {
     * invisible orphans, never residue a retry must clear.
     */
   private def stageAndPromote(spark: SparkSession, dataPath: String,
-                              v: Long, staged: DataFrame,
+                              v: Long, staged: Either[DataFrame, LocalRuns],
                               dims: Seq[String]): DataFrame = {
     val fs = fsOf(spark, dataPath)
+    val schema = staged.fold(_.schema, _.schema)
     // ATTEMPT-UNIQUE names (r14): a random token per staging attempt
     // keeps two committers racing to the same version from clobbering
     // each other's parts — the hazard the arbiter scaladoc used to
@@ -1128,7 +1142,15 @@ object TimeTravel {
         (1L << 62)).take(8)
     val staging = stagingPath(dataPath, v) + s"_$tok"
     fs.delete(hp(staging), true)
-    staged.write.mode("overwrite").parquet(staging)
+    staged match {
+      case Left(df) => df.write.mode("overwrite").parquet(staging)
+      case Right(l) => l.runs.zipWithIndex.foreach { case (run, i) =>
+        require(LocalParquet.write(run, l.schema,
+          f"$staging/part-$i%05d.parquet",
+          spark.sparkContext.hadoopConfiguration),
+          s"time-travel commit: ${l.schema.simpleString} is outside " +
+            "the driver writer's types") }
+    }
     crashForTests("staged")
     fs.mkdirs(hp(dataPath))
     val parts = fs.listStatus(hp(staging))
@@ -1158,10 +1180,8 @@ object TimeTravel {
     // q144 finding). Monotone by construction: widenMerge can only
     // keep or widen the previous record.
     val cumulative = recordedTableSchema(spark, dataPath) match {
-      case Some(cur) => widenMerge(cur, staged.schema,
-        s"commit of $dataPath")
-      case None =>
-        normalizeType(staged.schema).asInstanceOf[StructType]
+      case Some(cur) => widenMerge(cur, schema, s"commit of $dataPath")
+      case None => normalizeType(schema).asInstanceOf[StructType]
     }
     // Per-file stats from the parquet FOOTERS of the files this commit
     // just wrote (r17, guide §1.2/§6): the staging write already paid
@@ -1176,21 +1196,20 @@ object TimeTravel {
     // absent-when-truncated); float/double (NaN/±0.0 divergence) and
     // everything else fall back to the scan, as does any file whose
     // footer lacks a needed stat.
-    val stats = footerStatsDf(spark, dataPath, promoted, staged.schema,
-        dims)
+    val stats = footerStatsDf(spark, dataPath, promoted, schema, dims)
       .getOrElse(
         spark.read.parquet(promoted.map(n => s"$dataPath/$n"): _*)
           .groupBy(element_at(split(input_file_name(), "/"), -1)
             .as("file_name"))
           .agg(count(lit(1)).as("n_rows"),
-            Layout.statsAggs(staged.schema, dims): _*))
+            Layout.statsAggs(schema, dims): _*))
     stats
       .withColumn("version", lit(v))
       .withColumn("action", lit("add"))
       // the commit's schema rides its add rows (metadata-sized): what
       // readFilesWidened folds into the read target, and what the
       // narrowing guard compares the next batch against
-      .withColumn("schema_json", lit(staged.schema.json))
+      .withColumn("schema_json", lit(schema.json))
       .withColumn("table_schema_json", lit(cumulative.json))
   }
 
@@ -1203,7 +1222,10 @@ object TimeTravel {
     * pass a guard and then write different rows. MEMORY_AND_DISK spills
     * instead of OOMing when a batch outgrows executor storage (the
     * materialize-the-merge-source move Delta's MERGE makes);
-    * unpersisted on every exit.
+    * unpersisted on every exit. A batch the driver already holds
+    * ([[Layout.driverHeld]]) is materialized and deterministic as it
+    * stands, so [[commitAppend]] passes it through uncached: caching
+    * it would hide the local rows the driver layout reads.
     */
   private def materialized[T](df: DataFrame)(body: DataFrame => T): T = {
     val mat = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1217,7 +1239,8 @@ object TimeTravel {
     * union every read uses). A face plans against `base` (which files
     * to rewrite, which rows survive) and owns its guards and its retry
     * rule; everything after the plan happens here, once:
-    *  1. the batch arrives [[materialized]] from its face; a merge
+    *  1. the batch arrives [[materialized]] from its face (or as the
+    *     driver's own rows, which need no cache); a merge
     *     generation (survivors AND a batch — a join tree) is
     *     materialized too, so the bounds probe, the range partitioner's
     *     sample and the staged write evaluate it once. Survivors alone
@@ -1227,7 +1250,13 @@ object TimeTravel {
     *  2. it is z-clustered on `dimsFor(its columns)` into `files`
     *     parquet files: ONE aggregate ([[Layout.countAndZKey]]) yields
     *     the row count and the z-key bounds, [[Layout.zCluster]] lays
-    *     out the curve. A generation of `wholeFiles` (the rewritten
+    *     out the curve. A generation that is only a batch the driver
+    *     holds, with integral or date dims and a schema
+    *     [[LocalParquet]] writes, is laid out on the driver instead
+    *     ([[Layout.zRunsOnDriver]]: the same keys, cut into runs
+    *     without splitting a key) and staged one file per run with no
+    *     Spark job; only the write in [[stageAndPromote]] differs. A
+    *     generation of `wholeFiles` (the rewritten
     *     files kept whole, no batch: compact, compactSmall) takes the
     *     count and bounds from the files' lineage `add` rows instead
     *     when they are exact ([[lineageZBounds]]), so the files are
@@ -1256,15 +1285,24 @@ object TimeTravel {
         if (wholeFiles && batch.isEmpty && cluster && dims.nonEmpty)
           lineageZBounds(spark, dataPath, rewrite, gen, dims)
         else None
-      val (empty, laid) =
-        if (!cluster || dims.isEmpty)
-          (rewrite.isEmpty && gen.isEmpty, gen.repartition(files))
-        else fromLineage.map { case (n, bounds) =>
+      val clustered = cluster && dims.nonEmpty
+      // only a lone batch can be driver-held: survivors are file scans
+      // and a merge generation is cached
+      val onDriver =
+        if (clustered && rewrite.isEmpty)
+          Layout.zRunsOnDriver(gen, dims, files)
+        else None
+      val (empty, laid) = onDriver match {
+        case Some(runs) => (runs.isEmpty, Right(LocalRuns(gen.schema, runs)))
+        case None if !clustered =>
+          (rewrite.isEmpty && gen.isEmpty, Left(gen.repartition(files)))
+        case None => fromLineage.map { case (n, bounds) =>
             (n, Layout.zKeyFromBounds(gen, dims, bounds)) }
           .getOrElse(Layout.countAndZKey(gen, dims)) match {
-          case (0L, _) => (true, gen.repartition(files))
-          case (_, keyed) => (false, Layout.zCluster(keyed, files))
+          case (0L, _) => (true, Left(gen.repartition(files)))
+          case (_, keyed) => (false, Left(Layout.zCluster(keyed, files)))
         }
+      }
       if (empty && rewrite.isEmpty) return base
       admit()
       val v = base + 1
@@ -1323,22 +1361,14 @@ object TimeTravel {
         r.getString(s.aIdx) == "add" && want(r.getString(s.fIdx)))
       .map(r => r.getString(s.fIdx) -> r).toMap.values.toSeq
     if (adds.size != want.size || adds.exists(_.isNullAt(nIdx))) return None
-    def image(v: Any): Option[Double] = v match {
-      case n: java.lang.Long    => Some(n.doubleValue)
-      case n: java.lang.Integer => Some(n.doubleValue)
-      case d: java.sql.Date =>
-        Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .fromJavaDate(d).toDouble)
-      case d: java.time.LocalDate => Some(d.toEpochDay.toDouble)
-      case _ => None
-    }
     val bounds = stat.map { case (mnI, mxI, nuI) =>
       val perFile = adds.map { r =>
         if (r.isNullAt(nuI)) None
         else if (r.isNullAt(mnI) || r.isNullAt(mxI))
           Option.when(r.getLong(nuI) == r.getLong(nIdx))(
             Option.empty[(Double, Double)])
-        else for (lo <- image(r.get(mnI)); hi <- image(r.get(mxI)))
+        else for (lo <- Layout.exactOrdImage(r.get(mnI));
+                  hi <- Layout.exactOrdImage(r.get(mxI)))
           yield Option((lo, hi))
       }
       if (perFile.exists(_.isEmpty)) return None
@@ -1392,7 +1422,11 @@ object TimeTravel {
     * recorded ([[rewriteCommit]], rewriting no file). Returns the
     * committed version; an empty batch commits nothing (streaming
     * epochs are routinely empty). `batchId` makes whole-commit replays
-    * exact no-ops (see object doc).
+    * exact no-ops (see object doc). A batch is [[materialized]] once,
+    * unless the driver already holds its rows ([[Layout.driverHeld]]):
+    * such a batch, with integral or date dims and a schema
+    * [[LocalParquet]] writes, commits warm with no Spark job (the
+    * driver layout of [[rewriteCommit]] step 2).
     *
     * `expectedVersion` is the pre-commit CAS for writers that stamp
     * the target version INTO their rows (e.g. [[Scd]] epochs): when
@@ -1405,9 +1439,11 @@ object TimeTravel {
   def commitAppend(df: DataFrame, dataPath: String, dims: Seq[String],
                    files: Int, batchId: Option[String] = None,
                    retries: Int = 3,
-                   expectedVersion: Option[Long] = None): Long =
-    materialized(df)(appendBatch(_, dataPath, dims, files, batchId,
-      retries, expectedVersion))
+                   expectedVersion: Option[Long] = None): Long = {
+    def append(b: DataFrame): Long =
+      appendBatch(b, dataPath, dims, files, batchId, retries, expectedVersion)
+    if (Layout.driverHeld(df)) append(df) else materialized(df)(append)
+  }
 
   private def appendBatch(df: DataFrame, dataPath: String,
                           dims: Seq[String], files: Int,
@@ -2715,34 +2751,41 @@ object TimeTravel {
 
   /** What [[vacuum]] at `keepFrom` WOULD reclaim — the dry run an
     * operator reads before trading history for space. Same
-    * latest-action-wins doom rule, zero side effects: one row per
-    * reclaimable file with the version that removed it.
+    * latest-action-wins doom rule ([[doomedFiles]]), zero side effects:
+    * one row per reclaimable file with the version that removed it,
+    * ordered by file name. A local frame; no Spark job.
     */
   def vacuumPreview(spark: SparkSession, dataPath: String,
-                    keepFrom: Long): DataFrame = {
+                    keepFrom: Long): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(
+        doomedFiles(spark, dataPath, keepFrom, "vacuumPreview")
+          .map { case (f, r) => Row(f, r) }: _*),
+      StructType(Seq(StructField("file_name", StringType),
+        StructField("removed_at_version", LongType))))
+
+  /** The files no version ≥ `keepFrom` can need, each with the version
+    * that removed it, sorted by name: those whose LATEST add/remove
+    * action is a remove at a version ≤ `keepFrom`, not yet vacuumed.
+    * Latest-action-wins, exactly like [[liveFileNames]]: a [[rollback]]
+    * re-ADDS a file an earlier version had removed, and that file is
+    * live at the head — a mere "has a remove ≤ keepFrom" test would
+    * physically delete it and corrupt the current table. One driver
+    * fold over the lineage snapshot; zero jobs. */
+  private def doomedFiles(spark: SparkSession, dataPath: String,
+                          keepFrom: Long, face: String): Seq[(String, Long)] = {
     val latest = latestVersion(spark, dataPath)
     require(keepFrom >= 1 && keepFrom <= latest,
-      s"vacuumPreview: keepFrom $keepFrom outside committed range " +
-        s"[1, $latest]")
-    val l = lineage(spark, dataPath)
-    l.filter(col("action").isin("add", "remove"))
-      .groupBy(col("file_name"))
-      .agg(max(when(col("action") === "add", col("version"))).as("__a"),
-        max(when(col("action") === "remove", col("version"))).as("__r"))
-      .filter(col("__r").isNotNull && col("__r") <= keepFrom &&
-        (col("__a").isNull || col("__a") < col("__r")))
-      .join(l.filter(col("action") === "vacuum"),
-        Seq("file_name"), "left_anti")
-      .select(col("file_name"), col("__r").as("removed_at_version"))
-      .orderBy(col("file_name"))
+      s"$face: keepFrom $keepFrom outside committed range [1, $latest]")
+    val s = lineageSnap(spark, dataPath)
+    val vacuumed = s.rows.iterator.filter(_.getString(s.aIdx) == "vacuum")
+      .map(_.getString(s.fIdx)).toSet
+    lastActions(s, Long.MaxValue).iterator.collect {
+      case (f, (a, rm)) if rm > 0 && rm <= keepFrom && a < rm &&
+          !vacuumed(f) => (f, rm)
+    }.toSeq.sortBy(_._1)
   }
 
-  /** Physically reclaim files no version ≥ `keepFrom` can need: those
-    * whose LATEST add/remove action is a remove at a version ≤
-    * `keepFrom`. Latest-action-wins, exactly like [[liveFileNames]]:
-    * a [[rollback]] re-ADDS a file an earlier version had removed, and
-    * that file is live at the head — a mere "has a remove ≤ keepFrom"
-    * test would physically delete it and corrupt the current table.
+  /** Physically reclaim the files [[doomedFiles]] names for `keepFrom`.
     * Records a `vacuum` action per reclaimed file (at a fresh version,
     * so the log stays strictly ordered), after which [[readAsOf]]
     * refuses the truncated range loudly instead of returning partial
@@ -2752,20 +2795,7 @@ object TimeTravel {
     * re-records harmlessly.
     */
   def vacuum(spark: SparkSession, dataPath: String, keepFrom: Long): Int = {
-    val latest = latestVersion(spark, dataPath)
-    require(keepFrom >= 1 && keepFrom <= latest,
-      s"vacuum: keepFrom $keepFrom outside committed range [1, $latest]")
-    val l = lineage(spark, dataPath)
-    val doomed = l.filter(col("action").isin("add", "remove"))
-      .groupBy(col("file_name"))
-      .agg(max(when(col("action") === "add", col("version"))).as("__a"),
-        max(when(col("action") === "remove", col("version"))).as("__r"))
-      .filter(col("__r").isNotNull && col("__r") <= keepFrom &&
-        (col("__a").isNull || col("__a") < col("__r")))
-      .join(l.filter(col("action") === "vacuum"),
-        Seq("file_name"), "left_anti")
-      .select(col("file_name")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    val doomed = doomedFiles(spark, dataPath, keepFrom, "vacuum").map(_._1)
     if (doomed.isEmpty) return 0
     val fs = fsOf(spark, dataPath)
     doomed.foreach { n =>

@@ -43,6 +43,17 @@ class CrashMatrixSpec extends SparkSpec {
     spark.range(0L, 50L)
       .select(col("id"), (col("id") % 5).as("grp"), (col("id") * 3).as("v"))
 
+  /** The ids `[from, until)` in the base shape, as either batch kind:
+    * range-backed (the distributed layout) or held on the driver (a
+    * `LocalRelation`, which a commit stages with no Spark job). */
+  private def shaped(kind: String, from: Long, until: Long): DataFrame =
+    if (kind == "local")
+      (from until until).map(i => (i, i % 5, i * 3)).toDF("id", "grp", "v")
+    else spark.range(from, until)
+      .select(col("id"), (col("id") % 5).as("grp"), (col("id") * 3).as("v"))
+
+  private val batchKinds = Seq("range", "local")
+
   private def rows(dir: String): Set[(Long, Long, Long)] =
     TimeTravel.read(spark, dir).select(col("id"), col("grp"), col("v"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -109,14 +120,15 @@ class CrashMatrixSpec extends SparkSpec {
   test("commitAppend × {staged, promote_partial, promoted, ledger}: " +
       "v1 intact, orphans reclaimed, batchId retry exactly-once even " +
       "when the crash fell between the lineage and the ledger") {
-    def extra = spark.range(100L, 120L)
-      .select(col("id"), (col("id") % 5).as("grp"), (col("id") * 3).as("v"))
     val want = baseRows ++ (100L until 120L).map(i => (i, i % 5, i * 3))
-    def mutate(dir: String): Unit =
-      TimeTravel.commitAppend(extra, dir, Seq("id"), files = 2,
-        batchId = Some("mx_append")): Unit
-    (preSteps :+ "ledger").foreach(s =>
-      cell("append", s, mutate, want, retryBurnsVersion = false))
+    batchKinds.foreach { kind =>
+      def extra = shaped(kind, 100L, 120L)
+      def mutate(dir: String): Unit =
+        TimeTravel.commitAppend(extra, dir, Seq("id"), files = 2,
+          batchId = Some("mx_append")): Unit
+      (preSteps :+ "ledger").foreach(s =>
+        cell(s"append_$kind", s, mutate, want, retryBurnsVersion = false))
+    }
   }
 
   test("commitUpsert × every step boundary: matched files rewritten " +
@@ -191,39 +203,39 @@ class CrashMatrixSpec extends SparkSpec {
   test("checkpoint boundary: a crash in the post-commit log fold " +
       "leaves the commit durable and no half-written checkpoint; the " +
       "replay absorbs and the NEXT commit folds the backlog") {
-    val dir = tmpDir("ckpt_crash")
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.setInt(TimeTravel.checkpointIntervalKey, 1)
-    try {
-      TimeTravel.commitAppend(base, dir, Seq("id"), files = 2) // v1 folds
-      def extra = spark.range(100L, 120L)
-        .select(col("id"), (col("id") % 5).as("grp"), (col("id") * 3).as("v"))
-      val want = baseRows ++ (100L until 120L).map(i => (i, i % 5, i * 3))
-      def mutate(): Unit = TimeTravel.commitAppend(extra, dir, Seq("id"),
-        files = 2, batchId = Some("mx_ckpt")): Unit
-      crashingAt("checkpoint")(mutate())
-      // the fold is post-commit maintenance: the commit IS durable
-      assert(TimeTravel.latestVersion(spark, dir) == 2L)
-      assert(rows(dir) == want)
-      val lp = TimeTravel.lineagePath(dir)
-      val fs = new org.apache.hadoop.fs.Path(lp)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def cks = fs.listStatus(new org.apache.hadoop.fs.Path(lp))
-        .map(_.getPath.getName).filter(_.startsWith("ckpt_")).toSeq.sorted
-      assert(cks == Seq("ckpt_v1.parquet"),
-        s"half-written checkpoint after crash: $cks")
-      TimeTravel.gcOrphans(spark, dir): Unit
-      // replay absorbs version-free (the batch id rides the segment)
-      mutate()
-      assert(TimeTravel.latestVersion(spark, dir) == 2L && rows(dir) == want)
-      // the next commit folds the backlog; reads survive the reclaim
-      TimeTravel.commitAppend(spark.range(200L, 210L)
-        .select(col("id"), (col("id") % 5).as("grp"),
-          (col("id") * 3).as("v")), dir, Seq("id"), files = 1) // v3
-      assert(cks.contains("ckpt_v3.parquet"), cks.toString)
-      assert(TimeTravel.vacuumLineage(spark, dir, graceMillis = 0) > 0)
-      assert(TimeTravel.readAsOf(spark, dir, 1L).count() == 50L)
-      assert(TimeTravel.latestVersion(spark, dir) == 3L)
-    } finally conf.unset(TimeTravel.checkpointIntervalKey)
+    batchKinds.foreach { kind =>
+      val dir = tmpDir(s"ckpt_crash_$kind")
+      val conf = spark.sparkContext.hadoopConfiguration
+      conf.setInt(TimeTravel.checkpointIntervalKey, 1)
+      try {
+        TimeTravel.commitAppend(base, dir, Seq("id"), files = 2) // v1 folds
+        def extra = shaped(kind, 100L, 120L)
+        val want = baseRows ++ (100L until 120L).map(i => (i, i % 5, i * 3))
+        def mutate(): Unit = TimeTravel.commitAppend(extra, dir, Seq("id"),
+          files = 2, batchId = Some("mx_ckpt")): Unit
+        crashingAt("checkpoint")(mutate())
+        // the fold is post-commit maintenance: the commit IS durable
+        assert(TimeTravel.latestVersion(spark, dir) == 2L)
+        assert(rows(dir) == want)
+        val lp = TimeTravel.lineagePath(dir)
+        val fs = new org.apache.hadoop.fs.Path(lp)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def cks = fs.listStatus(new org.apache.hadoop.fs.Path(lp))
+          .map(_.getPath.getName).filter(_.startsWith("ckpt_")).toSeq.sorted
+        assert(cks == Seq("ckpt_v1.parquet"),
+          s"half-written checkpoint after crash: $cks")
+        TimeTravel.gcOrphans(spark, dir): Unit
+        // replay absorbs version-free (the batch id rides the segment)
+        mutate()
+        assert(TimeTravel.latestVersion(spark, dir) == 2L && rows(dir) == want)
+        // the next commit folds the backlog; reads survive the reclaim
+        TimeTravel.commitAppend(shaped(kind, 200L, 210L), dir, Seq("id"),
+          files = 1) // v3
+        assert(cks.contains("ckpt_v3.parquet"), cks.toString)
+        assert(TimeTravel.vacuumLineage(spark, dir, graceMillis = 0) > 0)
+        assert(TimeTravel.readAsOf(spark, dir, 1L).count() == 50L)
+        assert(TimeTravel.latestVersion(spark, dir) == 3L)
+      } finally conf.unset(TimeTravel.checkpointIntervalKey)
+    }
   }
 }

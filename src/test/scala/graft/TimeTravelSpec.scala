@@ -31,6 +31,16 @@ class TimeTravelSpec extends SparkSpec {
     spark.range(b * 100L, b * 100L + 100)
       .select(col("id"), (col("id") % 5).as("grp"), (col("id") * 3).as("v"))
 
+  /** [[batch]]'s rows held on the driver (a `LocalRelation`): the kind
+    * a commit lays out and stages with no Spark job. */
+  private def localBatch(b: Int): DataFrame =
+    (b * 100L until b * 100L + 100).map(i => (i, i % 5, i * 3))
+      .toDF("id", "grp", "v")
+
+  /** Both batch kinds, for the specs every commit path must pass. */
+  private val batchKinds: Seq[(String, Int => DataFrame)] =
+    Seq("range" -> batch, "local" -> localBatch)
+
   private def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().map(_.getLong(0)).toSeq.sorted
 
@@ -1165,59 +1175,63 @@ class TimeTravelSpec extends SparkSpec {
 
   test("optimistic appends: two racing disjoint appends BOTH land, at " +
       "v and v+1") {
-    val dir = tmpDir("optappend")
-    TimeTravel.commitAppend(batch(0), dir, Seq("id"), files = 2) // v1
-    // the loser computes v2, then the winner's append lands v2 first
-    val v = interleaving {
-      assert(TimeTravel.commitAppend(batch(1), dir, Seq("id"),
-        files = 2) == 2L)
-    } {
-      TimeTravel.commitAppend(batch(2), dir, Seq("id"), files = 2)
+    batchKinds.foreach { case (kind, batch) =>
+      val dir = tmpDir(s"optappend_$kind")
+      TimeTravel.commitAppend(batch(0), dir, Seq("id"), files = 2) // v1
+      // the loser computes v2, then the winner's append lands v2 first
+      val v = interleaving {
+        assert(TimeTravel.commitAppend(batch(1), dir, Seq("id"),
+          files = 2) == 2L)
+      } {
+        TimeTravel.commitAppend(batch(2), dir, Seq("id"), files = 2)
+      }
+      assert(v == 3L, s"the out-raced append must retry and land v3, got $v")
+      assert(TimeTravel.latestVersion(spark, dir) == 3L)
+      assert(ids(TimeTravel.read(spark, dir)) == (0L until 300L))
+      // history is clean: v2 holds exactly the winner's rows
+      assert(ids(TimeTravel.readAsOf(spark, dir, 2)) == (0L until 200L))
     }
-    assert(v == 3L, s"the out-raced append must retry and land v3, got $v")
-    assert(TimeTravel.latestVersion(spark, dir) == 3L)
-    assert(ids(TimeTravel.read(spark, dir)) == (0L until 300L))
-    // history is clean: v2 holds exactly the winner's rows
-    assert(ids(TimeTravel.readAsOf(spark, dir, 2)) == (0L until 200L))
   }
 
   test("expectedVersion is a pre-commit CAS: a pinned commit refuses " +
       "before staging when the head has moved, never retries past the " +
       "pin, and a stale pin on an upsert leaves the table untouched") {
     import spark.implicits._
-    val dir = tmpDir("caspin")
-    TimeTravel.commitAppend(batch(0), dir, Seq("id"), files = 2) // v1
-    // stale pin on an append: the head lands at 2, the caller pinned 9
-    val ap = intercept[graft.sources.CommitRaceLost] {
-      TimeTravel.commitAppend(batch(1), dir, Seq("id"), files = 2,
-        expectedVersion = Some(9L))
-    }
-    assert(ap.getMessage.contains("before staging"))
-    // a pinned append that loses the segment race refuses instead of
-    // retrying to a version past its pin
-    val raced = intercept[graft.sources.CommitRaceLost] {
-      interleaving {
-        TimeTravel.commitAppend(batch(2), dir, Seq("id"), files = 2): Unit
-      } {
+    batchKinds.foreach { case (kind, batch) =>
+      val dir = tmpDir(s"caspin_$kind")
+      TimeTravel.commitAppend(batch(0), dir, Seq("id"), files = 2) // v1
+      // stale pin on an append: the head lands at 2, the caller pinned 9
+      val ap = intercept[graft.sources.CommitRaceLost] {
         TimeTravel.commitAppend(batch(1), dir, Seq("id"), files = 2,
-          expectedVersion = Some(2L))
+          expectedVersion = Some(9L))
       }
-    }
-    assert(raced.version == 2L)
-    // stale pin on an upsert: refused with the version unmoved and the
-    // head content intact
-    val before = TimeTravel.latestVersion(spark, dir)
-    val up = intercept[graft.sources.CommitRaceLost] {
-      TimeTravel.commitUpsert(spark, dir, "id",
+      assert(ap.getMessage.contains("before staging"))
+      // a pinned append that loses the segment race refuses instead of
+      // retrying to a version past its pin
+      val raced = intercept[graft.sources.CommitRaceLost] {
+        interleaving {
+          TimeTravel.commitAppend(batch(2), dir, Seq("id"), files = 2): Unit
+        } {
+          TimeTravel.commitAppend(batch(1), dir, Seq("id"), files = 2,
+            expectedVersion = Some(2L))
+        }
+      }
+      assert(raced.version == 2L)
+      // stale pin on an upsert: refused with the version unmoved and the
+      // head content intact
+      val before = TimeTravel.latestVersion(spark, dir)
+      val up = intercept[graft.sources.CommitRaceLost] {
+        TimeTravel.commitUpsert(spark, dir, "id",
+          Seq((0L, "x")).toDF("id", "payload"), files = 2,
+          expectedVersion = Some(before + 7L))
+      }
+      assert(up.getMessage.contains("before staging"))
+      assert(TimeTravel.latestVersion(spark, dir) == before)
+      // a correct pin commits exactly there
+      assert(TimeTravel.commitUpsert(spark, dir, "id",
         Seq((0L, "x")).toDF("id", "payload"), files = 2,
-        expectedVersion = Some(before + 7L))
+        expectedVersion = Some(before + 1L)) == before + 1L)
     }
-    assert(up.getMessage.contains("before staging"))
-    assert(TimeTravel.latestVersion(spark, dir) == before)
-    // a correct pin commits exactly there
-    assert(TimeTravel.commitUpsert(spark, dir, "id",
-      Seq((0L, "x")).toDF("id", "payload"), files = 2,
-      expectedVersion = Some(before + 1L)) == before + 1L)
   }
 
   test("optimistic merges: provably DISJOINT racing merges both land; " +
