@@ -1,14 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{DotProductII, HyperplaneSignature, MinHashSignature, NgramHashes, NgramHashesAll, Quantize8, SimHash64, TDigestQuantile, TDigestSketch, WinnowFingerprints}
-import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
+import graft.operators.{Dedup, Joins, Lifecycle, Profiling, Similarity, TimeSeries}
+import graft.sources.{Layout, MatView, Scd, SnapshotGroup, TimeTravel}
 
 /** SparkSessionExtensions entry point — registers the engine's custom
   * expressions as SQL functions AND its table-level operators as SQL
@@ -25,7 +30,16 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *
   * Table functions take the INPUT TABLE BY NAME (temp view or catalog
   * table — resolved against the active session when the query is
-  * analyzed) and literal strings for columns/predicates/aggregates:
+  * analyzed) and literal strings for columns/predicates/aggregates.
+  *
+  * The faces that write (commits, deletes, layout writes, maintenance,
+  * publishes) return a one-node [[GraftExtensions.Effect]] command: the
+  * write runs once when `spark.sql(...)` returns, under that query's SQL
+  * execution, never at analysis and never for `EXPLAIN`; its receipt
+  * reads back as local rows ([[GraftExtensions.EffectReceipt]]). The
+  * compute faces that run jobs to build their result (the corpus dedup,
+  * the IVF build, BPE training) still run them at analysis, like the
+  * Scala call they inline:
   *
   *  - `graft_profile(table, 'c1,c2'[, approx])` — per-column profile
   *    ([[Profiling.profile]]; `approx = true` uses HLL++ distincts)
@@ -46,8 +60,8 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    ([[graft.operators.Dedup.minhashCandidatePairs]])
   *  - `graft_dedup_corpus(table, idCol, textCol[, threshold])` — the
   *    one-call near-dedup with survivor semantics
-  *    ([[graft.operators.Dedup.dedupCorpus]]; a BUILD-style operator —
-  *    its connected-components fixpoint runs jobs while the SQL query is
+  *    ([[graft.operators.Dedup.dedupCorpus]]; a compute face — its
+  *    connected-components fixpoint runs jobs while the SQL query is
   *    analyzed, like the Scala call it inlines)
   *  - `graft_simhash_pairs(table, idCol, textCol[, maxHamming, blocks,
   *    maxBucket])` — SimHash near-dup pair mining
@@ -81,7 +95,7 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    ([[graft.operators.Similarity.rescoredTopK]])
   *  - `graft_ivf_topk(corpus, queries, idCol, vecCol, k[, nCells,
   *    nProbe])` — IVF ANN ([[graft.operators.Similarity.ivfTopK]]; a
-  *    BUILD-style operator — its k-means runs jobs at analysis time)
+  *    compute face — its k-means runs jobs at analysis time)
   *  - `graft_lsh_topk(corpus, idCol, vecCol, k, prefixBits[, tables,
   *    multiProbe])` — LSH-bucketed ANN self-search
   *    ([[graft.operators.Similarity.lshTopK]]; prefixBits is REQUIRED in
@@ -164,7 +178,7 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    `graft_delete_ivf(ids, indexPath, idCol)` /
   *    `graft_delete_lsh(ids, indexPath, idCol)` /
   *    `graft_delete_pq(ids, indexPath, idCol)` — index tombstones
-  *    (BUILD-style receipts; see [[graft.operators.Tombstones]])
+  *    (receipts; see [[graft.operators.Tombstones]])
   *  - `graft_wav_features(table)` — per-channel PCM energy rows over
   *    WAV payloads ([[graft.operators.Multimodal.wavChannelFeatures]])
   *  - `graft_mp4_frames(table)` — per-frame size/duration rows from
@@ -178,10 +192,10 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *  - `graft_zorder_write(table, dataPath, 'd1,d2[,d3…]', files)` (or
   *    legacy `(table, dataPath, colA, colB, files)`) — Z-order
   *    clustered parquet write ([[graft.sources.Layout.writeZOrdered]];
-  *    BUILD-style, returns a one-row receipt)
+  *    returns a one-row receipt)
   *  - `graft_update_manifest(dataPath, 'dim1,dim2')` — incremental
   *    file-stats manifest update, new files only
-  *    ([[graft.sources.Layout.updateManifest]]; BUILD-style)
+  *    ([[graft.sources.Layout.updateManifest]]; a receipt)
   *  - `graft_pruned_read(dataPath, col1, lo1, hi1[, col2, lo2, hi2, …])`
   *    — manifest-pruned scan; bounds are strings cast to each
   *    dimension's type ([[graft.sources.Layout.prunedRead]])
@@ -189,9 +203,9 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    files)` / `graft_append_partitioned(…)` — hive-partitioned
   *    z-ordered write / batch append
   *    ([[graft.sources.Layout.writeZOrderedPartitioned]] /
-  *    [[graft.sources.Layout.appendZOrderedPartitioned]]; BUILD-style)
+  *    [[graft.sources.Layout.appendZOrderedPartitioned]]; receipts)
   *  - `graft_update_manifest_partitioned(root, 'dims')` — per-leaf
-  *    incremental manifest refresh (BUILD-style)
+  *    incremental manifest refresh (a receipt)
   *  - `graft_pruned_read_partitioned(root, col1, lo1, hi1[, …])` — the
   *    three-level composed pruned scan
   *    ([[graft.sources.Layout.prunedReadPartitioned]])
@@ -199,7 +213,7 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    maxFilesPerLeaf)` / `graft_drop_partition(root, 'k=v')` /
   *    `graft_delete_partitioned(ids, root, 'dims', idCol)` — leaf
   *    compaction / retention drop / cross-partition id takedown
-  *    (BUILD-style receipts)
+  *    (receipts)
   *  - `graft_lookup(dataPath, idCol, '1,2,3')` — bloom/stats-screened
   *    needle lookup ([[graft.sources.Layout.lookupByIds]])
   *  - `graft_tt_commit(table, dataPath, 'dims', files[, batchId])` /
@@ -207,7 +221,7 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    `graft_tt_compact(dataPath, 'dims', files)` /
   *    `graft_tt_vacuum(dataPath, keepFrom)` — versioned-snapshot
   *    commit / versioned delete / live-set compaction / history
-  *    reclamation ([[graft.sources.TimeTravel]]; BUILD-style receipts)
+  *    reclamation ([[graft.sources.TimeTravel]]; receipts)
   *  - `graft_tt_compact_small(dataPath, 'dims', targetBytes)` —
   *    size-aware incremental compaction: bin-pack only sub-target
   *    live files, never rewrite files already at size
@@ -273,7 +287,7 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *  - `graft_tt_upsert(updates, dataPath, idCol, files[, batchId])` —
   *    versioned MERGE: matched keys replaced, the rest inserted, only
   *    matched files rewritten
-  *    ([[graft.sources.TimeTravel.commitUpsert]]; BUILD-style receipt)
+  *    ([[graft.sources.TimeTravel.commitUpsert]]; a receipt)
   *  - `graft_group_publish(groupPath, 'name=path,…')` /
   *    `graft_group_read(groupPath, name[, groupVersion])` /
   *    `graft_group_cuts(groupPath)` / `graft_group_floor(groupPath,
@@ -288,7 +302,7 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    NOT matching the predicate plus the batch; every batch row must
   *    match it (loud refusal names the out-of-region count); an empty
   *    batch is a predicate delete
-  *    ([[graft.sources.TimeTravel.commitReplaceWhere]]; BUILD receipt)
+  *    ([[graft.sources.TimeTravel.commitReplaceWhere]]; a receipt)
   *  - `graft_scd_merge(batch, dataPath, keyCol, files[, batchId])` /
   *    `graft_scd_delete(keys, dataPath, keyCol, files[, batchId])` /
   *    `graft_scd_apply(upserts, deletes, dataPath, keyCol, files[,
@@ -296,7 +310,7 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    close their old row and open a new one, unchanged keys cost
   *    nothing, deletes close without erasing; `apply` lands a MIXED
   *    CDC batch (upserts + deletes) as ONE dimension commit
-  *    ([[graft.sources.Scd]]; BUILD receipts)
+  *    ([[graft.sources.Scd]]; receipts)
   *  - `graft_scd_join(facts, dataPath, keyCol, epochCol)` — the
   *    point-in-time join: each fact row gets the dimension attributes
   *    current AT its own epoch (LEFT: absent/closed keys read null;
@@ -318,7 +332,7 @@ import graft.operators.{Dedup, Joins, Profiling, Similarity, TimeSeries}
   *    `graft_mv_refresh(viewPath)` / `graft_mv_read(viewPath)` —
   *    incrementally maintained count/sum aggregate over a time-travel
   *    table: refresh cost tracks the commits' touch set, never the
-  *    table ([[graft.sources.MatView]]; BUILD-style receipts + read)
+  *    table ([[graft.sources.MatView]]; receipts + read)
   *  - `graft_bpe_train(table, textCol, numMerges)` /
   *    `graft_bpe_encode(table, idCol, textCol, 'l:r,…')` /
   *    `graft_bpe_vocab(table, textCol, 'l:r,…')` — BPE tokenizer
@@ -365,6 +379,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // opt-in COUNT(DISTINCT) → HLL++ sketch rewrite (plans package)
     ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
     ext.injectOptimizerRule(_ => graft.plans.ApproxPercentileRewrite)
+    ext.injectOptimizerRule(_ => EffectReceipt)
     scalarFunctions.foreach(ext.injectFunction)
     tableFunctions.foreach(ext.injectTableFunction)
   }
@@ -438,6 +453,8 @@ object GraftExtensions {
 
   /** Resolve a table-by-name argument against the session analyzing the
     * enclosing query (table-function builders run inside its analyzer).
+    * A writing face resolves its tables here too and hands the frames
+    * to its [[Effect]], which runs them at execution.
     */
   private def tableArg(e: Expression, name: String): DataFrame =
     SparkSession.active.table(strArg(e, name))
@@ -468,12 +485,69 @@ object GraftExtensions {
       }
     }.isEmpty
 
-  /** One-row receipt for the BUILD-style tombstone faces. */
-  private def deleteReceipt(indexPath: String): LogicalPlan = {
-    val spark = SparkSession.active
-    import spark.implicits._
-    plan(Seq(Tuple1(indexPath)).toDF("index_path"))
+  /** A table function's side effect. The face parses its literals and
+    * resolves its input tables at analysis, like every face, and
+    * returns this command; Spark's eager command execution runs `work`
+    * once, when `spark.sql(...)` returns — outside the session catalog's
+    * lock, under one SQL execution, and never for `EXPLAIN`. `work`
+    * returns the receipt rows, shaped as `output`.
+    */
+  final case class Effect(override val output: Seq[Attribute],
+                          work: SparkSession => Seq[Row])
+      extends LeafRunnableCommand {
+    override def run(spark: SparkSession): Seq[Row] = work(spark)
   }
+
+  /** Serves an executed [[Effect]]'s receipt as local rows: the
+    * `CommandResult` Spark leaves in the plan becomes a `LocalRelation`
+    * and the projections over it fold into it, so reading a receipt
+    * runs no Spark job. User-provided rules run after Spark's
+    * own local-relation batch, hence the explicit fold.
+    */
+  object EffectReceipt extends Rule[LogicalPlan] {
+    def apply(p: LogicalPlan): LogicalPlan = {
+      val local = p.transformUp {
+        case CommandResult(out, _: Effect, _, rows) => LocalRelation(out, rows)
+      }
+      if (local eq p) p else ConvertToLocalRelation(local)
+    }
+  }
+
+  /** An [[Effect]] whose receipt has the columns `cols` (strings
+    * nullable, numbers and booleans not: the schema `toDF` gives a
+    * tuple) and the one row `work` returns. */
+  private def receipt(cols: (String, DataType)*)
+                     (work: SparkSession => Product): LogicalPlan =
+    Effect(cols.map { case (n, t) =>
+      AttributeReference(n, t, nullable = t == StringType)() },
+      s => Seq(Row.fromTuple(work(s))))
+
+  /** The `(data_path, version)` receipt of a lake commit. */
+  private def committed(path: String)
+                       (commit: SparkSession => Long): LogicalPlan =
+    receipt("data_path" -> StringType, "version" -> LongType)(s =>
+      (path, commit(s)))
+
+  /** The receipt of a history vacuum: files reclaimed and the earliest
+    * version still readable after it. */
+  private def vacuumed(path: String)
+                      (vacuum: SparkSession => Int): LogicalPlan =
+    receipt("data_path" -> StringType, "files_reclaimed" -> IntegerType,
+        "earliest_readable" -> LongType) { s =>
+      val n = vacuum(s)
+      (path, n, TimeTravel.earliestReadable(s, path))
+    }
+
+  /** A constraint edit's receipt: the table's rules after `edit`, one
+    * row each, by name in Spark's string order (UTF-8 bytes). */
+  private def constraintsAfter(path: String)
+      (edit: SparkSession => Seq[(String, String)]): LogicalPlan =
+    Effect(Seq("name", "expr").map(AttributeReference(_, StringType)()), s =>
+      edit(s).sortBy(r => UTF8String.fromString(r._1)).map(Row.fromTuple))
+
+  /** The receipt of an index tombstone write. */
+  private def deleted(path: String)(delete: => Unit): LogicalPlan =
+    receipt("index_path" -> StringType) { _ => delete; Tuple1(path) }
 
   private val scalarFunctions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
@@ -546,6 +620,8 @@ object GraftExtensions {
     * operator, and returns the resulting logical plan for the analyzer to
     * inline — the plan a SQL caller gets is EXACTLY the plan the Column
     * API builds (same pushdowns, same shuffles), not a reimplementation.
+    * A writing face returns an [[Effect]] that calls the Scala operator
+    * at execution instead.
     */
   private val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => LogicalPlan)] = Seq(
@@ -912,17 +988,16 @@ object GraftExtensions {
         case _ => throw new IllegalArgumentException(
           "graft_weighted_sample(table, keyCol, weightCol, fraction)")
       }),
-    // index tombstones (BUILD-style: the sidecar write runs at analysis,
+    // index tombstones (the sidecar write runs when the query executes,
     // the receipt row reports the delete) — one face per family, same
     // names as the Scala API
     (new FunctionIdentifier("graft_delete_digest"),
       new ExpressionInfo("graft.operators.Dedup", "graft_delete_digest"),
       (args: Seq[Expression]) => args match {
         case Seq(t, p, text) =>
-          val path = strArg(p, "indexPath")
-          Dedup.deleteFromDigestIndex(tableArg(t, "table"), path,
+          val (df, path, c) = (tableArg(t, "table"), strArg(p, "indexPath"),
             strArg(text, "textCol"))
-          deleteReceipt(path)
+          deleted(path)(Dedup.deleteFromDigestIndex(df, path, c))
         case _ => throw new IllegalArgumentException(
           "graft_delete_digest(table, indexPath, textCol)")
       }),
@@ -930,10 +1005,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.operators.Dedup", "graft_delete_minhash"),
       (args: Seq[Expression]) => args match {
         case Seq(t, p, id) =>
-          val path = strArg(p, "indexPath")
-          Dedup.deleteFromMinhashIndex(tableArg(t, "ids"), path,
+          val (df, path, c) = (tableArg(t, "ids"), strArg(p, "indexPath"),
             strArg(id, "idCol"))
-          deleteReceipt(path)
+          deleted(path)(Dedup.deleteFromMinhashIndex(df, path, c))
         case _ => throw new IllegalArgumentException(
           "graft_delete_minhash(ids, indexPath, idCol)")
       }),
@@ -941,10 +1015,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.operators.Dedup", "graft_delete_simhash"),
       (args: Seq[Expression]) => args match {
         case Seq(t, p, id) =>
-          val path = strArg(p, "indexPath")
-          Dedup.deleteFromSimhashIndex(tableArg(t, "ids"), path,
+          val (df, path, c) = (tableArg(t, "ids"), strArg(p, "indexPath"),
             strArg(id, "idCol"))
-          deleteReceipt(path)
+          deleted(path)(Dedup.deleteFromSimhashIndex(df, path, c))
         case _ => throw new IllegalArgumentException(
           "graft_delete_simhash(ids, indexPath, idCol)")
       }),
@@ -952,10 +1025,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.operators.Similarity", "graft_delete_ivf"),
       (args: Seq[Expression]) => args match {
         case Seq(t, p, id) =>
-          val path = strArg(p, "indexPath")
-          Similarity.deleteFromIvfIndex(tableArg(t, "ids"), path,
+          val (df, path, c) = (tableArg(t, "ids"), strArg(p, "indexPath"),
             strArg(id, "idCol"))
-          deleteReceipt(path)
+          deleted(path)(Similarity.deleteFromIvfIndex(df, path, c))
         case _ => throw new IllegalArgumentException(
           "graft_delete_ivf(ids, indexPath, idCol)")
       }),
@@ -963,10 +1035,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.operators.Similarity", "graft_delete_lsh"),
       (args: Seq[Expression]) => args match {
         case Seq(t, p, id) =>
-          val path = strArg(p, "indexPath")
-          Similarity.deleteFromLshIndex(tableArg(t, "ids"), path,
+          val (df, path, c) = (tableArg(t, "ids"), strArg(p, "indexPath"),
             strArg(id, "idCol"))
-          deleteReceipt(path)
+          deleted(path)(Similarity.deleteFromLshIndex(df, path, c))
         case _ => throw new IllegalArgumentException(
           "graft_delete_lsh(ids, indexPath, idCol)")
       }),
@@ -974,10 +1045,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.operators.Similarity", "graft_delete_pq"),
       (args: Seq[Expression]) => args match {
         case Seq(t, p, id) =>
-          val path = strArg(p, "indexPath")
-          Similarity.deleteFromPqIndex(tableArg(t, "ids"), path,
+          val (df, path, c) = (tableArg(t, "ids"), strArg(p, "indexPath"),
             strArg(id, "idCol"))
-          deleteReceipt(path)
+          deleted(path)(Similarity.deleteFromPqIndex(df, path, c))
         case _ => throw new IllegalArgumentException(
           "graft_delete_pq(ids, indexPath, idCol)")
       }),
@@ -1023,29 +1093,20 @@ object GraftExtensions {
         case _ => throw new IllegalArgumentException(
           "graft_avi_frames(table) — table needs doc_id + payload columns")
       }),
-    // layout family (graft.sources.Layout) — write/update are BUILD-style
-    // operators like graft_dedup_corpus: their jobs run while the SQL is
-    // analyzed, and the returned row reports what was done
+    // layout family (graft.sources.Layout) — write/update run when the
+    // query executes, and the returned row reports what was done
     (new FunctionIdentifier("graft_zorder_write"),
       new ExpressionInfo("graft.sources.Layout", "graft_zorder_write"),
       (args: Seq[Expression]) => args match {
-        // 4-arg form: dims as one comma list (2..N dimensions)
-        case Seq(t, p, dims, f) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val files = intArg(f, "files")
-          graft.sources.Layout.writeZOrdered(tableArg(t, "table"), path,
-            colsArg(dims, "dims"), files)
-          import spark.implicits._
-          plan(Seq((path, files)).toDF("data_path", "files_written"))
-        case Seq(t, p, a, b, f) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val files = intArg(f, "files")
-          graft.sources.Layout.writeZOrdered(tableArg(t, "table"), path,
-            strArg(a, "colA"), strArg(b, "colB"), files)
-          import spark.implicits._
-          plan(Seq((path, files)).toDF("data_path", "files_written"))
+        // dims as one comma list (2..N dimensions), or legacy colA, colB
+        case Seq(t, p, rest @ _*) if rest.size == 2 || rest.size == 3 =>
+          val (df, path, files) = (tableArg(t, "table"), strArg(p, "dataPath"),
+            intArg(rest.last, "files"))
+          val ds = if (rest.size == 2) colsArg(rest.head, "dims")
+            else Seq(strArg(rest.head, "colA"), strArg(rest(1), "colB"))
+          receipt("data_path" -> StringType, "files_written" -> IntegerType) {
+            _ => Layout.writeZOrdered(df, path, ds, files); (path, files)
+          }
         case _ => throw new IllegalArgumentException(
           "graft_zorder_write(table, dataPath, 'dim1,dim2[,dim3…]', files)" +
             " or (table, dataPath, colA, colB, files)")
@@ -1054,12 +1115,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.Layout", "graft_update_manifest"),
       (args: Seq[Expression]) => args match {
         case Seq(p, dims) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val n = graft.sources.Layout.updateManifest(spark, path,
-            colsArg(dims, "dims"))
-          import spark.implicits._
-          plan(Seq((path, n)).toDF("data_path", "files_statted"))
+          val (path, ds) = (strArg(p, "dataPath"), colsArg(dims, "dims"))
+          receipt("data_path" -> StringType, "files_statted" -> IntegerType)(
+            s => (path, Layout.updateManifest(s, path, ds)))
         case _ => throw new IllegalArgumentException(
           "graft_update_manifest(dataPath, 'dim1,dim2')")
       }),
@@ -1084,21 +1142,20 @@ object GraftExtensions {
         case _ => throw new IllegalArgumentException(
           "graft_pruned_read(dataPath, col1, lo1, hi1[, col2, lo2, hi2, ...])")
       }),
-    // partitioned layout family — the same BUILD-style receipts as the
-    // flat faces, per-leaf mechanics inside
+    // partitioned layout family — the same receipts as the flat faces,
+    // per-leaf mechanics inside
     (new FunctionIdentifier("graft_zorder_write_partitioned"),
       new ExpressionInfo("graft.sources.Layout",
         "graft_zorder_write_partitioned"),
       (args: Seq[Expression]) => args match {
         case Seq(t, r, pc, dims, f) =>
-          val spark = SparkSession.active
-          val root = strArg(r, "root")
-          val files = intArg(f, "files")
-          graft.sources.Layout.writeZOrderedPartitioned(
-            tableArg(t, "table"), root, strArg(pc, "partCol"),
-            colsArg(dims, "dims"), files)
-          import spark.implicits._
-          plan(Seq((root, files)).toDF("root", "files_written"))
+          val (df, root, part, ds, files) = (tableArg(t, "table"),
+            strArg(r, "root"), strArg(pc, "partCol"), colsArg(dims, "dims"),
+            intArg(f, "files"))
+          receipt("root" -> StringType, "files_written" -> IntegerType) { _ =>
+            Layout.writeZOrderedPartitioned(df, root, part, ds, files)
+            (root, files)
+          }
         case _ => throw new IllegalArgumentException(
           "graft_zorder_write_partitioned(table, root, partCol, " +
             "'dim1,dim2', files)")
@@ -1107,14 +1164,13 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.Layout", "graft_append_partitioned"),
       (args: Seq[Expression]) => args match {
         case Seq(t, r, pc, dims, f) =>
-          val spark = SparkSession.active
-          val root = strArg(r, "root")
-          val files = intArg(f, "files")
-          graft.sources.Layout.appendZOrderedPartitioned(
-            tableArg(t, "table"), root, strArg(pc, "partCol"),
-            colsArg(dims, "dims"), files)
-          import spark.implicits._
-          plan(Seq((root, files)).toDF("root", "files_appended"))
+          val (df, root, part, ds, files) = (tableArg(t, "table"),
+            strArg(r, "root"), strArg(pc, "partCol"), colsArg(dims, "dims"),
+            intArg(f, "files"))
+          receipt("root" -> StringType, "files_appended" -> IntegerType) { _ =>
+            Layout.appendZOrderedPartitioned(df, root, part, ds, files)
+            (root, files)
+          }
         case _ => throw new IllegalArgumentException(
           "graft_append_partitioned(table, root, partCol, 'dim1,dim2', " +
             "files)")
@@ -1124,12 +1180,9 @@ object GraftExtensions {
         "graft_update_manifest_partitioned"),
       (args: Seq[Expression]) => args match {
         case Seq(r, dims) =>
-          val spark = SparkSession.active
-          val root = strArg(r, "root")
-          val n = graft.sources.Layout.updateManifestPartitioned(spark,
-            root, colsArg(dims, "dims"))
-          import spark.implicits._
-          plan(Seq((root, n)).toDF("root", "files_statted"))
+          val (root, ds) = (strArg(r, "root"), colsArg(dims, "dims"))
+          receipt("root" -> StringType, "files_statted" -> IntegerType)(s =>
+            (root, Layout.updateManifestPartitioned(s, root, ds)))
         case _ => throw new IllegalArgumentException(
           "graft_update_manifest_partitioned(root, 'dim1,dim2')")
       }),
@@ -1157,13 +1210,10 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.Layout", "graft_compact_partitioned"),
       (args: Seq[Expression]) => args match {
         case Seq(r, dims, fpl, mfl) =>
-          val spark = SparkSession.active
-          val root = strArg(r, "root")
-          val n = graft.sources.Layout.compactPartitioned(spark, root,
-            colsArg(dims, "dims"), intArg(fpl, "filesPerLeaf"),
-            intArg(mfl, "maxFilesPerLeaf"))
-          import spark.implicits._
-          plan(Seq((root, n)).toDF("root", "leaves_compacted"))
+          val (root, ds, per, max) = (strArg(r, "root"), colsArg(dims, "dims"),
+            intArg(fpl, "filesPerLeaf"), intArg(mfl, "maxFilesPerLeaf"))
+          receipt("root" -> StringType, "leaves_compacted" -> IntegerType)(s =>
+            (root, Layout.compactPartitioned(s, root, ds, per, max)))
         case _ => throw new IllegalArgumentException(
           "graft_compact_partitioned(root, 'dim1,dim2', filesPerLeaf, " +
             "maxFilesPerLeaf)")
@@ -1181,12 +1231,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.Layout", "graft_drop_partition"),
       (args: Seq[Expression]) => args match {
         case Seq(r, leaf) =>
-          val spark = SparkSession.active
-          val root = strArg(r, "root")
-          val existed = graft.sources.Layout.dropPartition(spark, root,
-            strArg(leaf, "leafName"))
-          import spark.implicits._
-          plan(Seq((root, existed)).toDF("root", "dropped"))
+          val (root, name) = (strArg(r, "root"), strArg(leaf, "leafName"))
+          receipt("root" -> StringType, "dropped" -> BooleanType)(s =>
+            (root, Layout.dropPartition(s, root, name)))
         case _ => throw new IllegalArgumentException(
           "graft_drop_partition(root, 'k=v')")
       }),
@@ -1194,12 +1241,10 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.Layout", "graft_delete_partitioned"),
       (args: Seq[Expression]) => args match {
         case Seq(ids, r, dims, id) =>
-          val spark = SparkSession.active
-          val root = strArg(r, "root")
-          val n = graft.sources.Layout.deleteByIdsPartitioned(spark, root,
+          val (root, ds, idCol, doomed) = (strArg(r, "root"),
             colsArg(dims, "dims"), strArg(id, "idCol"), tableArg(ids, "ids"))
-          import spark.implicits._
-          plan(Seq((root, n)).toDF("root", "files_rewritten"))
+          receipt("root" -> StringType, "files_rewritten" -> IntegerType)(s =>
+            (root, Layout.deleteByIdsPartitioned(s, root, ds, idCol, doomed)))
         case _ => throw new IllegalArgumentException(
           "graft_delete_partitioned(ids, root, 'dim1,dim2', idCol)")
       }),
@@ -1217,21 +1262,18 @@ object GraftExtensions {
             "face; the Scala API takes any literal type")
       }),
     // time-travel family (graft.sources.TimeTravel) — versioned lake
-    // snapshots. Commit/delete/compact/vacuum are BUILD-style (the
-    // commit runs while the SQL analyzes; the returned row is the
-    // receipt); read/history are plain table reads
+    // snapshots. Commit/delete/compact/vacuum write when the query
+    // executes (the returned row is the receipt); read/history are
+    // plain table reads
     (new FunctionIdentifier("graft_tt_commit"),
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_commit"),
       (args: Seq[Expression]) => args match {
         case Seq(t, p, dims, f, rest @ _*) if rest.size <= 1 =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.TimeTravel.commitAppend(
-            tableArg(t, "table"), path, colsArg(dims, "dims"),
-            intArg(f, "files"),
+          val (df, path, ds, files, batch) = (tableArg(t, "table"),
+            strArg(p, "dataPath"), colsArg(dims, "dims"), intArg(f, "files"),
             rest.headOption.map(strArg(_, "batchId")))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          committed(path)(_ => TimeTravel.commitAppend(df, path, ds, files,
+            batch))
         case _ => throw new IllegalArgumentException(
           "graft_tt_commit(table, dataPath, 'dim1[,dim2…]', files" +
             "[, batchId])")
@@ -1240,12 +1282,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_delete"),
       (args: Seq[Expression]) => args match {
         case Seq(ids, p, id) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.TimeTravel.commitDelete(spark, path,
-            strArg(id, "idCol"), tableArg(ids, "ids"))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          val (doomed, path, idCol) = (tableArg(ids, "ids"),
+            strArg(p, "dataPath"), strArg(id, "idCol"))
+          committed(path)(TimeTravel.commitDelete(_, path, idCol, doomed))
         case _ => throw new IllegalArgumentException(
           "graft_tt_delete(ids, dataPath, idCol)")
       }),
@@ -1253,12 +1292,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_compact"),
       (args: Seq[Expression]) => args match {
         case Seq(p, dims, f) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.TimeTravel.compact(spark, path,
+          val (path, ds, files) = (strArg(p, "dataPath"),
             colsArg(dims, "dims"), intArg(f, "files"))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          committed(path)(TimeTravel.compact(_, path, ds, files))
         case _ => throw new IllegalArgumentException(
           "graft_tt_compact(dataPath, 'dim1[,dim2…]', files)")
       }),
@@ -1266,12 +1302,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_compact_small"),
       (args: Seq[Expression]) => args match {
         case Seq(p, dims, tgt) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.TimeTravel.compactSmall(spark, path,
+          val (path, ds, target) = (strArg(p, "dataPath"),
             colsArg(dims, "dims"), longArg(tgt, "targetBytes"))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          committed(path)(TimeTravel.compactSmall(_, path, ds, target))
         case _ => throw new IllegalArgumentException(
           "graft_tt_compact_small(dataPath, 'dim1[,dim2…]', targetBytes)")
       }),
@@ -1319,12 +1352,8 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_rollback"),
       (args: Seq[Expression]) => args match {
         case Seq(p, v) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val nv = graft.sources.TimeTravel.rollback(spark, path,
-            longArg(v, "toVersion"))
-          import spark.implicits._
-          plan(Seq((path, nv)).toDF("data_path", "version"))
+          val (path, to) = (strArg(p, "dataPath"), longArg(v, "toVersion"))
+          committed(path)(TimeTravel.rollback(_, path, to))
         case _ => throw new IllegalArgumentException(
           "graft_tt_rollback(dataPath, toVersion)")
       }),
@@ -1346,14 +1375,8 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_vacuum"),
       (args: Seq[Expression]) => args match {
         case Seq(p, k) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val n = graft.sources.TimeTravel.vacuum(spark, path,
-            longArg(k, "keepFrom"))
-          import spark.implicits._
-          plan(Seq((path, n,
-            graft.sources.TimeTravel.earliestReadable(spark, path)))
-            .toDF("data_path", "files_reclaimed", "earliest_readable"))
+          val (path, keep) = (strArg(p, "dataPath"), longArg(k, "keepFrom"))
+          vacuumed(path)(TimeTravel.vacuum(_, path, keep))
         case _ => throw new IllegalArgumentException(
           "graft_tt_vacuum(dataPath, keepFrom)")
       }),
@@ -1371,14 +1394,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_vacuum_older"),
       (args: Seq[Expression]) => args match {
         case Seq(p, r) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val n = graft.sources.TimeTravel.vacuumOlderThan(spark, path,
+          val (path, retain) = (strArg(p, "dataPath"),
             longArg(r, "retainMillis"))
-          import spark.implicits._
-          plan(Seq((path, n,
-            graft.sources.TimeTravel.earliestReadable(spark, path)))
-            .toDF("data_path", "files_reclaimed", "earliest_readable"))
+          vacuumed(path)(TimeTravel.vacuumOlderThan(_, path, retain))
         case _ => throw new IllegalArgumentException(
           "graft_tt_vacuum_older(dataPath, retainMillis)")
       }),
@@ -1386,15 +1404,14 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_constrain"),
       (args: Seq[Expression]) => args match {
         case Seq(p, n, e) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val name = strArg(n, "name")
-          val rules = graft.sources.TimeTravel
-            .tableConstraints(spark, path)
-            .filterNot(_._1 == name) :+ (name -> strArg(e, "expr"))
-          graft.sources.TimeTravel.setConstraints(spark, path, rules)
-          import spark.implicits._
-          plan(rules.toDF("name", "expr").orderBy("name"))
+          val (path, name, rule) = (strArg(p, "dataPath"), strArg(n, "name"),
+            strArg(e, "expr"))
+          constraintsAfter(path) { s =>
+            val rules = TimeTravel.tableConstraints(s, path)
+              .filterNot(_._1 == name) :+ (name -> rule)
+            TimeTravel.setConstraints(s, path, rules)
+            rules
+          }
         case _ => throw new IllegalArgumentException(
           "graft_tt_constrain(dataPath, name, boolExpr) — add/replace " +
             "one commit-time CHECK constraint; returns the full set")
@@ -1415,17 +1432,14 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_unconstrain"),
       (args: Seq[Expression]) => args match {
         case Seq(p, n) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val name = strArg(n, "name")
-          val rest = graft.sources.TimeTravel
-            .tableConstraints(spark, path).filterNot(_._1 == name)
-          if (rest.isEmpty)
-            graft.sources.TimeTravel.clearConstraints(spark, path)
-          else
-            graft.sources.TimeTravel.setConstraints(spark, path, rest)
-          import spark.implicits._
-          plan(rest.toDF("name", "expr").orderBy("name"))
+          val (path, name) = (strArg(p, "dataPath"), strArg(n, "name"))
+          constraintsAfter(path) { s =>
+            val rest = TimeTravel.tableConstraints(s, path)
+              .filterNot(_._1 == name)
+            if (rest.isEmpty) TimeTravel.clearConstraints(s, path)
+            else TimeTravel.setConstraints(s, path, rest)
+            rest
+          }
         case _ => throw new IllegalArgumentException(
           "graft_tt_unconstrain(dataPath, name)")
       }),
@@ -1433,16 +1447,16 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_maintain_size"),
       (args: Seq[Expression]) => args match {
         case Seq(p, dims, tgt, ret) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val (packed, vacuumed, orphans) =
-            graft.sources.TimeTravel.maintainBySize(spark, path,
-              colsArg(dims, "dims"), longArg(tgt, "targetBytes"),
-              longArg(ret, "retainMillis"))
-          import spark.implicits._
-          plan(Seq((path, packed, vacuumed, orphans))
-            .toDF("data_path", "small_files_packed", "files_vacuumed",
-              "orphans_reclaimed"))
+          val (path, ds, target, retain) = (strArg(p, "dataPath"),
+            colsArg(dims, "dims"), longArg(tgt, "targetBytes"),
+            longArg(ret, "retainMillis"))
+          receipt("data_path" -> StringType, "small_files_packed" -> IntegerType,
+              "files_vacuumed" -> IntegerType,
+              "orphans_reclaimed" -> IntegerType) { s =>
+            val (packed, vacuumed, orphans) =
+              TimeTravel.maintainBySize(s, path, ds, target, retain)
+            (path, packed, vacuumed, orphans)
+          }
         case _ => throw new IllegalArgumentException(
           "graft_tt_maintain_size(dataPath, 'dims', targetBytes, " +
             "retainMillis) — the streaming lake's quiet-moment tick")
@@ -1471,14 +1485,16 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_maintain"),
       (args: Seq[Expression]) => args match {
         case Seq(p, dims, maxF, keepV, to) =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val (c, v, g) = graft.sources.TimeTravel.maintain(spark, path,
+          val (path, ds, maxLive, keep, compactTo) = (strArg(p, "dataPath"),
             colsArg(dims, "dims"), intArg(maxF, "maxLiveFiles"),
             longArg(keepV, "keepVersions"), intArg(to, "compactTo"))
-          import spark.implicits._
-          plan(Seq((path, c, v, g)).toDF("data_path", "compacted",
-            "files_vacuumed", "orphans_reclaimed"))
+          receipt("data_path" -> StringType, "compacted" -> BooleanType,
+              "files_vacuumed" -> IntegerType,
+              "orphans_reclaimed" -> IntegerType) { s =>
+            val (c, v, g) =
+              TimeTravel.maintain(s, path, ds, maxLive, keep, compactTo)
+            (path, c, v, g)
+          }
         case _ => throw new IllegalArgumentException(
           "graft_tt_maintain(dataPath, 'dims', maxLiveFiles, " +
             "keepVersions, compactTo) — the quiet-moment pass: compact " +
@@ -1488,12 +1504,10 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_clone"),
       (args: Seq[Expression]) => args match {
         case Seq(p, v, dst) =>
-          val spark = SparkSession.active
-          val dest = strArg(dst, "destPath")
-          val rows = graft.sources.TimeTravel.cloneAsOf(spark,
-            strArg(p, "dataPath"), longArg(v, "version"), dest)
-          import spark.implicits._
-          plan(Seq((dest, rows)).toDF("dest_path", "n_rows"))
+          val (path, version, dest) = (strArg(p, "dataPath"),
+            longArg(v, "version"), strArg(dst, "destPath"))
+          receipt("dest_path" -> StringType, "n_rows" -> LongType)(s =>
+            (dest, TimeTravel.cloneAsOf(s, path, version, dest)))
         case _ => throw new IllegalArgumentException(
           "graft_tt_clone(dataPath, version, destPath) — materialize a " +
             "historical version as a plain parquet table (never " +
@@ -1515,11 +1529,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_gc"),
       (args: Seq[Expression]) => args match {
         case Seq(p) =>
-          val spark = SparkSession.active
           val path = strArg(p, "dataPath")
-          val n = graft.sources.TimeTravel.gcOrphans(spark, path)
-          import spark.implicits._
-          plan(Seq((path, n)).toDF("data_path", "orphans_reclaimed"))
+          receipt("data_path" -> StringType, "orphans_reclaimed" -> IntegerType)(
+            s => (path, TimeTravel.gcOrphans(s, path)))
         case _ => throw new IllegalArgumentException(
           "graft_tt_gc(dataPath) — reclaim unreferenced data files and " +
             "staging residue (never referenced history; that is vacuum)")
@@ -1528,11 +1540,9 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_checkpoint"),
       (args: Seq[Expression]) => args match {
         case Seq(p) =>
-          val spark = SparkSession.active
           val path = strArg(p, "dataPath")
-          val v = graft.sources.TimeTravel.checkpointLineage(spark, path)
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "checkpoint_version"))
+          receipt("data_path" -> StringType, "checkpoint_version" -> LongType)(
+            s => (path, TimeTravel.checkpointLineage(s, path)))
         case _ => throw new IllegalArgumentException(
           "graft_tt_checkpoint(dataPath) — fold every lineage segment " +
             "into one checkpoint file so metadata reads stay flat in " +
@@ -1544,16 +1554,12 @@ object GraftExtensions {
         "graft_tt_vacuum_lineage"),
       (args: Seq[Expression]) => args match {
         case Seq(p, rest @ _*) if rest.size <= 1 =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val n = rest.headOption match {
-            case Some(g) => graft.sources.TimeTravel.vacuumLineage(
-              spark, path, graceMillis = longArg(g, "graceMillis"))
-            case None =>
-              graft.sources.TimeTravel.vacuumLineage(spark, path)
-          }
-          import spark.implicits._
-          plan(Seq((path, n)).toDF("data_path", "lineage_files_reclaimed"))
+          val (path, grace) = (strArg(p, "dataPath"),
+            rest.headOption.map(longArg(_, "graceMillis")))
+          receipt("data_path" -> StringType,
+              "lineage_files_reclaimed" -> IntegerType)(s => (path,
+            grace.fold(TimeTravel.vacuumLineage(s, path))(g =>
+              TimeTravel.vacuumLineage(s, path, graceMillis = g))))
         case _ => throw new IllegalArgumentException(
           "graft_tt_vacuum_lineage(dataPath[, graceMillis]) — reclaim " +
             "lineage segments a checkpoint has folded. Age-gated: " +
@@ -1567,14 +1573,11 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.TimeTravel", "graft_tt_upsert"),
       (args: Seq[Expression]) => args match {
         case Seq(t, p, id, f, rest @ _*) if rest.size <= 1 =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.TimeTravel.commitUpsert(spark, path,
-            strArg(id, "idCol"), tableArg(t, "updates"),
-            intArg(f, "files"),
+          val (updates, path, idCol, files, batch) = (tableArg(t, "updates"),
+            strArg(p, "dataPath"), strArg(id, "idCol"), intArg(f, "files"),
             rest.headOption.map(strArg(_, "batchId")))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          committed(path)(TimeTravel.commitUpsert(_, path, idCol, updates,
+            files, batch))
         case _ => throw new IllegalArgumentException(
           "graft_tt_upsert(updates, dataPath, idCol, files[, batchId])")
       }),
@@ -1583,7 +1586,6 @@ object GraftExtensions {
         "graft_group_publish"),
       (args: Seq[Expression]) => args match {
         case Seq(g, m) =>
-          val spark = SparkSession.active
           val group = strArg(g, "groupPath")
           val members = strArg(m, "members").split(",").map(_.trim)
             .filter(_.nonEmpty).map { kv =>
@@ -1594,10 +1596,8 @@ object GraftExtensions {
                     "'name=path,name=path'")
               }
             }.toMap
-          val v = graft.sources.SnapshotGroup.publish(spark, group,
-            members)
-          import spark.implicits._
-          plan(Seq((group, v)).toDF("group_path", "version"))
+          receipt("group_path" -> StringType, "version" -> LongType)(s =>
+            (group, SnapshotGroup.publish(s, group, members)))
         case _ => throw new IllegalArgumentException(
           "graft_group_publish(groupPath, 'name=path,…') — pin every " +
             "member's current head as ONE consistent cut")
@@ -1671,14 +1671,11 @@ object GraftExtensions {
         "graft_tt_replace_where"),
       (args: Seq[Expression]) => args match {
         case Seq(b, p, pred, f, rest @ _*) if rest.size <= 1 =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.TimeTravel.commitReplaceWhere(spark, path,
-            expr(strArg(pred, "predicate")), tableArg(b, "batch"),
-            intArg(f, "files"),
-            rest.headOption.map(strArg(_, "batchId")))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          val (batch, path, where, files, id) = (tableArg(b, "batch"),
+            strArg(p, "dataPath"), expr(strArg(pred, "predicate")),
+            intArg(f, "files"), rest.headOption.map(strArg(_, "batchId")))
+          committed(path)(TimeTravel.commitReplaceWhere(_, path, where, batch,
+            files, id))
         case _ => throw new IllegalArgumentException(
           "graft_tt_replace_where(batch, dataPath, 'predicate', files" +
             "[, batchId]) — atomic backfill: one commit holds every " +
@@ -1690,13 +1687,10 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.Scd", "graft_scd_merge"),
       (args: Seq[Expression]) => args match {
         case Seq(b, p, k, f, rest @ _*) if rest.size <= 1 =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.Scd.merge(spark, path,
-            strArg(k, "keyCol"), tableArg(b, "batch"), intArg(f, "files"),
+          val (batch, path, key, files, id) = (tableArg(b, "batch"),
+            strArg(p, "dataPath"), strArg(k, "keyCol"), intArg(f, "files"),
             rest.headOption.map(strArg(_, "batchId")))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          committed(path)(Scd.merge(_, path, key, batch, files, id))
         case _ => throw new IllegalArgumentException(
           "graft_scd_merge(batch, dataPath, keyCol, files[, batchId]) — " +
             "Type-2 merge: changed keys close + reopen, unchanged keys " +
@@ -1706,13 +1700,10 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.Scd", "graft_scd_delete"),
       (args: Seq[Expression]) => args match {
         case Seq(ks, p, k, f, rest @ _*) if rest.size <= 1 =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.Scd.delete(spark, path,
-            strArg(k, "keyCol"), tableArg(ks, "keys"), intArg(f, "files"),
+          val (keys, path, key, files, id) = (tableArg(ks, "keys"),
+            strArg(p, "dataPath"), strArg(k, "keyCol"), intArg(f, "files"),
             rest.headOption.map(strArg(_, "batchId")))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          committed(path)(Scd.delete(_, path, key, keys, files, id))
         case _ => throw new IllegalArgumentException(
           "graft_scd_delete(keys, dataPath, keyCol, files[, batchId]) — " +
             "Type-2 soft delete: closes current rows, history stays")
@@ -1721,14 +1712,11 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.Scd", "graft_scd_apply"),
       (args: Seq[Expression]) => args match {
         case Seq(u, del, p, k, f, rest @ _*) if rest.size <= 1 =>
-          val spark = SparkSession.active
-          val path = strArg(p, "dataPath")
-          val v = graft.sources.Scd.applyChanges(spark, path,
-            strArg(k, "keyCol"), tableArg(u, "upserts"),
-            tableArg(del, "deletes"), intArg(f, "files"),
+          val (ups, dels, path, key, files, id) = (tableArg(u, "upserts"),
+            tableArg(del, "deletes"), strArg(p, "dataPath"),
+            strArg(k, "keyCol"), intArg(f, "files"),
             rest.headOption.map(strArg(_, "batchId")))
-          import spark.implicits._
-          plan(Seq((path, v)).toDF("data_path", "version"))
+          committed(path)(Scd.applyChanges(_, path, key, ups, dels, files, id))
         case _ => throw new IllegalArgumentException(
           "graft_scd_apply(upserts, deletes, dataPath, keyCol, files" +
             "[, batchId]) — mixed CDC batch as ONE dimension commit: " +
@@ -1807,18 +1795,16 @@ object GraftExtensions {
       }),
     // materialized-view family (graft.sources.MatView) — incrementally
     // maintained count/sum aggregates over a time-travel table.
-    // create/refresh are BUILD-style receipts; read is a table read
+    // create/refresh write when the query executes and return receipts;
+    // read is a table read
     (new FunctionIdentifier("graft_mv_create"),
       new ExpressionInfo("graft.sources.MatView", "graft_mv_create"),
       (args: Seq[Expression]) => args match {
         case Seq(src, vp, k, sc) =>
-          val spark = SparkSession.active
-          val view = strArg(vp, "viewPath")
-          val v = graft.sources.MatView.create(spark,
-            strArg(src, "srcPath"), view, colsArg(k, "keys"),
-            colsArg(sc, "sumCols"))
-          import spark.implicits._
-          plan(Seq((view, v)).toDF("view_path", "version"))
+          val (from, view, keys, sums) = (strArg(src, "srcPath"),
+            strArg(vp, "viewPath"), colsArg(k, "keys"), colsArg(sc, "sumCols"))
+          receipt("view_path" -> StringType, "version" -> LongType)(s =>
+            (view, MatView.create(s, from, view, keys, sums)))
         case _ => throw new IllegalArgumentException(
           "graft_mv_create(srcPath, viewPath, 'k1[,k2…]', 'c1[,c2…]')")
       }),
@@ -1826,12 +1812,12 @@ object GraftExtensions {
       new ExpressionInfo("graft.sources.MatView", "graft_mv_refresh"),
       (args: Seq[Expression]) => args match {
         case Seq(vp) =>
-          val spark = SparkSession.active
           val view = strArg(vp, "viewPath")
-          val st = graft.sources.MatView.refresh(spark, view)
-          import spark.implicits._
-          plan(Seq((view, st.version, st.filesRead))
-            .toDF("view_path", "version", "files_read"))
+          receipt("view_path" -> StringType, "version" -> LongType,
+              "files_read" -> IntegerType) { s =>
+            val st = MatView.refresh(s, view)
+            (view, st.version, st.filesRead)
+          }
         case _ => throw new IllegalArgumentException(
           "graft_mv_refresh(viewPath)")
       }),
@@ -1855,7 +1841,7 @@ object GraftExtensions {
         case _ => throw new IllegalArgumentException(
           "graft_strip_boilerplate(table, idCol, textCol, minDocs)")
       }),
-    // BPE tokenizer: train is BUILD-style (the merge loop runs while
+    // BPE tokenizer: train is a compute face (the merge loop runs while
     // the SQL analyzes); encode/vocab take the merge list as an
     // 'l:r,l:r' spec in rank order
     (new FunctionIdentifier("graft_bpe_train"),
@@ -2031,19 +2017,17 @@ object GraftExtensions {
           "graft_validate_fk(table, col, dim, dimCol)")
       }),
     // product-quantization two-stage ANN
-    // staged-swap residue reclamation (BUILD-style, like the delete
+    // staged-swap residue reclamation (a receipt, like the delete
     // faces): age-gated — old residue is reclaimed, anything younger
     // than the bound still throws Lifecycle.stagedSwap's collision
     (new FunctionIdentifier("graft_gc_staged"),
       new ExpressionInfo("graft.operators.Lifecycle", "graft_gc_staged"),
       (args: Seq[Expression]) => args match {
         case Seq(p, age) =>
-          val path = strArg(p, "livePath")
-          val reclaimed = graft.operators.Lifecycle.gcStaged(
-            SparkSession.active, path, longArg(age, "olderThanMs"))
-          val spark = SparkSession.active
-          import spark.implicits._
-          plan(Seq((path, reclaimed)).toDF("live_path", "reclaimed"))
+          val (path, olderThan) = (strArg(p, "livePath"),
+            longArg(age, "olderThanMs"))
+          receipt("live_path" -> StringType, "reclaimed" -> BooleanType)(s =>
+            (path, Lifecycle.gcStaged(s, path, olderThan)))
         case _ => throw new IllegalArgumentException(
           "graft_gc_staged(livePath, olderThanMs)")
       }),
@@ -2396,7 +2380,8 @@ object GraftExtensions {
   }
 
   /** Register the same functions on an ALREADY-RUNNING session (extensions
-    * configs only apply at session construction).
+    * configs only apply at session construction), and the receipt rule
+    * once, as an extra optimization.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -2407,5 +2392,8 @@ object GraftExtensions {
     tableFunctions.foreach { case (id, _, builder) =>
       treg.createOrReplaceTempFunction(id.funcName, builder, "scala_udf")
     }
+    if (!spark.experimental.extraOptimizations.contains(EffectReceipt))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ EffectReceipt
   }
 }

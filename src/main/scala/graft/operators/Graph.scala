@@ -28,8 +28,9 @@ object Graph {
     * an oracle (not a rounded literal — `1 - 0.85` is NOT the double
     * nearest 0.15).
     *
-    * This is a BUILD-style operator (like the IVF index build and
-    * connected components): it runs jobs eagerly. The edge/degree/node
+    * It runs its jobs eagerly, when called (like the IVF index build
+    * and connected components), not when the returned frame is read; it
+    * has no SQL face. The edge/degree/node
     * frames are checkpointed once ([[Checkpoints.truncate]] — reliable
     * when the session has a checkpoint dir, executor-local otherwise) —
     * truncating whatever expensive lineage produced the edges (e.g. pair

@@ -1343,15 +1343,8 @@ object Layout {
       .write.partitionBy(partCol).mode("overwrite").parquet(root)
   }
 
-  /** Incrementally refresh every leaf's manifest ([[updateManifest]]
-    * semantics per leaf: stat only unseen files, 0 for an untouched
-    * leaf). Creates manifests for new leaves — so one call after any
-    * append, whatever partitions it landed in, keeps the whole table
-    * pruned-readable. Returns total files newly statted. Unseen-file
-    * discovery is ONE global anti-join over every leaf's manifest
-    * (r11), so untouched leaves cost a listing RPC, never a Spark job
-    * — job count scales with TOUCHED leaves, not table partitions.
-    */
+  private val LeafParallelism = 4
+
   /** Run independent per-leaf work from a small driver thread pool
     * (guide §2.6 — overlap independent jobs): per-leaf operations are
     * disjoint by construction (each touches only its own leaf
@@ -1360,34 +1353,17 @@ object Layout {
     * submitted from several driver threads, back-filling executors a
     * serial loop would leave idle through every leaf's job tail. At a
     * 1000-leaf table the serial loop is the difference between minutes
-    * and the slowest touched leaf. Pool size: `graft.layout.leaf.
-    * parallelism` in the Hadoop conf (default 4 — 2-4 in-flight jobs
-    * fill the tail without fighting for executors). Results keep item
-    * order. EVERY task completes before this returns — on failure the
-    * remaining leaves still finish (the same partial progress a serial
-    * loop's earlier iterations already committed), THEN the first
-    * item's failure rethrows with its original exception: returning
-    * with work in flight would let a caller's recovery retry race this
-    * call's own leftovers on the same leaf. */
-  private def parLeaves[A, B](spark: SparkSession, items: Seq[A])
-                             (f: A => B): Seq[B] = {
-    // DEADLOCK GUARD (r18, found by a driver-suite hang): when this is
-    // reached from inside Spark's function resolution — the SQL table-
-    // function faces (GraftExtensions) are EVALUATED by
-    // SessionCatalog.lookupFunction, which runs under the catalog's
-    // monitor — every per-leaf task analyzed on a pool thread blocks on
-    // that same monitor while this thread waits on the pool: a classic
-    // lock-inversion hang (the pre-pool serial loop was safe because
-    // `synchronized` is reentrant on the SAME thread). Detect the held
-    // monitor and fall back to the serial loop — correct, just not
-    // overlapped; the direct API path keeps the pool.
-    val catalogHeld = Thread.holdsLock(spark.sessionState.catalog)
-    val n =
-      if (catalogHeld) 1
-      else math.min(
-        math.max(1, spark.sparkContext.hadoopConfiguration
-          .getInt("graft.layout.leaf.parallelism", 4)),
-        items.size)
+    * and the slowest touched leaf. Pool size: [[LeafParallelism]]
+    * threads — 2-4 in-flight jobs fill the tail without fighting for
+    * executors. Results keep item order. EVERY task completes before
+    * this returns — on failure the remaining leaves still finish (the
+    * same partial progress a serial loop's earlier iterations already
+    * committed), THEN the first item's failure rethrows with its
+    * original exception: returning with work in flight would let a
+    * caller's recovery retry race this call's own leftovers on the same
+    * leaf. */
+  private def parLeaves[A, B](items: Seq[A])(f: A => B): Seq[B] = {
+    val n = math.min(LeafParallelism, items.size)
     if (n <= 1) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
@@ -1408,6 +1384,15 @@ object Layout {
     }
   }
 
+  /** Incrementally refresh every leaf's manifest ([[updateManifest]]
+    * semantics per leaf: stat only unseen files, 0 for an untouched
+    * leaf). Creates manifests for new leaves — so one call after any
+    * append, whatever partitions it landed in, keeps the whole table
+    * pruned-readable. Returns total files newly statted. Unseen-file
+    * discovery is ONE global anti-join over every leaf's manifest
+    * (r11), so untouched leaves cost a listing RPC, never a Spark job
+    * — job count scales with TOUCHED leaves, not table partitions.
+    */
   def updateManifestPartitioned(spark: SparkSession, root: String,
                                 dims: Seq[String]): Int = {
     val rp = new org.apache.hadoop.fs.Path(root)
@@ -1421,7 +1406,7 @@ object Layout {
       if (withM.isEmpty) Nil
       else unmanifestedLeafFiles(leafManifests(spark, root, withM),
         listLeafFiles(fs, root, withM)))
-    parLeaves(spark, fresh.groupBy(_._1).toSeq.sortBy(_._1)) {
+    parLeaves(fresh.groupBy(_._1).toSeq.sortBy(_._1)) {
       case (leaf, fl) =>
         appendStatsSegment(spark, partitionManifestPath(root, leaf),
           fl.map(_._3), dims)
@@ -1580,7 +1565,7 @@ object Layout {
         s"got $maxFilesPerLeaf / $filesPerLeaf")
     val rp = new org.apache.hadoop.fs.Path(root)
     val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    parLeaves(spark, leaves(fs, rp)) { case (leaf, _, _) =>
+    parLeaves(leaves(fs, rp)) { case (leaf, _, _) =>
       val leafDir = root.stripSuffix("/") + "/" + leaf
       val lp = new org.apache.hadoop.fs.Path(leafDir)
       val scratch = root.stripSuffix("/") + "/_compact/" + leaf
@@ -1741,7 +1726,7 @@ object Layout {
           listLeafFiles(fs, root, withManifest)).map(_._1).toSet
         (hits, stale)
       }
-    parLeaves(spark, all.map(_._1)
+    parLeaves(all.map(_._1)
         .filter(l => noManifest(l) || hitLeaves(l) || staleLeaves(l))) {
       leaf =>
         val scratch = rootStr + "/_delete/" + leaf

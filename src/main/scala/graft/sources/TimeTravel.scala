@@ -828,13 +828,17 @@ object TimeTravel {
     * it unless the post-birth listing is exactly the cached file set
     * plus this commit's own segment — a cached set that already holds
     * our segment (a concurrent cold load) would duplicate its rows.
+    * When the listing is exactly our segment (a table's first commit)
+    * the segment IS the lineage, and it is installed whether or not a
+    * snapshot was cached ([[ListingSnapshot.afterSwap]]).
     * Never load-bearing: a skipped or raced update costs one cold
     * reload, not correctness.
     */
   private def refreshSnapAfterAppend(lp: String, v: Long,
       segRows: Array[Row], segSchema: StructType,
-      after: Option[ListingSnapshot.Listing]): Unit =
-    try snapshots.afterAppend(lp, Set(s"segment_v$v.parquet"), after) { cached =>
+      after: Option[ListingSnapshot.Listing]): Unit = {
+    val seg = Set(s"segment_v$v.parquet")
+    def withSegment(cached: LineageRows): LineageRows = {
       val merged = widenMerge(cached.schema, segSchema,
         s"lineage snapshot of $lp")
       def remap(rows: Array[Row], from: StructType): Array[Row] = {
@@ -861,9 +865,16 @@ object TimeTravel {
       }
       new LineageRows(merged,
         remap(cached.rows, cached.schema) ++ remap(segRows, segSchema))
+    }
+    try {
+      if (after.exists(_.names == seg))
+        snapshots.afterSwap(lp, seg, after,
+          withSegment(new LineageRows(new StructType(), Array.empty)))
+      else snapshots.afterAppend(lp, seg, after)(withSegment)
     } catch {
       case scala.util.control.NonFatal(_) => () // next read reloads cold
     }
+  }
 
   /** Fold the log when the tail past the newest checkpoint (`tail`,
     * counted on the commit's post-birth listing) reaches the

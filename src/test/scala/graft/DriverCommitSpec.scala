@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -188,6 +188,52 @@ class DriverCommitSpec extends SparkSpec {
     // the replayed batch id stays a no-op on the driver path
     assert(jobsDuring { v = sqlCommit(110, "s1") } == 0)
     assert(v == 5L && TimeTravel.read(spark, dir).count() == 130L)
+  }
+
+  test("graft_tt_commit over a local temp view runs no Spark job when " +
+      "warm in a session built with the extensions") {
+    val dir = tmpDir("ext")
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = SparkSession.builder().withExtensions(new GraftExtensions)
+      .getOrCreate()
+    try {
+      assert(ext ne spark)
+      def sqlCommit(from: Int, b: String): Long = {
+        ext.createDataFrame(java.util.Arrays.asList(
+            rows(from, 20, equalKey = false): _*), schema)
+          .createOrReplaceTempView("dc_ext_batch")
+        ext.sql(s"SELECT version FROM graft_tt_commit('dc_ext_batch', " +
+          s"'$dir', 'id', 1, '$b')").head().getLong(0)
+      }
+      assert(sqlCommit(0, "e0") == 1L && sqlCommit(20, "e1") == 2L)
+      var v = -1L
+      assert(jobsDuring { v = sqlCommit(40, "e2") } == 0)
+      assert(v == 3L)
+      assert(jobsDuring { v = sqlCommit(40, "e2") } == 0)
+      assert(v == 3L && TimeTravel.read(spark, dir).count() == 60L)
+    } finally {
+      // the new session's shared state added its own SQL status listener
+      // to the shared context; later suites must not pay for it
+      ext.sharedState.statusStore.listener
+        .foreach(spark.sparkContext.removeSparkListener)
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("a table's first commit leaves its lineage snapshot behind: the " +
+      "second local append on a fresh table runs no Spark job, and the " +
+      "snapshot equals a cold load") {
+    val dir = tmpDir("first")
+    TimeTravel.commitAppend(local(rows(0, 30, equalKey = false)), dir,
+      Seq("id"), files = 2)
+    assert(jobsDuring(TimeTravel.commitAppend(local(rows(30, 20,
+      equalKey = false)), dir, Seq("id"), files = 1): Unit) == 0)
+    val warm = (history(dir), TimeTravel.readLineage(spark, dir).schema)
+    graft.sources.ListingSnapshot.invalidateAll()
+    assert((history(dir), TimeTravel.readLineage(spark, dir).schema) == warm)
+    assert(TimeTravel.read(spark, dir).count() == 50L)
   }
 
   test("vacuum runs no Spark job on a warm snapshot, and vacuumPreview " +

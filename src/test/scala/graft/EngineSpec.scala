@@ -3,11 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Minutes, Span}
+
 import graft.engine.{Bookmarks, Geocode, Tables}
 import graft.sources.Ingest
 
-class EngineSpec extends SparkSpec {
+class EngineSpec extends SparkSpec with TimeLimits {
   import spark.implicits._
+
+  private implicit val signaler: Signaler = ThreadSignaler
 
   test("ingest: CSV with schema, validation split, partitioned parquet") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ingest")
@@ -842,6 +847,13 @@ class EngineSpec extends SparkSpec {
 
   test("extensions: partitioned layout lifecycle callable from SQL, " +
        "row-identical") {
+    // on the leaf pool, with no catalog lock held: a write that ran at
+    // analysis again would deadlock it, so the bound fails rather than
+    // hangs the suite
+    failAfter(Span(5, Minutes))(partitionedLifecycleFromSql())
+  }
+
+  private def partitionedLifecycleFromSql(): Unit = {
     import graft.sources.Layout
     import org.apache.spark.sql.functions.col
     GraftExtensions.register(spark)

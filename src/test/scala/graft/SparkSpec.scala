@@ -27,6 +27,26 @@ trait SparkSpec extends AnyFunSuite {
     n.get()
   }
 
+  /** The root SQL executions of the jobs `body` ran: each job's
+    * `spark.sql.execution.root.id`, None for a job outside any SQL
+    * execution. One root means every job was attributed to one query. */
+  protected def rootExecutionsDuring(body: => Unit): Set[Option[String]] = {
+    val sc = spark.sparkContext
+    val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[Option[String]]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        roots.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.root.id"))))
+        ()
+      }
+    }
+    sc.addSparkListener(l)
+    try { body; drainListenerBus() } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    roots.asScala.toSet
+  }
+
   /** What `body` read, from the task-end metrics — the twin of
     * [[jobsDuring]] for the scale contracts ("an append reads the batch,
     * never the history", "a salted join flattens the reducers"). Input
