@@ -1105,7 +1105,7 @@ object GraftExtensions {
           val ds = if (rest.size == 2) colsArg(rest.head, "dims")
             else Seq(strArg(rest.head, "colA"), strArg(rest(1), "colB"))
           receipt("data_path" -> StringType, "files_written" -> IntegerType) {
-            _ => Layout.writeZOrdered(df, path, ds, files); (path, files)
+            _ => (path, Layout.writeZOrdered(df, path, ds, files))
           }
         case _ => throw new IllegalArgumentException(
           "graft_zorder_write(table, dataPath, 'dim1,dim2[,dim3…]', files)" +
@@ -1152,10 +1152,8 @@ object GraftExtensions {
           val (df, root, part, ds, files) = (tableArg(t, "table"),
             strArg(r, "root"), strArg(pc, "partCol"), colsArg(dims, "dims"),
             intArg(f, "files"))
-          receipt("root" -> StringType, "files_written" -> IntegerType) { _ =>
-            Layout.writeZOrderedPartitioned(df, root, part, ds, files)
-            (root, files)
-          }
+          receipt("root" -> StringType, "files_written" -> IntegerType)(_ =>
+            (root, Layout.writeZOrderedPartitioned(df, root, part, ds, files)))
         case _ => throw new IllegalArgumentException(
           "graft_zorder_write_partitioned(table, root, partCol, " +
             "'dim1,dim2', files)")
@@ -1167,10 +1165,8 @@ object GraftExtensions {
           val (df, root, part, ds, files) = (tableArg(t, "table"),
             strArg(r, "root"), strArg(pc, "partCol"), colsArg(dims, "dims"),
             intArg(f, "files"))
-          receipt("root" -> StringType, "files_appended" -> IntegerType) { _ =>
-            Layout.appendZOrderedPartitioned(df, root, part, ds, files)
-            (root, files)
-          }
+          receipt("root" -> StringType, "files_appended" -> IntegerType)(_ =>
+            (root, Layout.appendZOrderedPartitioned(df, root, part, ds, files)))
         case _ => throw new IllegalArgumentException(
           "graft_append_partitioned(table, root, partCol, 'dim1,dim2', " +
             "files)")

@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.time.{LocalDate, YearMonth}
+import java.time.format.DateTimeFormatter
 import java.util.concurrent.{ExecutionException, ExecutorService, Executors}
 
 import scala.jdk.CollectionConverters._
@@ -7,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 import graft.functions.Param
 import graft.operators._
@@ -23,9 +25,12 @@ import graft.operators._
   * geo lookup, one service-request query, one sales query; the last two
   * run side by side) where the reference issues 4-5 sequential SQL
   * queries (webserver/server.py:130-256), and derives the remaining
-  * frames on the driver. `compare`/`bookmarks` handle all keys in a
-  * single pass instead of re-running the stack per key
-  * (server.py:456-473, 561-580). Every per-request value — the natural
+  * frames on the driver. A trend series ([[requestTrend]],
+  * [[salesTrend]]) is one month aggregate; its zero-filled month spine
+  * is laid out on the driver, as the reference's month loop does
+  * (server.py:319-341), not joined in a second job. `compare`/`bookmarks`
+  * handle all keys in a single pass instead of re-running the stack per
+  * key (server.py:456-473, 561-580). Every per-request value — the natural
   * key, the geographic id, the compared key list, the window bounds — is
   * bound as a [[graft.functions.Param]], so the generated code does not
   * depend on it: one compiled class per route shape, not one per key.
@@ -239,24 +244,46 @@ object Analytics {
   /** §3.2 trends: month-bucketed series with spine gap fill — zero-filled
     * counts, null medians for empty months (webserver/server.py:259-342).
     * Requires both bounds (the reference always defaults them, :482-483).
+    * One month aggregate runs; the spine is laid out on the driver, as
+    * the reference's month loop does ([[monthFill]]).
     */
   def requestTrend(spark: SparkSession, sr: DataFrame, geoId: Long,
-                   start: String, end: String): DataFrame = {
-    val agg = TimeSeries.monthly(
+                   start: String, end: String): DataFrame =
+    monthFill(spark, TimeSeries.monthly(
       requestsOf(sr, geoId, Window(Some(start), Some(end))),
-      "created_date", Seq(count(lit(1)).as("count")))
-    TimeSeries.gapFill(TimeSeries.monthSpine(spark, start, end), agg, Seq("count"))
-  }
+      "created_date", Seq(count(lit(1)).as("count"))), start, end)
 
   def salesTrend(spark: SparkSession, sale: DataFrame, property: DataFrame,
-                 geoId: Long, start: String, end: String): DataFrame = {
-    val agg = TimeSeries.monthly(
+                 geoId: Long, start: String, end: String): DataFrame =
+    monthFill(spark, TimeSeries.monthly(
       salesOf(sale, property, geoId, Window(Some(start), Some(end))),
       "sale_date",
       Seq(Aggregates.exactMedianMoney(col("sale_price")).as("median_price"),
-        count(lit(1)).as("count")))
-    TimeSeries.gapFill(TimeSeries.monthSpine(spark, start, end), agg, Seq("count"))
+        count(lit(1)).as("count"))), start, end)
+
+  /** [[TimeSeries.gapFill]] over [[TimeSeries.monthSpine]] with `count`
+    * zero-filled, computed on the driver: `agg` (month first) is collected
+    * under the serving tier's row cap, and every month from the start
+    * bound's month to the end bound's month (ISO `yyyy-MM-dd` bounds)
+    * becomes one row of a local relation with gapFill's schema. A start
+    * month after the end month yields no rows (server.py:319-341).
+    */
+  private def monthFill(spark: SparkSession, agg: DataFrame, start: String,
+                        end: String): DataFrame = {
+    val byMonth = AnalyticsServer.collectBounded(agg)
+      .map(r => r.getString(0) -> r).toMap
+    val fields = agg.schema.fields.tail
+    val empty = fields.toSeq.map(f => if (f.name == "count") 0L else null)
+    val last = YearMonth.from(LocalDate.parse(end))
+    val months = Iterator.iterate(YearMonth.from(LocalDate.parse(start)))(
+      _.plusMonths(1)).takeWhile(!_.isAfter(last)).map(_.format(MonthFormat))
+    local(spark,
+      StructType(StructField("month", StringType, nullable = false) +:
+        fields.map(f => f.copy(nullable = f.name != "count"))),
+      months.map(m => byMonth.getOrElse(m, Row.fromSeq(m +: empty))).toSeq)
   }
+
+  private val MonthFormat = DateTimeFormatter.ofPattern("yyyy-MM")
 
   /** §3.3 compare — N geographic keys, one pass over each fact
     * (vs the reference's full re-run per key, webserver/server.py:456-473).

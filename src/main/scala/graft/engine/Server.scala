@@ -24,6 +24,12 @@ import org.apache.spark.sql.types._
   * query logic lives here, so the frames stay independently testable and
   * the route handlers stay interaction-sized.
   *
+  * [[start]] turns on TCP_NODELAY for the server's connections: with
+  * Nagle's algorithm on, the JDK server's two writes per response (headers,
+  * then body) cost each response the client's delayed ACK, about 40 ms.
+  * The JDK reads that setting once per JVM, at its first server; see
+  * [[start]].
+  *
   * Routes (reference line refs):
   *  - `GET /analytics/<bbl>?start_date&end_date` — the §3.1 dashboard
   *    (server.py:383-432); 400 malformed BBL, 404 unknown (the
@@ -73,9 +79,21 @@ final class AnalyticsServer(
     new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
 
   /** Bind and serve; `port` 0 picks an ephemeral one. Returns the bound
-    * port. */
+    * port.
+    *
+    * Sets `sun.net.httpserver.nodelay=true` first, unless it is already
+    * set (an explicit `-Dsun.net.httpserver.nodelay=false` wins). The
+    * JDK server writes each response in two socket writes, the headers
+    * from `sendResponseHeaders` and then the body, and leaves Nagle's
+    * algorithm on by default: the small body then waits for the client's
+    * ACK of the header segment, which Linux delays by up to 40 ms, on
+    * every response. The JDK reads the property once per JVM, when the
+    * first `com.sun.net.httpserver` server is created, so a JDK server
+    * that other code created earlier in the same JVM pins the old value.
+    */
   def start(port: Int = 0): Int = {
     require(server == null, "server already started")
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     server.start()
@@ -362,6 +380,8 @@ object AnalyticsServer {
     DateTimeFormatter.ofPattern("uuuu-M-d").withResolverStyle(ResolverStyle.STRICT)
 
   private val MaxRows = 10000
+
+  private val NoDelay = "sun.net.httpserver.nodelay"
 
   private[engine] def collectBounded(df: DataFrame): Seq[Row] = {
     val rows = df.limit(MaxRows + 1).collect()

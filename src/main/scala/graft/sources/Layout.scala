@@ -329,16 +329,30 @@ object Layout {
     * the footer carries one screening structure or the other, never
     * neither (LayoutSpec pins both regimes). `options` passes through
     * further parquet writer tuning (dictionary, page sizes, ndv
-    * hints).
+    * hints). Returns the number of `.parquet` files written, which an
+    * empty range partition can leave below `files`.
     */
   def writeZOrdered(df: DataFrame, path: String, dims: Seq[String],
                     files: Int, bloomFor: Seq[String] = Nil,
-                    options: Map[String, String] = Map.empty): Unit =
+                    options: Map[String, String] = Map.empty): Int = {
     bloomOpts(
       zCluster(withZKey(df, dims), files).write.mode("overwrite"),
       bloomFor)
       .options(options)
       .parquet(path)
+    parquetFilesUnder(df.sparkSession, path)
+  }
+
+  /** The `.parquet` data files under `root`, directly or one `k=v` leaf
+    * down: what a flat or hive-partitioned z-ordered write leaves there.
+    * 0 for a missing root. */
+  private def parquetFilesUnder(spark: SparkSession, root: String): Int = {
+    val rp = new org.apache.hadoop.fs.Path(root)
+    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(rp)) 0
+    else fs.listStatus(rp).map(_.getPath).count(_.getName.endsWith(".parquet")) +
+      listLeafFiles(fs, root, leaves(fs, rp).map(_._1)).size
+  }
 
   private def bloomOpts(w: org.apache.spark.sql.DataFrameWriter[
       org.apache.spark.sql.Row], cols: Seq[String]) =
@@ -347,7 +361,7 @@ object Layout {
 
   /** Two-column [[writeZOrdered]]. */
   def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-                    files: Int): Unit =
+                    files: Int): Int =
     writeZOrdered(df, path, Seq(colA, colB), files)
 
   // --- file-stats manifest + manifest-pruned reads ------------------
@@ -1332,15 +1346,18 @@ object Layout {
     * z-key pass, then a range partitioning on (partition, curve) so
     * each task writes one contiguous curve segment of one partition.
     * `files` is the TOTAL file budget, spread across leaves
-    * proportionally to their rows by the range partitioner.
+    * proportionally to their rows by the range partitioner. Returns
+    * the number of `.parquet` files written: a curve segment that spans
+    * two partitions writes one file in each, so it can exceed `files`.
     */
   def writeZOrderedPartitioned(df: DataFrame, root: String, partCol: String,
-                               dims: Seq[String], files: Int): Unit = {
+                               dims: Seq[String], files: Int): Int = {
     require(!dims.contains(partCol),
       s"partition column '$partCol' cannot be a z-order dim: hive " +
         "layout stores it in the directory name, not the data files")
     zCluster(withZKey(df, dims), files, col(partCol))
       .write.partitionBy(partCol).mode("overwrite").parquet(root)
+    parquetFilesUnder(df.sparkSession, root)
   }
 
   private val LeafParallelism = 4
@@ -1526,16 +1543,20 @@ object Layout {
     * 0-cost for untouched leaves) to keep pruned reads at full skip
     * rate; until then the new files are conservatively unpruned.
     * File-level append: exactly-once is the ingestion layer's job,
-    * like [[appendZOrdered]].
+    * like [[appendZOrdered]]. Returns the number of `.parquet` files
+    * the append added (listed before and after), which, as for
+    * [[writeZOrderedPartitioned]], can exceed `files`.
     */
   def appendZOrderedPartitioned(df: DataFrame, root: String,
                                 partCol: String, dims: Seq[String],
-                                files: Int): Unit = {
+                                files: Int): Int = {
     require(!dims.contains(partCol),
       s"partition column '$partCol' cannot be a z-order dim: hive " +
         "layout stores it in the directory name, not the data files")
+    val before = parquetFilesUnder(df.sparkSession, root)
     zCluster(withZKey(df, dims), files, col(partCol))
       .write.partitionBy(partCol).mode("append").parquet(root)
+    parquetFilesUnder(df.sparkSession, root) - before
   }
 
   /** Re-cluster every leaf holding more than `maxFilesPerLeaf` files

@@ -100,6 +100,41 @@ class AnalyticsSpec extends SparkSpec {
     assert(jan.getDouble(1) == 175000.25 && jan.getLong(2) == 2L)
   }
 
+  test("both trend series equal the q07 path (monthSpine + monthly + " +
+      "gapFill) in rows and schema, with and without facts") {
+    val windows = Seq("2024-01-01" -> "2024-06-30", // Dec into Jan next
+      "2023-12-15" -> "2024-01-20", "2024-03-03" -> "2024-03-28",
+      "2024-12-01" -> "2024-01-01")
+    for (geoId <- Seq(101L, 103L); (s, e) <- windows) {
+      def within(df: org.apache.spark.sql.DataFrame, c: String) =
+        Filters.dateWindow(df, c, Some(s), Some(e))
+      def q07(agg: org.apache.spark.sql.DataFrame) =
+        TimeSeries.gapFill(TimeSeries.monthSpine(spark, s, e), agg, Seq("count"))
+      val requests = q07(TimeSeries.monthly(
+        within(sr.filter(col("geographic_id") === geoId), "created_date"),
+        "created_date", Seq(count(lit(1)).as("count"))))
+      val sales = q07(TimeSeries.monthly(
+        within(sale.join(prop.filter(col("geographic_id") === geoId),
+          Seq("property_id")), "sale_date"), "sale_date",
+        Seq(Aggregates.exactMedianMoney(col("sale_price")).as("median_price"),
+          count(lit(1)).as("count"))))
+      Seq(Analytics.requestTrend(spark, sr, geoId, s, e) -> requests,
+        Analytics.salesTrend(spark, sale, prop, geoId, s, e) -> sales)
+        .foreach { case (got, want) =>
+          val what = s"geo $geoId, $s..$e"
+          assert(got.schema == want.schema, what)
+          assert(got.collect().toSeq == want.collect().toSeq, what)
+        }
+    }
+    // the windows reach the corners they claim
+    assert(Analytics.requestTrend(spark, sr, 101L, "2023-12-15", "2024-01-20")
+      .collect().toSeq == Seq(Row("2023-12", 1L), Row("2024-01", 4L)))
+    assert(Analytics.requestTrend(spark, sr, 101L, "2024-03-03", "2024-03-28")
+      .collect().toSeq == Seq(Row("2024-03", 0L)))
+    assert(Analytics.salesTrend(spark, sale, prop, 103L, "2024-03-03",
+      "2024-03-28").collect().toSeq == Seq(Row("2024-03", null, 0L)))
+  }
+
   test("one-call dashboard assembles every §3.1 frame; unknown BBL is None") {
     val d = Analytics.dashboard(geo, sr, ct, sale, prop, 1, 42, 7).get
     assert(d.geoId == 101L)

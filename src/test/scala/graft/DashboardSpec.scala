@@ -232,6 +232,36 @@ class DashboardSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("/trends runs only its series' query: one month aggregate, the " +
+      "spine laid out on the driver") {
+    val srv = new AnalyticsServer(spark, lake("geo"), lake("sr"), lake("ct"),
+      lake("sale"), lake("prop"))
+    val port = srv.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def trends(t: String): Int = client.send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+        s"http://localhost:$port/trends/1-42-7?type=$t")).GET().build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+    try {
+      Seq("service_requests", "sales").foreach(trends) // warm
+      def geoId() = Analytics.lookupId(lake("geo"), 1, 42, 7).get
+      val (s, e) = ("2024-01-01", "2024-12-31")
+      // collected as the serving tier collects (a bounded limit)
+      val direct = Seq(
+        "service_requests" -> jobsDuring(Analytics.requestTrend(spark,
+          lake("sr"), geoId(), s, e).limit(10001).collect(): Unit),
+        "sales" -> jobsDuring(Analytics.salesTrend(spark, lake("sale"),
+          lake("prop"), geoId(), s, e).limit(10001).collect(): Unit))
+      direct.foreach { case (t, n) =>
+        var status = 0
+        assert(jobsDuring { status = trends(t) } == n, t)
+        assert(status == 200)
+      }
+      // the lookup, then the month aggregate's stages; the spine adds none
+      assert(direct.map(_._2) == Seq(3, 4), direct)
+    } finally srv.stop()
+  }
+
   // ------------------------------------------------------------------
   // per-request values bound outside the generated code
   // ------------------------------------------------------------------
@@ -260,6 +290,29 @@ class DashboardSpec extends SparkSpec {
       val compiles = routes.map { r =>
         get(r.format("1-42-7", "start_date=2024-01-01&end_date=2024-12-31"))
         r -> compilesDuring(get(r.format(fresh._1, fresh._2)))
+      }
+      assert(compiles.forall(_._2 == 0), compiles)
+    } finally srv.stop()
+  }
+
+  test("both /trends series over a key with no facts compile no new " +
+      "classes") {
+    val srv = new AnalyticsServer(spark, lake("geo"), lake("sr"), lake("ct"),
+      lake("sale"), lake("prop"))
+    val port = srv.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def get(path: String): Unit = {
+      val r = client.send(java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://localhost:$port$path")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, s"$path: ${r.body()}")
+    }
+    try {
+      // geo 103 (4-999-1) has neither requests nor sales
+      val compiles = Seq("service_requests", "sales").map { t =>
+        get(s"/trends/1-42-7?type=$t&start_date=2024-01-01&end_date=2024-12-31")
+        t -> compilesDuring(get(s"/trends/4-999-1?type=$t&" +
+          "start_date=2023-03-01&end_date=2024-10-31"))
       }
       assert(compiles.forall(_._2 == 0), compiles)
     } finally srv.stop()

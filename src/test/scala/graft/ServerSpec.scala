@@ -240,6 +240,29 @@ class ServerSpec extends SparkSpec {
     }
   }
 
+  test("a response does not wait on the client's delayed ACK: warm " +
+      "keep-alive round trips of GET /login take under 20 ms at the median") {
+    // with Nagle's algorithm on, the body written after the headers waits
+    // for the ACK of the header segment, which Linux delays by up to 40 ms
+    val http11 = HttpClient.newBuilder()
+      .version(HttpClient.Version.HTTP_1_1).build()
+    withServer() { (port, _) =>
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://localhost:$port/login")).GET().build()
+      def roundTripMs(): Double = {
+        val t0 = System.nanoTime()
+        assert(http11.send(req, HttpResponse.BodyHandlers.ofString())
+          .statusCode() == 401)
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 5).foreach(_ => roundTripMs()) // open and warm the connection
+      val ms = Seq.fill(30)(roundTripMs()).sorted
+      val median = (ms(14) + ms(15)) / 2
+      info(f"median $median%.2f ms")
+      assert(median < 20.0, ms)
+    }
+  }
+
   test("GET / lists the routes") {
     withServer() { (port, _) =>
       val r = get(port, "/")

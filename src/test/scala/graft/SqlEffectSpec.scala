@@ -90,14 +90,14 @@ class SqlEffectSpec extends SparkSpec {
         "files_written" -> IntegerType))(
       d => s"graft_zorder_write_partitioned('fx_rows', '$d/t', 'k', " +
         "'id,v', 2)",
-      d => Seq(Row(s"$d/t", 2))),
+      d => Seq(Row(s"$d/t", 3))),
     Face("graft_append_partitioned", schema("root" -> StringType,
         "files_appended" -> IntegerType))(
       { d =>
         Layout.writeZOrderedPartitioned(table, s"$d/t", "k", Seq("id", "v"), 2)
         s"graft_append_partitioned('fx_more', '$d/t', 'k', 'id,v', 2)"
       },
-      d => Seq(Row(s"$d/t", 2))),
+      d => Seq(Row(s"$d/t", 3))),
     Face("graft_update_manifest_partitioned", schema("root" -> StringType,
         "files_statted" -> IntegerType))(
       { d =>
@@ -311,6 +311,18 @@ class SqlEffectSpec extends SparkSpec {
       assert(df.schema == face.receipt)
       assert(df.collect().toSeq == face.rows(d))
       assert(state(d) == applied, s"${face.name}: the action wrote again")
+    }
+  }
+
+  test("a layout write's receipt counts the data files it added under " +
+      "its root") {
+    Seq("graft_zorder_write", "graft_zorder_write_partitioned",
+        "graft_append_partitioned").foreach { name =>
+      val (d, q) = fresh(faces.find(_.name == name).get, "files")
+      def dataFiles: Int = state(d)._1.count(_._1.endsWith(".parquet"))
+      val before = dataFiles
+      val receipt = spark.sql(q).collect().head.getInt(1)
+      assert(receipt == dataFiles - before, name)
     }
   }
 

@@ -20,6 +20,11 @@ better by more than the parent's interquartile range: the rule a claimed
 gain has to meet. Traced runs carry no end-to-end metrics. A run
 whose result says `correct: false` is counted and named, and its metrics
 are still compared.
+
+Under each workload's table it prints the same medians, quartiles and
+seed wins for every op kind's median latency (`per_kind_p50_ms`, read
+from the facts line before each result), lower being better. These rows
+carry no gate and no claim.
 """
 import argparse
 import glob
@@ -46,11 +51,19 @@ def load(side_dir):
             print(f"skipped {path}: its last line is no result JSON",
                   file=sys.stderr)
             continue
+        try:
+            kinds = json.loads(lines[-2])["facts"]["per_kind_p50_ms"]
+        except (IndexError, KeyError, TypeError, json.JSONDecodeError):
+            kinds = {}
+        result["per_kind_p50_ms"] = kinds
         runs.setdefault(m["workload"], {})[int(m["seed"])] = result
     return runs
 
 
 def value(result, metric):
+    if metric.startswith("kind:"):
+        v = result["per_kind_p50_ms"].get(metric[5:])
+        return None if v is None else float(v)
     v = result.get("metrics", {}).get(metric)
     return None if v is None else float(v["value"])
 
@@ -129,6 +142,19 @@ def main(argv):
                   f"{fmt(r['change']):<30} {r['wins']:>3}/{r['pairs']:<2} "
                   f"{r['rel']:>+8.1%} {r['bound']:>6.2f}  "
                   f"{r['gate']:<10} {r['claim']}")
+        kinds = sorted({k for runs in (parent[name], change[name])
+                        for r in runs.values() for k in r["per_kind_p50_ms"]})
+        kind_rows = [r for r in (
+            compare(parent[name], change[name],
+                    {"name": f"kind:{k}", "better": "lower", "bound": 0.0})
+            for k in kinds) if r]
+        if kind_rows:
+            print(f"  {'op kind p50 ms':<28} {'parent median [q1, q3]':<30} "
+                  f"{'change median [q1, q3]':<30} {'won':>6} {'change':>8}")
+        for r in kind_rows:
+            print(f"  {r['metric'][5:]:<28} {fmt(r['parent']):<30} "
+                  f"{fmt(r['change']):<30} {r['wins']:>3}/{r['pairs']:<2} "
+                  f"{r['rel']:>+8.1%}")
 
 
 if __name__ == "__main__":
